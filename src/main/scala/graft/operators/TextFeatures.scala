@@ -157,9 +157,6 @@ object TextFeatures {
     * numpy.ndarray"). Emit per-doc scalar invariants instead — dimension,
     * L2 norm (≈1 after the Normalizer), nonzero count, component sum — which
     * pin the vector contents without shipping the array itself. */
-  def docEmbedStats(s: SparkSession, dir: String): DataFrame =
-    docEmbedStatsFrom(s, keptTokens(s, dir))
-
   private def docEmbedStatsFrom(s: SparkSession, kept: DataFrame): DataFrame = {
     import s.implicits._
     docEmbeddingsFrom(s, kept)
@@ -240,10 +237,6 @@ object TextFeatures {
     * by [[docKnnGate]] as the recall reference (Spark-internal: the float
     * sums are not cross-engine bit-stable, so the flag — not the scores —
     * is what the oracle hashes). */
-  private[graft] def tfidfExactKnn(s: SparkSession, dir: String, k: Int,
-      nQueries: Int): DataFrame =
-    tfidfExactKnnFrom(s, dir, keptTokens(s, dir), k, nQueries)
-
   private def tfidfExactKnnFrom(s: SparkSession, dir: String,
       kept: DataFrame, k: Int, nQueries: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window

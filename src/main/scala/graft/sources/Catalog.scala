@@ -1,18 +1,19 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Multi-table ATOMIC transactions over manifest tables — the catalog tier
   * (what Iceberg's REST-catalog transactions and a warehouse's metastore
   * commit provide): a catalog version pins EVERY table to one specific
   * snapshot version, and publishing a new catalog version is a single
-  * CREATE_NEW compare-and-swap. Readers resolve the catalog ONCE and then
-  * read each table AS OF its pinned version — so a transaction spanning
-  * tables (an order-header table and its line-items, a fact and its
-  * dimension) is visible either completely or not at all, and a cross-table
-  * join can never observe a torn state where one table moved and the other
-  * did not.
+  * compare-and-swap ([[AtomicPublish]]: written in full to a temp file,
+  * then hard-linked into place, failing if the version exists). Readers
+  * resolve the catalog ONCE and then read each table AS OF its pinned
+  * version — so a transaction spanning tables (an order-header table and
+  * its line-items, a fact and its dimension) is visible either completely
+  * or not at all, and a cross-table join can never observe a torn state
+  * where one table moved and the other did not.
   *
   * The mechanics reuse the manifest table's own guarantees: each table's
   * new snapshot is committed FIRST (table versions are cheap, immutable,
@@ -64,11 +65,7 @@ object Catalog {
       s"catalog table name may not contain '=': $n"))
     val body = tables.toSeq.sortBy(_._1)
       .map { case (n, (d, v)) => s"$n=$d:$v" }.mkString("\n")
-    try {
-      Files.write(catalogPath(root, expected + 1), body.getBytes("UTF-8"),
-        StandardOpenOption.CREATE_NEW)
-      true
-    } catch { case _: java.nio.file.FileAlreadyExistsException => false }
+    AtomicPublish.create(catalogPath(root, expected + 1), body.getBytes("UTF-8"))
   }
 
   /** Read table `name` AS OF the CURRENT catalog snapshot — the one

@@ -788,13 +788,12 @@ private[sources] object GraftDeltaCommitter {
     // positions parquets; each publishes as a `#dv … _pos …` marker and
     // every data-file line carries VERBATIM — arbitrary-predicate DML
     // with zero rewrites
-    val posDvLines: Seq[String] = staged.flatMap(_.posDvs)
-      .map { case (f, ts) =>
-        ManifestTable.encodeDv(ManifestTable.DvEntry(f, "_pos", ts)) }
-    if (inserted.isEmpty && replacedByName.isEmpty && posDvLines.isEmpty)
+    val posDvs = staged.flatMap(_.posDvs)
+      .map { case (f, ts) => ManifestTable.DvEntry(f, "_pos", ts) }
+    if (inserted.isEmpty && replacedByName.isEmpty && posDvs.isEmpty)
       return // no-op statement
-    val baseNames = ManifestTable.listLines(dir, baseVersion)
-      .map(ManifestTable.parseEntry(_).name).toSet
+    val base = Snapshot.read(dir, baseVersion)
+    val baseNames = base.names.toSet
     // exact sums the tasks accumulated (insert files + rewrite survivors),
     // attached as `c=Z:` legs so declared-sum tables keep their
     // metadata-served SUM through the statement
@@ -819,15 +818,62 @@ private[sources] object GraftDeltaCommitter {
       }.getOrElse("")
       line + zLeg + hLeg
     }
-    var attempt = 0
-    var onto = baseVersion
-    while (true) {
-      val prev = ManifestTable.listLines(dir, onto)
-      val prevEntries = prev.map(ManifestTable.parseEntry)
+    def refuse(why: String): Nothing = throw new IllegalStateException(
+      s"concurrent commit in $dir since v$baseVersion: $why — staged " +
+        "files remain orphans; re-run the statement against the new " +
+        "snapshot")
+    // concurrent commits past the pinned version: rebase onto the head
+    // when provably disjoint, refuse otherwise
+    def requireRebaseSafe(head: Snapshot): Unit = {
+      val removedSinceBase = baseNames -- head.names
+      // conservative default when the scan never recorded its pruning:
+      // the whole pinned snapshot counts as read
+      val touched = replacedByName.keySet ++ readSet().getOrElse(baseNames)
+      val overlap = removedSinceBase & touched
+      if (overlap.nonEmpty) refuse(
+        s"the winning commit removed file(s) this statement read or " +
+          s"rewrote (${overlap.take(3).mkString(", ")})")
+      // marker/governance state CHANGING mid-flight invalidates the
+      // rebase's carry-verbatim reasoning — refuse rather than guess.
+      // A stable dv-marker set is fine (the statement's rewrites
+      // materialized exactly those markers' keys); a NEW or retired
+      // marker means a concurrent MOR delete or compaction this
+      // statement's rewrites never saw.
+      if (head.dvs.map(ManifestTable.encodeDv).sorted !=
+          base.dvs.map(ManifestTable.encodeDv).sorted)
+        refuse("deletion-vector markers changed concurrently")
+      // a STABLE rename set is fine (the statement's scan reconciled
+      // exactly those generations); a new rename mid-flight is not
+      if (head.renames != base.renames)
+        refuse("rename markers changed concurrently")
+      if (head.policies.nonEmpty)
+        refuse("a governance policy landed concurrently")
+      // a concurrent SCHEMA or CONSTRAINT change invalidates the
+      // statement's validation context: its rows were analyzed and (for
+      // constraints) checked against the PINNED declarations, so a rebase
+      // would publish rows the new DDL never saw — refuse, never absorb
+      if (base.schema != head.schema)
+        refuse("a schema change landed concurrently")
+      def constraints(s: Snapshot): Map[String, String] =
+        s.properties.filter(_._1.startsWith(GraftCatalog.ConstraintProp))
+      if (constraints(base) != constraints(head))
+        refuse("a constraint change landed concurrently")
+      // a concurrent PARTITION-SPEC change (round 15) invalidates the
+      // statement's write shape: its insert files were bucket-stamped
+      // under the PINNED spec, so replaying them onto the evolved
+      // snapshot would publish stale ids the new transform mis-groups —
+      // refuse, never absorb
+      if (base.properties.get("graft.partitioning") !=
+          head.properties.get("graft.partitioning"))
+        refuse("the partition spec changed concurrently")
+    }
+    ManifestTable.commit(dir, Snapshot.Mutate) { head =>
+      if (head.version != baseVersion) requireRebaseSafe(head)
+      val prevEntries = head.entries
       val statsCols = prevEntries
         .flatMap(e => e.ranges.keys ++ e.strRanges.keys).distinct
       val bucketByName = prevEntries.flatMap(e => e.bucket.map(e.name -> _)).toMap
-      val lines = prev.flatMap { line =>
+      val lines = head.files.flatMap { line =>
         val nm = line.split('\t').head
         replacedByName.get(nm) match {
           case None => Some(line) // untouched: VERBATIM
@@ -849,73 +895,12 @@ private[sources] object GraftDeltaCommitter {
       // deletion-vector markers carry with REWRITTEN files struck from
       // their target sets (the rewrite materialized the DV into the
       // replacement file); a marker left targeting nothing drops — the
-      // delete→merge→select lifecycle never demands a compaction
-      val surviving = lines.map(_.split('\t').head).toSet
-      val dvCarried = ManifestTable.carriedDvLines(dir, onto, surviving)
-      // rename markers carry VERBATIM: they are table-wide name
-      // mappings, and both rewritten files (old physical names inside)
-      // and insert files (evolved names) keep reconciling through them
-      if (ManifestTable.commitMutate(dir,
-          lines ++ dvCarried ++ posDvLines ++
-            ManifestTable.renameLines(dir, onto) ++
-            ManifestTable.carriedMeta(dir, onto), onto))
-        return
-      // CAS lost — decide rebase vs refuse against the NEW head
-      val cur = ManifestTable.currentVersion(dir)
-      val curNames = ManifestTable.listLines(dir, cur)
-        .map(ManifestTable.parseEntry(_).name).toSet
-      val removedSinceBase = baseNames -- curNames
-      // conservative default when the scan never recorded its pruning:
-      // the whole pinned snapshot counts as read
-      val touched = replacedByName.keySet ++ readSet().getOrElse(baseNames)
-      val overlap = removedSinceBase & touched
-      def refuse(why: String): Nothing = throw new IllegalStateException(
-        s"concurrent commit in $dir since v$baseVersion: $why — staged " +
-          "files remain orphans; re-run the statement against the new " +
-          "snapshot")
-      if (overlap.nonEmpty) refuse(
-        s"the winning commit removed file(s) this statement read or " +
-          s"rewrote (${overlap.take(3).mkString(", ")})")
-      // marker/governance state CHANGING mid-flight invalidates the
-      // rebase's carry-verbatim reasoning — refuse rather than guess.
-      // A stable dv-marker set is fine (the statement's rewrites
-      // materialized exactly those markers' keys); a NEW or retired
-      // marker means a concurrent MOR delete or compaction this
-      // statement's rewrites never saw.
-      if (ManifestTable.dvLines(dir, cur).sorted !=
-          ManifestTable.dvLines(dir, baseVersion).sorted)
-        refuse("deletion-vector markers changed concurrently")
-      // a STABLE rename set is fine (the statement's scan reconciled
-      // exactly those generations); a new rename mid-flight is not
-      if (ManifestTable.renameLines(dir, cur) !=
-          ManifestTable.renameLines(dir, baseVersion))
-        refuse("rename markers changed concurrently")
-      if (ManifestTable.policyLines(dir, cur).nonEmpty)
-        refuse("a governance policy landed concurrently")
-      // a concurrent SCHEMA or CONSTRAINT change invalidates the
-      // statement's validation context: its rows were analyzed and (for
-      // constraints) checked against the PINNED declarations, so a rebase
-      // would publish rows the new DDL never saw — refuse, never absorb
-      if (ManifestTable.declaredSchema(dir, baseVersion) !=
-          ManifestTable.declaredSchema(dir, cur))
-        refuse("a schema change landed concurrently")
-      def constraints(v: Int): Map[String, String] =
-        ManifestTable.tableProperties(dir, v)
-          .filter(_._1.startsWith(GraftCatalog.ConstraintProp))
-      if (constraints(baseVersion) != constraints(cur))
-        refuse("a constraint change landed concurrently")
-      // a concurrent PARTITION-SPEC change (round 15) invalidates the
-      // statement's write shape: its insert files were bucket-stamped
-      // under the PINNED spec, so replaying them onto the evolved
-      // snapshot would publish stale ids the new transform mis-groups —
-      // refuse, never absorb
-      def partSpec(v: Int): Option[String] =
-        ManifestTable.tableProperties(dir, v).get("graft.partitioning")
-      if (partSpec(baseVersion) != partSpec(cur))
-        refuse("the partition spec changed concurrently")
-      attempt += 1
-      if (attempt >= 10) refuse(s"lost $attempt commit races")
-      onto = cur // rebase: replay the delta onto the winner's snapshot
+      // delete→merge→select lifecycle never demands a compaction. Rename
+      // markers carry VERBATIM: they are table-wide name mappings, and
+      // both rewritten files (old physical names inside) and insert files
+      // (evolved names) keep reconciling through them
+      val next = head.copy(files = lines).strikeDvTargets
+      Some(next.copy(dvs = next.dvs ++ posDvs))
     }
   }
 

@@ -442,7 +442,7 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog
     val v = (0 to cur).reverse.find { i =>
       val p = Paths.get(dir, f"manifest-v$i%08d.json")
       Files.exists(p) && {
-        val millis = ManifestTable.commitInstantMillis(dir, i)
+        val millis = Snapshot.read(dir, i).ts
           .getOrElse(Files.getLastModifiedTime(p).toInstant.toEpochMilli)
         millis * 1000L <= timestampMicros
       }
@@ -463,8 +463,8 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog
     val props = properties.asScala.toSeq.sortBy(_._1)
       .filterNot { case (k, _) => reserved(k) || k.startsWith("option.") }
       .map { case (k, v) => s"#prop\t$k\t$v" }
-    // PARTITIONED BY persists as an ordinary table property (it rides
-    // carriedMeta through every commit for free). This format has no
+    // PARTITIONED BY persists as an ordinary table property (it carries
+    // forward with every commit's snapshot for free). This format has no
     // directory layout to maintain — partitioning is a WRITE-CLUSTERING
     // declaration: inserts shape data so each partition value lands in
     // value-pure (identity) or key-owned (bucket) files, and the recorded
@@ -1356,15 +1356,14 @@ private[sources] class GraftStagedTable(ident: String, tmpDir: String,
       Files.move(Paths.get(tmpDir), Paths.get(finalDir),
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     case Some(v) =>
-      val tv = ManifestTable.currentVersion(tmpDir)
-      val body = ManifestTable.listLines(tmpDir, tv) ++
-        ManifestTable.carriedMeta(tmpDir, tv)
+      val staged = Snapshot.current(tmpDir)
       Files.createDirectories(Paths.get(finalDir, "data"))
       ManifestTable.listDir(Paths.get(tmpDir, "data")).foreach { p =>
         Files.move(p, Paths.get(finalDir, "data", p.getFileName.toString),
           java.nio.file.StandardCopyOption.ATOMIC_MOVE)
       }
-      require(ManifestTable.commitMutate(finalDir, body, v),
+      require(ManifestTable.publish(finalDir, staged.copy(
+          kind = Snapshot.Mutate, dvs = Nil, renames = Nil, segments = Nil), v),
         s"REPLACE TABLE $ident lost the publish race: the table was " +
           s"committed past version $v while the replacement staged")
       abortStagedChanges() // staging dir is husk now (manifests only)
@@ -1713,10 +1712,7 @@ private[sources] class ManifestSqlTable(ident: String, dir: String,
     * consistent instead of letting the key-membership fast path through.
     * Governed maintenance goes through the ManifestTable API, which is
     * raw by design (engine maintenance must see true rows). */
-  private def governed: Boolean = {
-    val v = ManifestTable.currentVersion(dir)
-    v >= 0 && ManifestTable.policyLines(dir, v).nonEmpty
-  }
+  private def governed: Boolean = Snapshot.current(dir).policies.nonEmpty
 
   override def canDeleteWhere(filters: Array[Filter]): Boolean = {
     // the COPY-ON-WRITE keyed fast path declines under renames (its
@@ -1725,8 +1721,7 @@ private[sources] class ManifestSqlTable(ident: String, dir: String,
     // generations. The MOR paths COMPOSE with renames (round 14): the
     // stats prune walks the key column's alias family and the marker
     // stages under the evolved name.
-    def renamed: Boolean = ManifestTable.renameLines(dir,
-      ManifestTable.currentVersion(dir)).nonEmpty
+    def renamed: Boolean = Snapshot.current(dir).renames.nonEmpty
     pinned.isEmpty && !governed &&
       (isTruncate(filters) ||
         (parseDelete(filters).isDefined &&
@@ -1740,15 +1735,10 @@ private[sources] class ManifestSqlTable(ident: String, dir: String,
     if (isTruncate(filters)) {
       // unconditional DELETE: one mutate commit listing no data files
       // (policies/properties survive — they are the table, not its rows)
-      var attempt = 0
-      while (attempt < 10) {
-        val cur = ManifestTable.currentVersion(dir)
-        require(cur >= 0, s"no committed snapshot to delete from in $dir")
-        if (ManifestTable.commitMutate(dir,
-            ManifestTable.carriedMeta(dir, cur), cur)) return
-        attempt += 1
+      ManifestTable.commit(dir, Snapshot.Mutate) { base =>
+        require(base.version >= 0, s"no committed snapshot to delete from in $dir")
+        Some(base.copy(files = Nil, dvs = Nil, renames = Nil))
       }
-      throw new IllegalStateException(s"DELETE lost 10 commit races in $dir")
     } else parseDelete(filters) match {
       case Some((col, keys)) =>
         if (morMode) ManifestTable.deleteKeysMOR(s, dir, col, keys)
@@ -1766,8 +1756,9 @@ private[sources] class ManifestSqlTable(ident: String, dir: String,
 
   override def schema(): StructType = {
     val v = pinned.getOrElse(ManifestTable.currentVersion(dir))
-    val files = ManifestTable.listFiles(dir, v)
-    val declared = ManifestTable.declaredSchema(dir, v)
+    val snap = Snapshot.read(dir, v)
+    val files = snap.names
+    val declared = snap.schema
       .map(org.apache.spark.sql.types.DataType.fromJson(_)
         .asInstanceOf[StructType])
     if (files.isEmpty) // fresh CREATE TABLE / fully-deleted: the declared
@@ -1960,13 +1951,12 @@ private[sources] class ManifestSqlScanBuilder(dir: String, full: StructType,
     // WHERE part = v` stays metadata-served. Anything not provable stays
     // residual — stats admission is a SUPERSET there and the
     // re-evaluation keeps answers exact.
-    val entries = ManifestTable.listLines(dir, snapV)
-      .map(ManifestTable.parseEntry).map(evolve)
+    val snap = Snapshot.read(dir, snapV)
+    val entries = snap.entries.map(evolve)
     // renames do NOT make exactness unprovable (round 14): normalized
     // stats describe the same values under the evolved names
-    val unprovable = entries.isEmpty ||
-      ManifestTable.policyLines(dir, snapV).nonEmpty ||
-      ManifestTable.dvLines(dir, snapV).nonEmpty
+    val unprovable = entries.isEmpty || snap.policies.nonEmpty ||
+      snap.dvs.nonEmpty
     val survivors = entries.filter(e => pushed.forall(admits(_, e)))
     def whollySatisfied(f: Filter): Boolean = f match {
       case _ if unprovable => false
@@ -2012,8 +2002,9 @@ private[sources] class ManifestSqlScanBuilder(dir: String, full: StructType,
     import org.apache.spark.sql.types._
     val v = snapV
     if (!statsUsable) return false // re-added freed name: build() refuses
-    if (ManifestTable.policyLines(dir, v).nonEmpty) return false // filtered answers differ
-    val dvsAtV = ManifestTable.dvEntries(dir, v)
+    val snap = Snapshot.read(dir, v)
+    if (snap.policies.nonEmpty) return false // filtered answers differ
+    val dvsAtV = snap.dvs
     if (dvsAtV.nonEmpty) {
       // POSITIONAL markers keep COUNT(*) metadata-served (round 14):
       // a `_pos` marker records EXACT doomed ordinals. KEYED markers
@@ -2030,8 +2021,7 @@ private[sources] class ManifestSqlScanBuilder(dir: String, full: StructType,
           _.isInstanceOf[CountStar])) return false
       val countsOpt = ManifestTable.doomedCountsByTarget(dir, dvsAtV)
       if (countsOpt.isEmpty) return false
-      val pentries = ManifestTable.listLines(dir, v)
-        .map(ManifestTable.parseEntry)
+      val pentries = snap.entries
       if (pentries.isEmpty || pentries.exists(_.rows.isEmpty)) return false
       val names = pentries.map(_.name).toSet
       val live = pentries.flatMap(_.rows).sum -
@@ -2047,7 +2037,7 @@ private[sources] class ManifestSqlScanBuilder(dir: String, full: StructType,
     // residual filter remains, and exactness means every admitted file's
     // rows ALL match); any partially-applied filter declines
     if (pushed.nonEmpty && !allPushedExact) return false
-    val entries = ManifestTable.listLines(dir, v).map(ManifestTable.parseEntry)
+    val entries = snap.entries
       .map(evolve).filter(e => pushed.forall(admits(_, e)))
     if (entries.isEmpty) return false
     def colOf(e: org.apache.spark.sql.connector.expressions.Expression)
@@ -2212,6 +2202,7 @@ private[sources] class ManifestSqlScanBuilder(dir: String, full: StructType,
     // version): the whole query — pruning, exactness proofs, the scan —
     // reads one version, whatever commits land while it runs
     val v = snapV
+    val snap = Snapshot.read(dir, v)
     // RENAME COLUMN reconciliation (round 13): evolved name → prior
     // names (most recent first, chains collapsed); executor readers
     // decode whichever generation each file carries. Requires a declared
@@ -2222,8 +2213,8 @@ private[sources] class ManifestSqlScanBuilder(dir: String, full: StructType,
     // evolved name for typing/ordinals and decode each data file's own
     // generation through the alias chain.
     val aliases: Map[String, Seq[String]] = {
-      if (ManifestTable.renames(dir, v).nonEmpty)
-        require(ManifestTable.declaredSchema(dir, v).isDefined,
+      if (snap.renames.nonEmpty)
+        require(snap.schema.isDefined,
           s"catalog scan of $dir refused: rename markers on a table with " +
             "no declared schema — compact first, or read via " +
             "ManifestTable.read")
@@ -2234,7 +2225,7 @@ private[sources] class ManifestSqlScanBuilder(dir: String, full: StructType,
     // so a MOR-deleted table answers exact SQL without compaction. File
     // pruning stays sound (stats are supersets of live rows); aggregate/
     // exact-filter/limit pushdowns already decline under DVs.
-    val dvs = ManifestTable.dvEntries(dir, v)
+    val dvs = snap.dvs
     // the in-flight filter reconstructs keys as sorted longs or raw
     // UTF-8 byte arrays, so every DV key column must be integral or
     // string in the declared schema — anything else keeps the old
@@ -2255,7 +2246,7 @@ private[sources] class ManifestSqlScanBuilder(dir: String, full: StructType,
     }
     val dvByName: Map[String, Seq[(String, String)]] =
       if (dvs.isEmpty) Map.empty
-      else ManifestTable.listLines(dir, v).map(ManifestTable.parseEntry)
+      else snap.entries
         .flatMap { e =>
           val app = dvs.filter(_.targets.contains(e.name))
             .map(d => (ManifestTable.dataPath(dir, d.file), d.col))
@@ -2265,7 +2256,7 @@ private[sources] class ManifestSqlScanBuilder(dir: String, full: StructType,
       dvs.map(_.col).distinct
         .map(RenameAliases.evolvedOf(aliases, _)).distinct
         .flatMap(c => full.fields.find(_.name == c))
-    val pols = ManifestTable.policyLines(dir, v).map(_.split('\t'))
+    val pols = snap.policies
     if (pols.nonEmpty)
       // governed table: serve a policy-ENFORCING scan (filter-then-mask,
       // the readGoverned semantics) instead of refusing — SQL consumers
@@ -2278,8 +2269,7 @@ private[sources] class ManifestSqlScanBuilder(dir: String, full: StructType,
       // REFERENCE a renamed column, so every bound policy expression
       // names stable columns; the governed reader's alias-aware decode
       // serves renamed ones the query selected
-      return governedScan(
-        ManifestTable.listLines(dir, v).map(ManifestTable.parseEntry), pols,
+      return governedScan(snap.entries, pols,
         dvByName, dvFields, aliases)
     // SEGMENTED snapshots resolve through the manifest list: pushed
     // predicates admit segments by their summary stats first (sound —
@@ -2336,8 +2326,7 @@ private[sources] class ManifestSqlScanBuilder(dir: String, full: StructType,
           rowCap = limit, dvByName = dvByName, dvFields = dvFields,
           aliases = aliases, streamStart = streamStart)
       case None =>
-        val entries = ManifestTable.listLines(dir, v)
-          .map(ManifestTable.parseEntry).map(evolve) // once, not per check
+        val entries = snap.entries.map(evolve) // once, not per check
         val admitted =
           if (pushed.isEmpty) entries
           else entries.filter(e => pushed.forall(admits(_, e)))
@@ -2359,12 +2348,12 @@ private[sources] class ManifestSqlScanBuilder(dir: String, full: StructType,
     * the query did not select are decoded for evaluation but never
     * surfaced. */
   private def governedScan(entries: Seq[ManifestTable.FileEntry],
-      pols: Seq[Array[String]],
+      pols: Seq[Seq[String]],
       dvByName: Map[String, Seq[(String, String)]] = Map.empty,
       dvFields: Seq[StructField] = Nil,
       aliases: Map[String, Seq[String]] = Map.empty): Scan = {
-    val filterStrs = pols.collect { case Array(_, "filter", e) => e }.toSeq
-    val maskPairs = pols.collect { case Array(_, "mask", c, e) => (c, e) }
+    val filterStrs = pols.collect { case Seq("filter", e) => e }.toSeq
+    val maskPairs = pols.collect { case Seq("mask", c, e) => (c, e) }
       .toSeq.filter(p => required.fieldNames.toSet(p._1))
     val (decodeSchema, boundFilter, outProjs) =
       GovernedExprs.bind(full, required, pols)
@@ -2445,15 +2434,15 @@ private[sources] object RenameAliases {
 private[sources] object GovernedExprs {
   import org.apache.spark.sql.catalyst.expressions.Expression
 
-  def bind(full: StructType, required: StructType, pols: Seq[Array[String]])
+  def bind(full: StructType, required: StructType, pols: Seq[Seq[String]])
       : (StructType, Option[Expression], Seq[Expression]) = {
     import org.apache.spark.sql.catalyst.expressions.{Alias, And,
       AttributeSeq, BindReferences, BoundReference, Cast}
     import org.apache.spark.sql.catalyst.plans.logical.Project
     val s = org.apache.spark.sql.SparkSession.active
-    val filterStrs = pols.collect { case Array(_, "filter", e) => e }.toSeq
+    val filterStrs = pols.collect { case Seq("filter", e) => e }.toSeq
     val selected = required.fieldNames.toSet
-    val maskPairs = pols.collect { case Array(_, "mask", c, e) => (c, e) }
+    val maskPairs = pols.collect { case Seq("mask", c, e) => (c, e) }
       .toSeq.filter(p => selected(p._1))
     // one dummy plan resolves every policy expression against the raw
     // schema with one consistent set of attribute ids
@@ -3619,23 +3608,14 @@ private[sources] class ManifestSqlWriteBuilder(dir: String,
           val staged = messages.collect { case GraftFileCommit(n, r) =>
             s"$n\t__rows=$r;__bytes=${java.nio.file.Files.size(
               java.nio.file.Paths.get(dir, "data", n))}" }
-          var attempt = 0
-          while (attempt < 10) {
-            val v = ManifestTable.currentVersion(dir)
-            require(v >= 0, s"streaming write target $dir has no snapshot")
-            if (ManifestTable.committedEpoch(dir, v, queryId).exists(_ >= epochId))
-              return // replayed epoch: already committed — exactly-once no-op
-            val markers = ManifestTable.carriedMeta(dir, v)
-              .filterNot(_.startsWith(s"#epoch\t$queryId\t")) :+
-              s"#epoch\t$queryId\t$epochId"
-            val body = ManifestTable.listLines(dir, v) ++ staged ++
-              ManifestTable.dvLines(dir, v) ++
-              ManifestTable.renameLines(dir, v) ++ markers
-            if (ManifestTable.commit(dir, body, v)) return
-            attempt += 1 // lost a race with a batch writer: re-read, retry
+          ManifestTable.commit(dir, Snapshot.Append) { base =>
+            require(base.version >= 0,
+              s"streaming write target $dir has no snapshot")
+            // a replayed epoch is already committed: exactly-once no-op
+            if (base.epoch(queryId).exists(_ >= epochId)) None
+            else Some(base.copy(files = base.files ++ staged)
+              .withEpoch(queryId, epochId))
           }
-          throw new IllegalStateException(
-            s"streaming epoch $epochId lost 10 commit races in $dir")
         }
         override def abort(epochId: Long,
             messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit =
@@ -3692,10 +3672,8 @@ private[sources] class ManifestSqlWriteBuilder(dir: String,
 
         private def doInsert(s: org.apache.spark.sql.SparkSession,
             data0: DataFrame): Unit = {
-          var attempt = 0
-          var done = false
-          while (!done && attempt < 10) {
-            val v = ManifestTable.currentVersion(dir)
+          ManifestTable.commit(dir, Snapshot.Append) { base =>
+            val v = base.version
             // GENERATED ALWAYS AS — computed HERE, at write (Spark's
             // analyzer validates the expression at CREATE but leaves the
             // computation to the connector): the declared expression
@@ -3704,7 +3682,7 @@ private[sources] class ManifestSqlWriteBuilder(dir: String,
             // partitioning on a generated column then clusters by it —
             // the hidden-partitioning ergonomic: users insert `ts`,
             // pruning works on `yr`.
-            val declaredF = ManifestTable.declaredSchema(dir, v)
+            val declaredF = base.schema
               .map(org.apache.spark.sql.types.DataType.fromJson(_)
                 .asInstanceOf[org.apache.spark.sql.types.StructType])
             val dataG = declaredF
@@ -3726,7 +3704,7 @@ private[sources] class ManifestSqlWriteBuilder(dir: String,
               .flatMap(_.fields.filter(_.metadata.contains("identity.start")))
               .headOption.map { f =>
                 val step = f.metadata.getLong("identity.step")
-                val hw0 = ManifestTable.tableProperties(dir, v)
+                val hw0 = base.properties
                   .get(GraftCatalog.IdentityProp + f.name).map(_.toLong)
                   .getOrElse(f.metadata.getLong("identity.start") - step)
                 (f, step, hw0)
@@ -3802,8 +3780,7 @@ private[sources] class ManifestSqlWriteBuilder(dir: String,
             // cluster with per-file blooms (point lookups prune). The
             // read path needs nothing new — partition pruning IS the
             // existing stats pruning over better-shaped files.
-            val partSpec = ManifestTable.tableProperties(dir, v)
-              .get("graft.partitioning")
+            val partSpec = base.properties.get("graft.partitioning")
             // every insert harvests footer stats for EVERY column (the
             // Iceberg write-time default): SQL-created tables prune,
             // serve metadata aggregates, and report planning statistics
@@ -3813,14 +3790,14 @@ private[sources] class ManifestSqlWriteBuilder(dir: String,
             // per-file HLL register blob at insert time — the mergeable
             // sketch the scan's CBO column statistics union with zero
             // data I/O
-            val ndvCols = ManifestTable.tableProperties(dir, v)
+            val ndvCols = base.properties
               .get("graft.write.ndv").toSeq
               .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
               .filter(allCols.contains)
             // declared SUM columns (`graft.write.sum` property) get a
             // per-file exact decimal sum in the same pass — the stat leg
             // that serves SUM/AVG aggregates from metadata
-            val sumCols = ManifestTable.tableProperties(dir, v)
+            val sumCols = base.properties
               .get("graft.write.sum").toSeq
               .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
               .filter(allCols.contains)
@@ -3865,7 +3842,7 @@ private[sources] class ManifestSqlWriteBuilder(dir: String,
                   // sorts each bucket file at insert time: the scan then
                   // reports the ordering and a co-bucketed sort-merge
                   // join runs with zero shuffles AND zero sorts
-                  val sortCols = ManifestTable.tableProperties(dir, v)
+                  val sortCols = base.properties
                     .get("graft.write.sort").toSeq
                     .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
                   val shaped =
@@ -3915,26 +3892,23 @@ private[sources] class ManifestSqlWriteBuilder(dir: String,
             // identity frontier published in the SAME commit: the new
             // high-water is read from the staged files' own stats (covers
             // BY DEFAULT explicit values beyond the generated range)
-            val meta: Seq[String] = {
-              val base = ManifestTable.carriedMeta(dir, v)
-              idInfo match {
-                case Some((f, step, hw0)) =>
-                  val fronts = staged.map(ManifestTable.parseEntry)
-                    .flatMap(_.ranges.get(f.name))
-                    .map(r => if (step > 0) r.max else r.min)
-                  val frontier =
-                    if (fronts.isEmpty) hw0
-                    else {
-                      val b = (if (step > 0) fronts.max else fronts.min)
-                        .toLongExact
-                      if (step > 0) math.max(hw0, b) else math.min(hw0, b)
-                    }
-                  val key = s"#prop\t${GraftCatalog.IdentityProp}${f.name}\t"
-                  base.filterNot(_.startsWith(key)) :+ s"$key$frontier"
-                case None => base
-              }
+            val next = idInfo match {
+              case Some((f, step, hw0)) =>
+                val fronts = staged.map(ManifestTable.parseEntry)
+                  .flatMap(_.ranges.get(f.name))
+                  .map(r => if (step > 0) r.max else r.min)
+                val frontier =
+                  if (fronts.isEmpty) hw0
+                  else {
+                    val b = (if (step > 0) fronts.max else fronts.min)
+                      .toLongExact
+                    if (step > 0) math.max(hw0, b) else math.min(hw0, b)
+                  }
+                base.withProp(GraftCatalog.IdentityProp + f.name,
+                  frontier.toString)
+              case None => base
             }
-            done = (dnf, overwrite) match {
+            Some((dnf, overwrite) match {
               case (Some(conjs), _) =>
                 // FILTERED overwrite: delete exactly the matching rows.
                 // Files the stats REFUTE keep their manifest line
@@ -3952,12 +3926,11 @@ private[sources] class ManifestSqlWriteBuilder(dir: String,
                 // files keep reconciling through the carried markers,
                 // and a condition on an evolved name conservatively hits
                 // files with no stat under it — sound, never wrong.
-                require(ManifestTable.policyLines(dir, v).isEmpty,
+                require(base.policies.isEmpty,
                   s"filtered INSERT OVERWRITE on governed $dir refused: " +
                     "row deletion under a row-filter policy — use the " +
                     "ManifestTable API for governed maintenance")
-                val lines = ManifestTable.listLines(dir, v)
-                val (hit, untouched) = lines.partition { l =>
+                val (hit, untouched) = base.files.partition { l =>
                   val e = ManifestTable.parseEntry(l)
                   conjs.exists(_.forall(StatsFilters.admits(_, e)))
                 }
@@ -3978,24 +3951,14 @@ private[sources] class ManifestSqlWriteBuilder(dir: String,
                       .filter(not(coalesce(cond, lit(false))))
                     ManifestTable.stageWithStats(s, dir, sv, statsCols)
                   }
-                val survivingNames =
-                  (untouched ++ survivors ++ staged).map(_.split('\t').head)
-                ManifestTable.commitMutate(dir,
-                  untouched ++ survivors ++ staged ++
-                    ManifestTable.carriedDvLines(dir, v,
-                      survivingNames.toSet) ++
-                    ManifestTable.renameLines(dir, v) ++ meta, v)
+                next.copy(kind = Snapshot.Mutate,
+                  files = untouched ++ survivors ++ staged).strikeDvTargets
               case (None, true) => // whole-table overwrite (TRUNCATE shape)
-                ManifestTable.commitMutate(dir, staged ++ meta, v)
-              case (None, false) => ManifestTable.commit(dir,
-                ManifestTable.listLines(dir, v) ++ staged ++
-                  ManifestTable.dvLines(dir, v) ++
-                  ManifestTable.renameLines(dir, v) ++ meta, v)
-            }
-            attempt += 1 // lost the race: re-read, re-append (orphans stay)
+                next.copy(kind = Snapshot.Mutate, files = staged, dvs = Nil,
+                  renames = Nil)
+              case (None, false) => next.copy(files = base.files ++ staged)
+            })
           }
-          if (!done) throw new IllegalStateException(
-            s"INSERT lost 10 commit races in $dir")
         }
   }
 }
@@ -4078,7 +4041,7 @@ private[sources] class GraftDeltaOperation(dir: String,
     // legs skip old-generation rewrites (extractors find no column
     // under the evolved name), so metadata-served SUM/NDV honestly
     // declines on mixed tables until optimize re-harvests.
-    require(ManifestTable.policyLines(dir, v).isEmpty,
+    require(Snapshot.read(dir, v).policies.isEmpty,
       s"row-level SQL DML on governed $dir refused: the rewrite must see " +
         "raw rows (a masked rewrite would PERSIST masked values); use the " +
         "ManifestTable API for governed maintenance")
@@ -4111,7 +4074,7 @@ private[sources] class GraftDeltaOperation(dir: String,
       import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation,
         Project}
       val v = ManifestTable.currentVersion(dir)
-      val genFields = ManifestTable.declaredSchema(dir, v)
+      val genFields = Snapshot.read(dir, v).schema
         .map(org.apache.spark.sql.types.DataType.fromJson(_)
           .asInstanceOf[StructType])
         .toSeq.flatMap(_.fields)
@@ -4381,18 +4344,14 @@ private[sources] class ManifestMetaTable(ident: String, dir: String,
         case "history" => (0 to cur)
           .filter(v => Files.exists(Paths.get(dir, f"manifest-v$v%08d.json")))
           .map { v =>
-            val entries = ManifestTable.listLines(dir, v)
-              .map(ManifestTable.parseEntry)
-            val k =
-              if (ManifestTable.isRewrite(dir, v)) "rewrite"
-              else if (ManifestTable.isMutate(dir, v)) "mutate"
-              else "data"
+            val snap = Snapshot.read(dir, v)
+            val entries = snap.entries
             val nRows =
               if (entries.nonEmpty && entries.forall(_.rows.isDefined) &&
-                  ManifestTable.dvLines(dir, v).isEmpty)
+                  snap.dvs.isEmpty)
                 entries.flatMap(_.rows).sum
               else null
-            Seq(v, k, entries.size.toLong, nRows)
+            Seq(v, snap.kind.label, entries.size.toLong, nRows)
           }
         case "files" => ManifestTable.listLines(dir, cur)
           .map(ManifestTable.parseEntry).map { e =>
@@ -4597,10 +4556,11 @@ private[sources] case class ChangesFilePartition(file: String,
   * files + targeted files, never table size. */
 private[sources] object ChangesDiff {
   def forVersion(dir: String, v: Int): Seq[ChangesFilePartition] = {
-    if (v > 0 && ManifestTable.isRewrite(dir, v)) return Seq.empty
-    val prevDvs =
-      if (v == 0) Seq.empty else ManifestTable.dvEntries(dir, v - 1)
-    val nowDvs = ManifestTable.dvEntries(dir, v)
+    val snap = Snapshot.read(dir, v)
+    if (v > 0 && snap.kind == Snapshot.Rewrite) return Seq.empty
+    val before = Snapshot.read(dir, v - 1)
+    val prevDvs = if (v == 0) Seq.empty else before.dvs
+    val nowDvs = snap.dvs
     def key(d: ManifestTable.DvEntry): (String, String) = (d.file, d.col)
     val newAt = nowDvs.filterNot(d => prevDvs.exists(p => key(p) == key(d)))
     val goneAt = prevDvs.filterNot(d => nowDvs.exists(p => key(p) == key(d)))
@@ -4608,12 +4568,8 @@ private[sources] object ChangesDiff {
         : Seq[(String, String)] =
       dvs.filter(_.targets.contains(n))
         .map(d => (ManifestTable.dataPath(dir, d.file), d.col))
-    val prev: Set[String] =
-      if (v == 0) Set.empty
-      else ManifestTable.listLines(dir, v - 1)
-        .map(ManifestTable.parseEntry(_).name).toSet
-    val now = ManifestTable.listLines(dir, v)
-      .map(ManifestTable.parseEntry(_).name)
+    val prev: Set[String] = if (v == 0) Set.empty else before.names.toSet
+    val now = snap.names
     val nowSet = now.toSet
     val inserts = now.filterNot(prev)
       .map(n => ChangesFilePartition(
@@ -4659,7 +4615,7 @@ private[sources] object ChangesReaderFactory {
       required: StructType): Option[(StructType,
         Option[org.apache.spark.sql.catalyst.expressions.Expression],
         Seq[org.apache.spark.sql.catalyst.expressions.Expression])] = {
-    val pols = ManifestTable.policyLines(dir, v).map(_.split('\t'))
+    val pols = Snapshot.read(dir, v).policies
     if (pols.isEmpty) None
     else {
       def isChangeCol(n: String): Boolean =

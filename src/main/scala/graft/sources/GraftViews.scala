@@ -1,7 +1,7 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption,
-  StandardOpenOption}
+import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths,
+  StandardCopyOption}
 import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
@@ -12,11 +12,11 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * `ViewCatalog` surface. A view is one JSON document under the
   * namespace's `.views/` directory — `{sql, schema, currentCatalog,
   * currentNamespace, queryColumnNames, properties}` — written atomically
-  * (CREATE_NEW for create, temp + ATOMIC_MOVE for replace), so creation
-  * races resolve to exactly one winner and readers never observe a torn
-  * document. The `.views` directory name cannot collide with a table:
-  * table identifiers refuse '.'-free reserved names via the catalog's
-  * name validation, and `listTables` only surfaces directories holding a
+  * (create through [[AtomicPublish]]'s temp file + hard link, replace
+  * through temp file + ATOMIC_MOVE), so creation races resolve to exactly
+  * one winner and readers never observe a torn document. The `.views`
+  * directory name cannot collide with a table: table identifiers refuse
+  * '.'-free reserved names via the catalog's name validation, and `listTables` only surfaces directories holding a
   * committed manifest.
   *
   * The reference keeps its analyst verification queries as readme text
@@ -72,41 +72,28 @@ private[graft] object GraftViews {
   /** Create or replace — the document always materializes fully in a
     * temp file first, so a crash mid-write can never leave a torn
     * document under the name. Replace publishes with an atomic rename;
-    * create publishes with a HARD LINK (link(2) fails atomically on an
-    * existing target — a POSIX rename would silently replace, losing a
-    * create-vs-create race without an error). */
+    * create publishes through [[AtomicPublish]] (a HARD LINK: link(2)
+    * fails atomically on an existing target — a POSIX rename would
+    * silently replace, losing a create-vs-create race without an error)
+    * and throws `FileAlreadyExistsException` when the name is taken. */
   def write(root: String, namespace: Seq[String], name: String,
       v: StoredView, replace: Boolean): Unit = {
     val dir = viewsDir(root, namespace)
     Files.createDirectories(dir)
-    val tmp = Files.createTempFile(dir, s".$name", ".tmp")
-    try {
-      Files.write(tmp, render(v))
-      if (replace)
-        Files.move(tmp, pathOf(root, namespace, name),
-          StandardCopyOption.ATOMIC_MOVE,
+    val target = pathOf(root, namespace, name)
+    if (!replace) {
+      if (!AtomicPublish.create(target, render(v)))
+        throw new FileAlreadyExistsException(target.toString)
+    } else {
+      val tmp = Files.createTempFile(dir, s".$name", ".tmp")
+      try {
+        Files.write(tmp, render(v))
+        Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
           StandardCopyOption.REPLACE_EXISTING)
-      else {
-        try {
-          Files.createLink(pathOf(root, namespace, name), tmp)
-          Files.deleteIfExists(tmp)
-        } catch { case _: UnsupportedOperationException =>
-          // no hard links on this filesystem (fastForward handles the same
-          // case with a copy): fall back to a no-REPLACE move. Weaker
-          // atomicity than link(2) — the JDK implements the taken-name
-          // refusal as CHECK-then-rename (POSIX rename(2) itself silently
-          // replaces), so a create-vs-create race inside that window can
-          // let both writers "succeed"; each still publishes a COMPLETE
-          // document (full temp-file content), so the loss is one missing
-          // already-exists error, never a torn or lost document. The
-          // affected filesystems and the accepted trade are recorded in
-          // BASELINE.md (round 17).
-          Files.move(tmp, pathOf(root, namespace, name))
-        }
+      } catch { case e: Throwable =>
+        Files.deleteIfExists(tmp)
+        throw e
       }
-    } catch { case e: Throwable =>
-      Files.deleteIfExists(tmp)
-      throw e
     }
   }
 
@@ -139,18 +126,18 @@ private[graft] object GraftViews {
   /** Hard-link an existing view document under a new name — atomic, and
     * refuses (FileAlreadyExistsException) when the target exists. The
     * rename primitive: link then unlink the old name. On filesystems
-    * without hard-link support, falls back to an existence-checked COPY
-    * (CREATE_NEW write — still refuses a taken name; weaker atomicity:
-    * a concurrent create can race the check). */
+    * without hard-link support, falls back to publishing a COPY through
+    * [[AtomicPublish]] (still refuses a taken name, never exposes a torn
+    * document; weaker atomicity: a concurrent create can race the check). */
   def link(root: String, fromNs: Seq[String], fromName: String,
       toNs: Seq[String], toName: String): Unit = {
     Files.createDirectories(viewsDir(root, toNs))
-    try Files.createLink(pathOf(root, toNs, toName),
-      pathOf(root, fromNs, fromName))
+    val target = pathOf(root, toNs, toName)
+    try Files.createLink(target, pathOf(root, fromNs, fromName))
     catch { case _: UnsupportedOperationException =>
-      Files.write(pathOf(root, toNs, toName),
-        Files.readAllBytes(pathOf(root, fromNs, fromName)),
-        StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
+      if (!AtomicPublish.create(target,
+          Files.readAllBytes(pathOf(root, fromNs, fromName))))
+        throw new FileAlreadyExistsException(target.toString)
     }
   }
 

@@ -262,8 +262,7 @@ private[sources] class ChangesMicroBatchStream(dir: String, full: StructType,
   // masks, the same end-version contract as the batch feed. A policy
   // change mid-stream refuses loudly (per-batch check below) instead of
   // silently serving stale governance.
-  private val pinnedPolicy =
-    ManifestTable.policyLines(dir, ManifestTable.currentVersion(dir))
+  private val pinnedPolicy = Snapshot.current(dir).policies
   private val governed =
     ChangesReaderFactory.bindPolicies(dir,
       ManifestTable.currentVersion(dir), full, required)
@@ -271,8 +270,7 @@ private[sources] class ChangesMicroBatchStream(dir: String, full: StructType,
   // start reconciles every generation; a rename landing mid-stream
   // refuses per batch (below) — the consumer restarts to pick up the
   // evolved output schema
-  private val pinnedRenames =
-    ManifestTable.renameLines(dir, ManifestTable.currentVersion(dir))
+  private val pinnedRenames = Snapshot.current(dir).renames
   private val aliases =
     RenameAliases.of(dir, ManifestTable.currentVersion(dir), full.fieldNames)
 
@@ -320,12 +318,11 @@ private[sources] class ChangesMicroBatchStream(dir: String, full: StructType,
     // versions is fine (the pinned policy governs those emissions, the
     // same end-version contract as the batch feed); only governance
     // CHANGING under the running stream refuses
-    require(ManifestTable.policyLines(dir,
-        ManifestTable.currentVersion(dir)) == pinnedPolicy,
+    val head = Snapshot.current(dir)
+    require(head.policies == pinnedPolicy,
       s"streaming $$changes on $dir: the governance policy changed since " +
         "the stream started — restart the feed to pick up the new policy")
-    require(ManifestTable.renameLines(dir,
-        ManifestTable.currentVersion(dir)) == pinnedRenames,
+    require(head.renames == pinnedRenames,
       s"streaming $$changes on $dir: a column rename landed since the " +
         "stream started — restart the feed to pick up the evolved schema")
     // the batch needs every manifest in [from, to] (from is the diff

@@ -11,29 +11,33 @@ import org.apache.spark.sql.functions._
   * manifest pattern (Delta/Iceberg's core idea, reduced to its essentials):
   *
   *  - A table is a directory: `data/` holds immutable parquet files;
-  *    `manifest-v%08d.json` files each list the EXACT data files that make
-  *    up one committed snapshot.
+  *    `manifest-v%08d.json` files each hold one committed [[Snapshot]] —
+  *    the EXACT data files of that version plus its markers, in the codec
+  *    [[Snapshot]] documents (kind line first, then the files, then the
+  *    marker kinds in one fixed order, `#ts` last).
   *  - READERS resolve the highest manifest version once, then read only the
   *    files it lists. Data files from in-flight or crashed writers are
   *    orphans no manifest references — invisible by construction, so a
   *    reader never sees a partial commit (snapshot isolation without locks).
   *  - WRITERS stage data files under unique names (never overwriting), then
-  *    publish with a compare-and-swap: `Files.write(..., CREATE_NEW)` of
-  *    `manifest-v{N+1}` fails atomically if another writer already claimed
-  *    version N+1 — optimistic concurrency; the loser re-reads the new
-  *    snapshot and retries its reconciliation (for MERGE, the anti-join).
+  *    publish version N+1 through [[AtomicPublish]]: the body is written to
+  *    a temp file and hard-linked into place, which fails if another writer
+  *    already claimed N+1 — optimistic concurrency with a complete manifest
+  *    or none. Every commit kind is a snapshot → snapshot function run by
+  *    the ONE retry loop, `commit(dir, kind)`: a loser re-reads the new
+  *    head and re-runs its reconciliation (for MERGE, the anti-join).
   *  - Nothing is ever mutated or deleted on the write path, so a crash at
   *    ANY point leaves the previous snapshot fully intact; replaying the
   *    same batch is idempotent because the retry anti-joins against the
   *    state that now includes it.
   *
   * At 100 TB the same layout holds: manifests are O(|files|) metadata (and
-  * would themselves be chunked past that), data moves are pure renames, and
-  * the one serialization point is a single small-file CREATE_NEW per commit
-  * — reconciliation work stays distributed. */
+  * are chunked into segments past that), data moves are pure renames, and
+  * the one serialization point is a single small-file link per commit —
+  * reconciliation work stays distributed. */
 object ManifestTable {
 
-  private def manifestPath(dir: String, v: Int): Path =
+  private[sources] def manifestPath(dir: String, v: Int): Path =
     Paths.get(dir, f"manifest-v$v%08d.json")
 
   /** Small daemon pool for overlapping the INDEPENDENT distributed actions
@@ -83,26 +87,11 @@ object ManifestTable {
     if (vs.isEmpty) -1 else vs.max
   }
 
-  /** Raw manifest lines of version `v`: `name` or `name\t<file stats>`.
-    * `#`-prefixed marker lines (e.g. the [[commitRewrite]] tag) are
-    * metadata, not files, and are filtered here. Writers carry these lines
-    * forward verbatim so per-file stats survive later commits; readers
-    * that only need names use [[listFiles]]. */
-  def listLines(dir: String, v: Int): Seq[String] = {
-    if (v < 0) return Seq.empty
-    val body = new String(Files.readAllBytes(manifestPath(dir, v)), "UTF-8")
-    // one entry per line — no JSON library needed on the read path
-    val raw = body.split('\n').map(_.trim).filter(_.nonEmpty).toSeq
-    val entries = raw.filterNot(_.startsWith("#"))
-    if (!raw.contains(SegMarker)) entries
-    // segmented manifest: the entries are SEGMENT summaries; resolve each
-    // segment file's lines (full resolve — pruning readers use
-    // [[pruneFilesSegmented]] to touch only admitted segments)
-    else entries.flatMap { sl =>
-      Files.readAllLines(segPath(dir, sl.split('\t').head)).asScala
-        .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#"))
-    }
-  }
+  /** File lines of version `v`: `name` or `name\t<file stats>` (segments
+    * of a segmented version resolved). Writers carry these lines forward
+    * verbatim so per-file stats survive later commits; readers that only
+    * need names use [[listFiles]]. */
+  def listLines(dir: String, v: Int): Seq[String] = Snapshot.read(dir, v).files
 
   // ---------------------------------------------------------------------
   // Split manifests + manifest list (the Iceberg metadata layout, applied
@@ -120,33 +109,19 @@ object ManifestTable {
   // crashed segmented commit leaves only invisible orphans.
   // ---------------------------------------------------------------------
 
-  private[sources] val SegMarker = "#segments"
-
-  private def segPath(dir: String, name: String): Path =
-    Paths.get(dir, "meta", name)
-
-  /** Segment names referenced by version `v` (empty for flat manifests). */
-  def listSegmentNames(dir: String, v: Int): Seq[String] = {
-    if (v < 0) return Seq.empty
-    val raw = new String(Files.readAllBytes(manifestPath(dir, v)), "UTF-8")
-      .split('\n').map(_.trim).filter(_.nonEmpty).toSeq
-    if (!raw.contains(SegMarker)) Seq.empty
-    else raw.filterNot(_.startsWith("#")).map(_.split('\t').head)
-  }
-
   /** Publish version `expected + 1` as a SEGMENTED manifest: shard `lines`
     * into segments of `segmentSize`, write each under `meta/` with a
     * unique name, and CAS a manifest list of per-segment summaries (range
     * union per stats column, `__rows` and `__files` totals). Same
     * atomicity as [[commit]]; a lost race leaves orphan segments that
-    * [[vacuum]] collects. `kind` carries the commit marker ("", "#rewrite"
-    * or "#mutate"). `clusterBy` names a stats column to SORT the file
-    * lines by (recorded min) before sharding — without it, segment
+    * [[vacuum]] collects. `kind` is the commit's kind. `clusterBy` names
+    * a stats column to SORT the file lines by (recorded min) before
+    * sharding — without it, segment
     * summaries span whatever ranges the staging order interleaved and
     * nothing prunes (the reason Iceberg sorts manifest entries); file
     * order inside a manifest is not semantic, so this is pure layout. */
   def commitSegmented(dir: String, lines: Seq[String], expected: Int,
-      segmentSize: Int = 1000, kind: String = "",
+      segmentSize: Int = 1000, kind: Snapshot.Kind = Snapshot.Append,
       clusterBy: String = ""): Boolean = {
     require(segmentSize > 0, "segmentSize must be positive")
     Files.createDirectories(Paths.get(dir, "meta"))
@@ -156,8 +131,8 @@ object ManifestTable {
         .map(_.min).getOrElse(BigDecimal(0)))
     val summaries = ordered.grouped(segmentSize).map { seg =>
       val name = s"seg-${java.util.UUID.randomUUID().toString.take(12)}.txt"
-      Files.write(segPath(dir, name), seg.mkString("\n").getBytes("UTF-8"),
-        StandardOpenOption.CREATE_NEW)
+      Files.write(Paths.get(dir, "meta", name),
+        seg.mkString("\n").getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
       val es = seg.map(parseEntry)
       // per-column range union over the segment — the pruning summary
       val cols = es.flatMap(_.ranges.keys).distinct.sorted
@@ -208,9 +183,7 @@ object ManifestTable {
           s"$c=S:${hexEncode(lo)}:${hexEncode(hi)}" }.mkString(";")
       s"$name$rangeKv$bloomKv$hllKv$strKv$rowsKv\t__files=${es.size}"
     }.toSeq
-    val body = (Seq(kind).filter(_.nonEmpty) ++ (SegMarker +: summaries))
-      .mkString("\n")
-    commitBody(dir, body, expected)
+    publish(dir, Snapshot(expected + 1, kind, segments = summaries), expected)
   }
 
   /** Bitwise-OR union of same-geometry Bloom sketches (format:
@@ -248,14 +221,6 @@ object ManifestTable {
     * second element is the driver's actual parse cost. */
   def pruneFilesSegmentedForKeys(dir: String, v: Int, col: String,
       keys: Seq[Long]): (Seq[String], Int, Int, Long) = {
-    val raw = new String(Files.readAllBytes(manifestPath(dir, v)), "UTF-8")
-      .split('\n').map(_.trim).filter(_.nonEmpty).toSeq
-    require(raw.contains(SegMarker), s"v$v of $dir is not a segmented manifest")
-    val summaryLines = raw.filterNot(_.startsWith("#"))
-    val filesRe = "__files=(\\d+)".r
-    val totalFiles = summaryLines
-      .flatMap(l => filesRe.findFirstMatchIn(l).map(_.group(1).toLong)).sum
-    val summaries = summaryLines.map(parseEntry)
     def admit(e: FileEntry): Boolean = {
       val rangeOk = e.ranges.get(col).forall(r =>
         keys.exists(x => BigDecimal(x) >= r.min && BigDecimal(x) <= r.max))
@@ -263,13 +228,7 @@ object ManifestTable {
         keys.exists(x => graft.functions.BloomSketch.contains(bf, x)))
       rangeOk && bloomOk
     }
-    val admitted = summaries.filter(admit)
-    val kept = admitted.flatMap { s =>
-      Files.readAllLines(segPath(dir, s.name)).asScala
-        .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#"))
-        .map(parseEntry).filter(admit).map(_.name)
-    }
-    (kept, admitted.size, summaries.size, totalFiles)
+    prunedSegmented(dir, v, admit)
   }
 
   /** Resolve a SEGMENTED snapshot's file entries while PARSING only the
@@ -282,21 +241,15 @@ object ManifestTable {
     * metadata cost made visible. */
   def segmentedEntries(dir: String, v: Int, admit: FileEntry => Boolean)
       : Option[(Seq[FileEntry], Int, Int, Long)] = {
-    if (v < 0) return None
-    val raw = new String(Files.readAllBytes(manifestPath(dir, v)), "UTF-8")
-      .split('\n').map(_.trim).filter(_.nonEmpty).toSeq
-    if (!raw.contains(SegMarker)) return None
-    val summaryLines = raw.filterNot(_.startsWith("#"))
+    val summaryLines = Snapshot.read(dir, v).segments
+    if (summaryLines.isEmpty) return None
     val filesRe = "__files=(\\d+)".r
     val totalFiles = summaryLines
       .flatMap(l => filesRe.findFirstMatchIn(l).map(_.group(1).toLong)).sum
     val summaries = summaryLines.map(parseEntry)
     val admitted = summaries.filter(admit)
-    val entries = admitted.flatMap { s =>
-      Files.readAllLines(segPath(dir, s.name)).asScala
-        .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#"))
-        .map(parseEntry).filter(admit)
-    }
+    val entries = admitted.flatMap(s =>
+      Snapshot.readSegment(dir, s.name).map(parseEntry).filter(admit))
     Some((entries, admitted.size, summaries.size, totalFiles))
   }
 
@@ -308,10 +261,9 @@ object ManifestTable {
   def estimateNdvSegmented(dir: String, v: Int, col: String,
       lo: BigDecimal, hi: BigDecimal, numStdDev: Int = 2): (Double, Double) = {
     import org.apache.datasketches.hll.{HllSketch, Union}
-    val raw = new String(Files.readAllBytes(manifestPath(dir, v)), "UTF-8")
-      .split('\n').map(_.trim).filter(_.nonEmpty).toSeq
-    require(raw.contains(SegMarker), s"v$v of $dir is not a segmented manifest")
-    val admitted = raw.filterNot(_.startsWith("#")).map(parseEntry)
+    val summaries = Snapshot.read(dir, v).segments
+    require(summaries.nonEmpty, s"v$v of $dir is not a segmented manifest")
+    val admitted = summaries.map(parseEntry)
       .filter(_.ranges.get(col).forall(r => r.max >= lo && r.min <= hi))
     require(admitted.nonEmpty && admitted.forall(_.hlls.contains(col)),
       s"estimateNdvSegmented needs an HLL sketch for '$col' on every admitted segment")
@@ -326,34 +278,18 @@ object ManifestTable {
     * segments read, segments total, files total) — the first two are the
     * driver's actual metadata cost, the proof the resolve is bounded. */
   def pruneFilesSegmented(dir: String, v: Int, col: String,
-      lo: BigDecimal, hi: BigDecimal): (Seq[String], Int, Int, Long) = {
-    val raw = new String(Files.readAllBytes(manifestPath(dir, v)), "UTF-8")
-      .split('\n').map(_.trim).filter(_.nonEmpty).toSeq
-    require(raw.contains(SegMarker), s"v$v of $dir is not a segmented manifest")
-    val summaryLines = raw.filterNot(_.startsWith("#"))
-    val filesRe = "__files=(\\d+)".r
-    val totalFiles = summaryLines
-      .flatMap(l => filesRe.findFirstMatchIn(l).map(_.group(1).toLong)).sum
-    val summaries = summaryLines.map(parseEntry)
-    val admitted = summaries.filter(
+      lo: BigDecimal, hi: BigDecimal): (Seq[String], Int, Int, Long) =
+    prunedSegmented(dir, v,
       _.ranges.get(col).forall(r => r.max >= lo && r.min <= hi))
-    val kept = admitted.flatMap { s =>
-      Files.readAllLines(segPath(dir, s.name)).asScala
-        .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#"))
-        .map(parseEntry)
-        .filter(_.ranges.get(col).forall(r => r.max >= lo && r.min <= hi))
-        .map(_.name)
-    }
-    (kept, admitted.size, summaries.size, totalFiles)
-  }
 
-  /** True if version `v` is a REWRITE commit (compaction / optimize): its
-    * file list changed but its DATA did not — incremental consumers skip
-    * it entirely instead of re-reading rewritten files. */
-  def isRewrite(dir: String, v: Int): Boolean = {
-    if (v < 0) return false
-    val body = new String(Files.readAllBytes(manifestPath(dir, v)), "UTF-8")
-    body.split('\n').headOption.exists(_.trim == "#rewrite")
+  /** [[segmentedEntries]] reduced to the kept names, for a version that
+    * must be segmented. */
+  private def prunedSegmented(dir: String, v: Int,
+      admit: FileEntry => Boolean): (Seq[String], Int, Int, Long) = {
+    val resolved = segmentedEntries(dir, v, admit)
+    require(resolved.isDefined, s"v$v of $dir is not a segmented manifest")
+    val (kept, segsRead, segsTotal, totalFiles) = resolved.get
+    (kept.map(_.name), segsRead, segsTotal, totalFiles)
   }
 
   /** Data files of version `v` (relative names under `data/`, or absolute
@@ -378,75 +314,67 @@ object ManifestTable {
   def readVersion(s: SparkSession, dir: String, v: Int): DataFrame = {
     require(v >= 0 && Files.exists(manifestPath(dir, v)),
       s"no committed snapshot v$v in $dir")
+    val snap = Snapshot.read(dir, v)
     // a zero-file snapshot (fresh CREATE TABLE, unconditional DELETE) is a
     // legal empty table: serve the declared schema if one was recorded
-    if (listFiles(dir, v).isEmpty)
-      return declaredSchema(dir, v)
+    if (snap.files.isEmpty)
+      return snap.schema
         .map(j => s.createDataFrame(
           new java.util.ArrayList[org.apache.spark.sql.Row](),
           org.apache.spark.sql.types.DataType.fromJson(j)
             .asInstanceOf[org.apache.spark.sql.types.StructType]))
         .getOrElse(s.emptyDataFrame)
-    readFilesReconciled(s, dir, v, listFiles(dir, v))
+    readReconciled(s, dir, snap, snap.names)
   }
 
-  /** Atomically publish version `expected + 1` = `files`. True on success,
-    * false if another writer won the race (caller re-reads and retries). */
-  def commit(dir: String, files: Seq[String], expected: Int): Boolean =
-    commitBody(dir, files.mkString("\n"), expected)
+  /** Atomically publish version `expected + 1` from raw manifest `lines`
+    * (file lines, optionally with marker lines). True on success, false if
+    * another writer won the race (caller re-reads and retries). */
+  def commit(dir: String, lines: Seq[String], expected: Int): Boolean =
+    publish(dir, Snapshot.decode(expected + 1, lines), expected)
 
-  /** [[commit]] tagged as a DATA-INVARIANT rewrite (compaction, optimize):
-    * snapshot readers see the new file list as usual, but incremental
-    * consumers ([[readChanges]], the streaming source) skip the version —
-    * the rows didn't change, only their layout, so "re-bootstrap on
-    * compaction" stops being part of the CDC contract. */
-  def commitRewrite(dir: String, files: Seq[String], expected: Int): Boolean =
-    commitBody(dir, ("#rewrite" +: files).mkString("\n"), expected)
-
-  /** [[commit]] tagged as a ROW-LEVEL MUTATION (delete, update): the data
-    * changed in a way an append-only change feed cannot express, so
-    * incremental consumers crossing this version fail EXPLICITLY and must
-    * re-bootstrap — emitting the rewritten survivors as "new rows" would
-    * silently duplicate them downstream. */
-  def commitMutate(dir: String, files: Seq[String], expected: Int): Boolean =
-    commitBody(dir, ("#mutate" +: files).mkString("\n"), expected)
-
-  /** True if version `v` is a row-level mutation commit. */
-  def isMutate(dir: String, v: Int): Boolean = {
-    if (v < 0) return false
-    val body = new String(Files.readAllBytes(manifestPath(dir, v)), "UTF-8")
-    body.split('\n').headOption.exists(_.trim == "#mutate")
-  }
-
-  private def commitBody(dir: String, body: String, expected: Int): Boolean = {
+  /** CAS-publish `snap` as version `expected + 1` (see [[AtomicPublish]]).
+    * Every commit records its own instant as the `#ts` marker — TIMESTAMP
+    * AS OF resolves from it, not from file mtimes, which a directory
+    * copy/restore/backup silently rewrites. Stamped HERE, the one choke
+    * point all commit kinds pass through, and never carried forward: each
+    * version's marker is its own commit time. */
+  private[sources] def publish(dir: String, snap: Snapshot,
+      expected: Int): Boolean = {
     Files.createDirectories(Paths.get(dir, "data"))
-    val target = manifestPath(dir, expected + 1)
-    // every commit records its own instant as a `#ts` marker line —
-    // TIMESTAMP AS OF resolves from this, not from file mtimes, which a
-    // directory copy/restore/backup silently rewrites. Appended HERE (the
-    // one choke point all commit kinds pass through) and never carried
-    // forward: each version's marker is its own commit time.
-    val stamped =
-      (if (body.isEmpty) "" else body + "\n") +
-        s"$TsPrefix${System.currentTimeMillis()}"
-    try {
-      Files.write(target, stamped.getBytes("UTF-8"),
-        StandardOpenOption.CREATE_NEW) // atomic CAS: fails if v+1 exists
-      true
-    } catch { case _: java.nio.file.FileAlreadyExistsException => false }
+    val stamped = snap.copy(version = expected + 1,
+      ts = Some(System.currentTimeMillis()))
+    AtomicPublish.create(manifestPath(dir, expected + 1),
+      stamped.encode.getBytes("UTF-8"))
   }
 
-  private val TsPrefix = "#ts\t"
+  /** How many CAS losses the commit loop absorbs before it gives up. */
+  private val MaxCommitAttempts = 10
 
-  /** The commit instant (epoch millis) version `v` recorded at publish
-    * time, if the manifest carries a `#ts` marker (commits predating the
-    * marker resolve by file mtime at the call site — the degraded legacy
-    * rule). */
-  def commitInstantMillis(dir: String, v: Int): Option[Long] = {
-    if (v < 0 || !Files.exists(manifestPath(dir, v))) return None
-    new String(Files.readAllBytes(manifestPath(dir, v)), "UTF-8")
-      .split('\n').map(_.trim).find(_.startsWith(TsPrefix))
-      .map(_.stripPrefix(TsPrefix).toLong)
+  /** THE table commit loop. Reads the head snapshot, hands it to `next`
+    * stamped with this commit's `kind` and flattened (a successor of a
+    * segmented version is written flat), and publishes the result as the
+    * next version; `None` from `next` is a no-op that returns the head
+    * version. A lost CAS re-reads the new head and re-runs `next` — every
+    * reconciliation (anti-join, stats prune, staging) therefore runs
+    * against the snapshot it publishes onto — up to [[MaxCommitAttempts]]
+    * times. `next` may override the kind (`base.copy(kind = …)`) when it
+    * depends on the head. Returns the version the table is at afterwards.
+    * Markers carry forward by construction: `base.copy(files = …)` keeps
+    * every marker `next` does not touch. */
+  def commit(dir: String, kind: Snapshot.Kind)(
+      next: Snapshot => Option[Snapshot]): Int = {
+    var attempt = 0
+    while (attempt < MaxCommitAttempts) {
+      val head = Snapshot.read(dir, currentVersion(dir))
+      next(head.copy(kind = kind, segments = Nil)) match {
+        case None => return head.version
+        case Some(s) if publish(dir, s, head.version) => return head.version + 1
+        case _ => attempt += 1 // lost the race; staged files stay orphans
+      }
+    }
+    throw new IllegalStateException(
+      s"commit to $dir lost $MaxCommitAttempts CAS races")
   }
 
   /** Stage `df` as immutable uniquely-named parquet files under `data/`
@@ -535,11 +463,8 @@ object ManifestTable {
     val cur = currentVersion(dir)
     require(cur >= 0, s"no committed snapshot in $dir")
     (0 to cur).map { v =>
-      val entries = listLines(dir, v).map(parseEntry)
-      val kind =
-        if (isRewrite(dir, v)) "rewrite"
-        else if (isMutate(dir, v)) "mutate"
-        else "data"
+      val snap = Snapshot.read(dir, v)
+      val entries = snap.entries
       // POSITIONAL markers record exact doomed ordinals (round 14) and
       // KEYED markers their delete-time doomed-live counts (round 15),
       // so live = rows − doomed summed over still-listed targets — the
@@ -547,7 +472,7 @@ object ManifestTable {
       // predating count recording makes the row count unknowable from
       // metadata (how many keys actually hit is a data question) —
       // report unknown, never a guess.
-      val dvs = dvEntries(dir, v)
+      val dvs = snap.dvs
       val rows =
         if (entries.isEmpty || entries.exists(_.rows.isEmpty)) None
         else if (dvs.isEmpty) Some(entries.flatMap(_.rows).sum)
@@ -561,7 +486,7 @@ object ManifestTable {
               m.iterator.collect { case (t, n) if names(t) => n }.sum))
             .toOption.flatten
         }
-      (v, kind, entries.size.toLong, rows)
+      (v, snap.kind.label, entries.size.toLong, rows)
     }.toDF("version", "kind", "n_files", "n_rows")
   }
 
@@ -575,18 +500,11 @@ object ManifestTable {
     * came back"), so consumers crossing it must re-bootstrap — the same
     * honesty contract as delete/update. Requires `v` to still be within
     * the vacuum horizon. */
-  def restore(dir: String, v: Int, maxRetries: Int = 10): Int = {
+  def restore(dir: String, v: Int): Int = {
     require(v >= 0 && Files.exists(manifestPath(dir, v)),
       s"no committed snapshot v$v in $dir (vacuumed?)")
-    val lines = listLines(dir, v) ++ dvLines(dir, v) ++
-      renameLines(dir, v) ++ carriedMeta(dir, v)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = currentVersion(dir)
-      if (commitMutate(dir, lines, cur)) return cur + 1
-      attempt += 1
-    }
-    throw new IllegalStateException(s"restore lost $maxRetries commit races in $dir")
+    val old = Snapshot.read(dir, v).copy(kind = Snapshot.Mutate, segments = Nil)
+    commit(dir, Snapshot.Mutate)(_ => Some(old))
   }
 
   /** SHALLOW CLONE — a zero-copy table copy: the clone's v0 manifest
@@ -601,22 +519,20 @@ object ManifestTable {
     * SOURCE can collect files a clone still references — clones live
     * inside the source's retention horizon. */
   def cloneTable(srcDir: String, dstDir: String): Int = {
-    val v = currentVersion(srcDir)
-    require(v >= 0, s"no committed snapshot to clone in $srcDir")
-    val lines = listLines(srcDir, v).map { l =>
-      val parts = l.split('\t')
-      val abs = Paths.get(dataPath(srcDir, parts.head)).toAbsolutePath.toString
-      (abs +: parts.tail).mkString("\t")
-    }
+    val src = Snapshot.current(srcDir)
+    require(src.version >= 0, s"no committed snapshot to clone in $srcDir")
     def abs(n: String) = Paths.get(dataPath(srcDir, n)).toAbsolutePath.toString
+    val lines = src.files.map { l =>
+      val parts = l.split('\t')
+      (abs(parts.head) +: parts.tail).mkString("\t")
+    }
     // deletion vectors clone too: DV file, targets, and recorded
     // doomed-live counts re-point into the source by absolute path,
     // same as the data references
-    val dvs = dvEntries(srcDir, v).map(e =>
-      encodeDv(DvEntry(abs(e.file), e.col, e.targets.map(abs),
-        e.counts.map { case (t, n) => abs(t) -> n })))
-    require(commit(dstDir, lines ++ dvs ++ renameLines(srcDir, v) ++
-        carriedMeta(srcDir, v), -1),
+    val dvs = src.dvs.map(e => DvEntry(abs(e.file), e.col,
+      e.targets.map(abs), e.counts.map { case (t, n) => abs(t) -> n }))
+    require(publish(dstDir, src.copy(kind = Snapshot.Append, files = lines,
+        dvs = dvs, segments = Nil), -1),
       s"clone target $dstDir is not empty")
     // register the clone AT THE SOURCE (unique marker file — no write
     // race) so the source's vacuum knows external readers reference its
@@ -648,12 +564,6 @@ object ManifestTable {
   def branchDir(dir: String, name: String): String = s"$dir/.branch/$name"
 
   private[sources] val BranchBaseProp = "graft.branch.base"
-
-  /** Exact-KEY match for the branch's private fork-point property line —
-    * a whole-line `contains` would also drop any property whose VALUE
-    * happens to contain the key text (ADVICE r16). */
-  private def isBranchBaseLine(l: String): Boolean =
-    l.startsWith(s"$PropPrefix$BranchBaseProp\t")
 
   private def validRefName(name: String): Boolean =
     name.nonEmpty && name.forall(ch => ch.isLetterOrDigit || ch == '_' ||
@@ -718,9 +628,9 @@ object ManifestTable {
     * new main version. */
   def fastForward(dir: String, name: String): Int = {
     val bd = branchDir(dir, name)
-    val bv = currentVersion(bd)
-    require(bv >= 0, s"no branch '$name' on $dir")
-    val base = tableProperties(bd, bv).get(BranchBaseProp)
+    val branch = Snapshot.current(bd)
+    require(branch.version >= 0, s"no branch '$name' on $dir")
+    val base = branch.properties.get(BranchBaseProp)
       .flatMap(_.toIntOption).getOrElse(throw new IllegalStateException(
         s"$bd carries no fork-point property — not a branch"))
     def refuseDiverged(): Nothing = throw new IllegalStateException(
@@ -732,34 +642,31 @@ object ManifestTable {
     // publish: the branch was audited against the same CONTENT, and the
     // publish replaces the file list wholesale anyway (main's compaction
     // work is discarded, never its data). Any data/mutate commit refuses.
-    val headNow = currentVersion(dir)
+    def onlyRewritesSince(head: Int): Boolean = (base + 1 to head).forall(v =>
+      Files.exists(manifestPath(dir, v)) &&
+        Snapshot.read(dir, v).kind == Snapshot.Rewrite)
+    val headNow = Snapshot.current(dir)
     val pub = new BranchPublish(dir, bd)
-    val bLines = listLines(bd, bv)
-    val bDvRaw = dvEntries(bd, bv)
     def foldDv(e: DvEntry): DvEntry = DvEntry(pub.fold(e.file), e.col,
       e.targets.map(pub.fold),
       e.counts.map { case (t, c) => pub.fold(t) -> c })
-    if (headNow != base) {
+    if (headNow.version != base) {
       // CRASHED-RETIRE RE-RUN: the publish replaced main's file list
       // wholesale, so if main's head IS the branch head (positive
       // signal: the branch's unique LOCAL names are on main) the prior
       // run already published — retire and return instead of refusing
       // against our own commit
-      val bLocal = bLines.map(_.split('\t').head)
-        .filterNot(_.startsWith("/")).toSet
-      val mainNamesNow = listLines(dir, headNow).map(_.split('\t').head).toSet
+      val bLocal = branch.names.filterNot(_.startsWith("/")).toSet
       val appliedAlready = bLocal.nonEmpty &&
-        bLines.map(l => pub.fold(l.split('\t').head)).toSet == mainNamesNow &&
-        dvEntries(dir, headNow).map(encodeDv).toSet ==
-          bDvRaw.map(e => encodeDv(foldDv(e))).toSet
+        branch.names.map(pub.fold).toSet == headNow.names.toSet &&
+        headNow.dvs.map(encodeDv).toSet ==
+          branch.dvs.map(e => encodeDv(foldDv(e))).toSet
       if (appliedAlready) {
         try dropBranch(dir, name) catch { case _: Exception => () }
-        return headNow
+        return headNow.version
       }
-      val onlyRewrites = (base + 1 to headNow).forall(v =>
-        Files.exists(manifestPath(dir, v)) && isRewrite(dir, v))
-      if (!onlyRewrites) refuseDiverged()
-      require(dvLines(dir, headNow).isEmpty && renameLines(dir, headNow).isEmpty,
+      if (!onlyRewritesSince(headNow.version)) refuseDiverged()
+      require(headNow.dvs.isEmpty && headNow.renames.isEmpty,
         s"fast-forward of '$name' refused: markers appeared on $dir " +
           "since the fork — compact first")
     }
@@ -774,7 +681,7 @@ object ManifestTable {
     // stays an absolute reference (see [[BranchPublish]]).
     import pub.{fold, linkLocal, unlink}
     try {
-      val lines = bLines.map { l =>
+      val lines = branch.files.map { l =>
         val parts = l.split('\t')
         val n = parts.head
         linkLocal(n)
@@ -789,49 +696,32 @@ object ManifestTable {
       // parquets hold values, never paths — nothing inside a marker
       // file needs rewriting. RENAME markers carry name pairs, no
       // paths: verbatim.
-      val dvFolded = bDvRaw.map { e =>
+      val dvFolded = branch.dvs.map { e =>
         linkLocal(e.file)
-        encodeDv(foldDv(e))
+        foldDv(e)
       }
       // the branch's evolved metadata (schema changes, properties, tags)
-      // publishes with it — minus its private fork-point marker
-      val meta = carriedMeta(bd, bv).filterNot(isBranchBaseLine)
-      // publish as a MUTATE commit: relative to main's head the branch
+      // publishes with it — minus its private fork-point marker. It
+      // publishes as a MUTATE commit: relative to main's head the branch
       // may remove or rewrite rows, which an append-only feed cannot
       // express — incremental consumers re-bootstrap, the honest default
-      var attempt = 0
-      var committed = -1
-      while (committed < 0) {
-        val head = currentVersion(dir)
-        if (head != base) {
-          // re-validate under the loop: only rewrite commits may land
-          // between the pre-check and the CAS
-          val onlyRewrites = (base + 1 to head).forall(v =>
-            Files.exists(manifestPath(dir, v)) && isRewrite(dir, v))
-          if (!onlyRewrites ||
-              dvLines(dir, head).nonEmpty || renameLines(dir, head).nonEmpty) {
-            unlink(); refuseDiverged()
-          }
-        }
-        if (commitMutate(dir, lines ++ dvFolded ++
-            renameLines(bd, bv) ++ meta, head)) {
-          committed = head + 1; pub.published = true
-        }
-        else {
-          attempt += 1
-          if (attempt >= 10) { unlink(); refuseDiverged() }
-        }
+      val ffHead = branch.withoutProp(BranchBaseProp).copy(
+        kind = Snapshot.Mutate, files = lines, dvs = dvFolded, segments = Nil)
+      val committed = commit(dir, Snapshot.Mutate) { head =>
+        // re-validate under the loop: only rewrite commits may land
+        // between the pre-check and the CAS
+        if (head.version != base && (!onlyRewritesSince(head.version) ||
+            head.dvs.nonEmpty || head.renames.nonEmpty)) refuseDiverged()
+        Some(ffHead)
       }
       // past this point the publish is COMMITTED: main's manifest now
       // references the linked files, so no failure (including a
       // dropBranch I/O error — the retire step is best-effort; a
       // leftover branch is benign, re-droppable) may ever unlink them
+      pub.published = true
       try dropBranch(dir, name) catch { case _: Exception => () }
       committed
-    } catch {
-      case e: Throwable if !e.isInstanceOf[IllegalStateException] =>
-        unlink(); throw e
-    }
+    } catch { case e: Throwable => unlink(); throw e }
   }
 
   /** THREE-WAY BRANCH MERGE (round 16) — the step past [[fastForward]]'s
@@ -933,9 +823,9 @@ object ManifestTable {
 
   def mergeBranch(dir: String, name: String): Int = {
     val bd = branchDir(dir, name)
-    val bv = currentVersion(bd)
-    require(bv >= 0, s"no branch '$name' on $dir")
-    val base = tableProperties(bd, bv).get(BranchBaseProp)
+    val branchHead = Snapshot.current(bd)
+    require(branchHead.version >= 0, s"no branch '$name' on $dir")
+    val base = branchHead.properties.get(BranchBaseProp)
       .flatMap(_.toIntOption).getOrElse(throw new IllegalStateException(
         s"$bd carries no fork-point property — not a branch"))
     require(Files.exists(manifestPath(dir, base)),
@@ -947,16 +837,17 @@ object ManifestTable {
 
     // the branch's file-level delta vs the fork snapshot, names folded
     // back to main-relative
-    val baseNames = listLines(dir, base).map(nameOf).toSet
-    val bLines = listLines(bd, bv).map { l =>
+    val fork = Snapshot.read(dir, base)
+    val branch = branchHead.withoutProp(BranchBaseProp)
+    val baseNames = fork.names.toSet
+    val bLines = branch.files.map { l =>
       val p = l.split('\t'); (fold(p.head) +: p.tail).mkString("\t")
     }
     val bNames = bLines.map(nameOf).toSet
     val branchAdded = bLines.filterNot(l => baseNames.contains(nameOf(l)))
     val branchRemoved = baseNames -- bNames
-    val baseDvs = dvEntries(dir, base)
-    val baseDvEnc = baseDvs.map(encodeDv).toSet
-    val bDvFolded = dvEntries(bd, bv).map(e => DvEntry(fold(e.file), e.col,
+    val baseDvEnc = fork.dvs.map(encodeDv).toSet
+    val bDvFolded = branch.dvs.map(e => DvEntry(fold(e.file), e.col,
       e.targets.map(fold), e.counts.map { case (t, c) => fold(t) -> c }))
     val bDvEnc = bDvFolded.map(encodeDv).toSet
     // an inherited marker may only vanish WITH its targets (a branch COW
@@ -964,7 +855,7 @@ object ManifestTable {
     // through the file-conflict rule); a marker rewrite that leaves its
     // targets in place (consolidation) would double-apply against main's
     // surviving copies after the merge, so it refuses
-    require(baseDvs.forall(e => bDvEnc.contains(encodeDv(e)) ||
+    require(fork.dvs.forall(e => bDvEnc.contains(encodeDv(e)) ||
         !e.targets.exists(bNames.contains)),
       s"merge of branch '$name' refused: the branch rewrote inherited " +
         "deletion-vector markers (consolidation?) — merging would " +
@@ -976,38 +867,17 @@ object ManifestTable {
     // watermark landing on either side is a sink progress marker, not a
     // metadata edit (counting it would spuriously block every merge into
     // a streaming-fed table); epochs merge per-queryId by MAX instead.
-    def nonEpoch(lines: Seq[String]): Seq[String] =
-      lines.filterNot(_.startsWith(EpochPrefix))
-    def epochMap(lines: Seq[String]): Map[String, Long] =
-      lines.filter(_.startsWith(EpochPrefix)).flatMap { l =>
-        l.split('\t') match {
-          case Array(_, qid, eid) => eid.toLongOption.map(qid -> _)
-          case _ => None
-        }
-      }.toMap
-    val baseMeta = nonEpoch(carriedMeta(dir, base)).toSet
-    val bMetaAll = carriedMeta(bd, bv).filterNot(isBranchBaseLine)
-    val bMeta = nonEpoch(bMetaAll)
-    val branchMetaChanged = bMeta.toSet != baseMeta
-    val baseRen = renameLines(dir, base).toSet
-    val bRen = renameLines(bd, bv)
-    val branchRenChanged = bRen.toSet != baseRen
+    def meta(s: Snapshot) = (s.policies.toSet, s.props.toSet, s.schema)
+    val branchMetaChanged = meta(branch) != meta(fork)
+    val branchRenChanged = branch.renames.toSet != fork.renames.toSet
 
     try {
       branchAdded.map(nameOf).foreach(linkLocal)
       branchNewDvs.map(_.file).foreach(linkLocal)
-      var attempt = 0
-      var committed = -1
-      while (committed < 0) {
-        val head = currentVersion(dir)
+      val committed = commit(dir, Snapshot.Mutate) { main =>
         // main's delta since the fork, re-read under the CAS loop
-        val mainLines = listLines(dir, head)
-        val mainNames = mainLines.map(nameOf).toSet
-        val mainDvs = dvEntries(dir, head)
-        val mainDvEnc = mainDvs.map(encodeDv).toSet
-        val mainMetaAll = carriedMeta(dir, head)
-        val mainMeta = nonEpoch(mainMetaAll)
-        val mainRen = renameLines(dir, head)
+        val mainNames = main.names.toSet
+        val mainDvEnc = main.dvs.map(encodeDv).toSet
         // IDEMPOTENT RE-RUN: after a crashed/failed retire the branch is
         // still listed but its whole delta already sits on main (our own
         // prior publish) — retire and return the head instead of refusing
@@ -1027,101 +897,78 @@ object ManifestTable {
         // to confuse with main's independent removals), and an identical
         // end state on main makes the retire harmless even if main set
         // the same values independently — so they count as applied too
+        val sameEnd =
+          (!branchMetaChanged || meta(main) == meta(branch)) &&
+          (!branchRenChanged || main.renames.toSet == branch.renames.toSet)
         val metaOnlyApplied =
           branchAdded.isEmpty && branchNewDvs.isEmpty &&
           branchRemoved.isEmpty &&
-          (branchMetaChanged || branchRenChanged) &&
-          (!branchMetaChanged || mainMeta.toSet == bMeta.toSet) &&
-          (!branchRenChanged || mainRen.toSet == bRen.toSet)
+          (branchMetaChanged || branchRenChanged) && sameEnd
         val alreadyApplied = metaOnlyApplied || (positiveSignal &&
-          branchRemoved.forall(n => !mainNames.contains(n)) &&
-          (!branchMetaChanged || mainMeta.toSet == bMeta.toSet) &&
-          (!branchRenChanged || mainRen.toSet == bRen.toSet))
+          branchRemoved.forall(n => !mainNames.contains(n)) && sameEnd)
         if (alreadyApplied) {
           pub.published = true // any linked files belong to main already
-          committed = head
+          None
         } else {
-        val mainNewDvs =
-          mainDvs.filterNot(e => baseDvEnc.contains(encodeDv(e)))
-        val mainTouched = (baseNames -- mainNames) ++
-          mainNewDvs.flatMap(_.targets).filter(baseNames.contains)
-        val conflicts = branchTouched intersect mainTouched
-        // ROW-LEVEL RECONCILIATION (round 17): a fork file BOTH sides
-        // touched is still mergeable when neither side removed or rewrote
-        // it (each side's touch is marker-only — concurrent MOR DML on
-        // overlapping files) and the two sides' new markers doom provably
-        // DISJOINT rows of the same immutable copy ([[dvRowsDisjointOn]]).
-        // Both markers then publish together: the read path already
-        // applies every marker of a file's group, and recorded doomed-live
-        // counts stay additive exactly because no row is doomed twice. A
-        // true row overlap — or anything unprovable (a marker read
-        // failure, mixed kinds) — keeps the refusal, never guesses.
-        val irreconcilable = conflicts.filterNot { f =>
-          bNames.contains(f) && mainNames.contains(f) &&
-            (try dvRowsDisjointOn(dir, f,
-                branchNewDvs.filter(_.targets.contains(f)),
-                mainNewDvs.filter(_.targets.contains(f)))
-             catch { case scala.util.control.NonFatal(_) => false })
-        }
-        if (irreconcilable.nonEmpty) {
-          unlink()
-          throw new IllegalStateException(
-            s"merge of branch '$name' refused: both sides touched " +
-              s"${irreconcilable.toSeq.sorted.mkString("[", ", ", "]")} " +
-              s"since fork v$base and the row edits cannot be proven " +
-              "disjoint — one side's rows would be silently discarded; " +
-              "re-cut the branch and replay")
-        }
-        val mainMetaChanged = mainMeta.toSet != baseMeta
-        if ((branchMetaChanged || branchRenChanged) &&
-            (mainMetaChanged || mainRen.toSet != baseRen)) {
-          unlink()
-          throw new IllegalStateException(
-            s"merge of branch '$name' refused: both sides changed table " +
-              s"metadata since fork v$base — re-cut the branch")
-        }
-        // sink high-waters merge by per-queryId MAX (monotone — a replayed
-        // epoch below either side's marker still no-ops after the merge)
-        val mergedEpochs = (epochMap(mainMetaAll).toSeq ++
-            epochMap(bMetaAll).toSeq)
-          .groupMapReduce(_._1)(_._2)(math.max)
-          .toSeq.sortBy(_._1).map { case (q, e) => s"$EpochPrefix$q\t$e" }
-        val mergedMeta =
-          (if (branchMetaChanged) bMeta else mainMeta) ++ mergedEpochs
-        val mergedRen = if (branchRenChanged) bRen else mainRen
-        val mergedLines = mainLines.filterNot(l =>
-          branchRemoved.contains(nameOf(l))) ++ branchAdded
-        val mergedNames = mergedLines.map(nameOf).toSet
-        // markers whose targets left the snapshot are moot — prune them
-        // (their doomed rows were materialized away by whichever side
-        // removed the target)
-        val mergedDvs = (mainDvs ++ branchNewDvs)
-          .map(e => e.copy(targets = e.targets.filter(mergedNames.contains),
-            counts = e.counts.filter { case (t, _) => mergedNames.contains(t) }))
-          .filter(_.targets.nonEmpty)
-        if (commitMutate(dir, mergedLines ++ mergedDvs.map(encodeDv) ++
-            mergedRen ++ mergedMeta, head)) {
-          committed = head + 1; pub.published = true
-        }
-        else {
-          attempt += 1
-          if (attempt >= 10) {
-            unlink()
-            throw new IllegalStateException(
-              s"merge of branch '$name' on $dir lost the CAS 10 times — " +
-                "retry under less contention")
+          val mainNewDvs =
+            main.dvs.filterNot(e => baseDvEnc.contains(encodeDv(e)))
+          val mainTouched = (baseNames -- mainNames) ++
+            mainNewDvs.flatMap(_.targets).filter(baseNames.contains)
+          val conflicts = branchTouched intersect mainTouched
+          // ROW-LEVEL RECONCILIATION (round 17): a fork file BOTH sides
+          // touched is still mergeable when neither side removed or
+          // rewrote it (each side's touch is marker-only — concurrent MOR
+          // DML on overlapping files) and the two sides' new markers doom
+          // provably DISJOINT rows of the same immutable copy
+          // ([[dvRowsDisjointOn]]). Both markers then publish together:
+          // the read path already applies every marker of a file's group,
+          // and recorded doomed-live counts stay additive exactly because
+          // no row is doomed twice. A true row overlap — or anything
+          // unprovable (a marker read failure, mixed kinds) — keeps the
+          // refusal, never guesses.
+          val irreconcilable = conflicts.filterNot { f =>
+            bNames.contains(f) && mainNames.contains(f) &&
+              (try dvRowsDisjointOn(dir, f,
+                  branchNewDvs.filter(_.targets.contains(f)),
+                  mainNewDvs.filter(_.targets.contains(f)))
+               catch { case scala.util.control.NonFatal(_) => false })
           }
+          if (irreconcilable.nonEmpty)
+            throw new IllegalStateException(
+              s"merge of branch '$name' refused: both sides touched " +
+                s"${irreconcilable.toSeq.sorted.mkString("[", ", ", "]")} " +
+                s"since fork v$base and the row edits cannot be proven " +
+                "disjoint — one side's rows would be silently discarded; " +
+                "re-cut the branch and replay")
+          if ((branchMetaChanged || branchRenChanged) &&
+              (meta(main) != meta(fork) ||
+                main.renames.toSet != fork.renames.toSet))
+            throw new IllegalStateException(
+              s"merge of branch '$name' refused: both sides changed table " +
+                s"metadata since fork v$base — re-cut the branch")
+          // sink high-waters merge by per-queryId MAX (monotone — a
+          // replayed epoch below either side's marker still no-ops after
+          // the merge)
+          val mergedEpochs = (main.epochs.toMap.toSeq ++ branch.epochs.toMap.toSeq)
+            .groupMapReduce(_._1)(_._2)(math.max).toSeq.sortBy(_._1)
+          val metaSide = if (branchMetaChanged) branch else main
+          val mergedLines = main.files.filterNot(l =>
+            branchRemoved.contains(nameOf(l))) ++ branchAdded
+          // markers whose targets left the snapshot are moot — struck
+          // (their doomed rows were materialized away by whichever side
+          // removed the target)
+          Some(main.copy(files = mergedLines, dvs = main.dvs ++ branchNewDvs,
+            renames = if (branchRenChanged) branch.renames else main.renames,
+            policies = metaSide.policies, props = metaSide.props,
+            schema = metaSide.schema, epochs = mergedEpochs).strikeDvTargets)
         }
-        } // end !alreadyApplied
       }
+      pub.published = true
       // the retire step is best-effort: the publish is committed, a
       // leftover branch is benign and re-droppable
       try dropBranch(dir, name) catch { case _: Exception => () }
       committed
-    } catch {
-      case e: Throwable if !e.isInstanceOf[IllegalStateException] =>
-        unlink(); throw e
-    }
+    } catch { case e: Throwable => unlink(); throw e }
   }
 
   /** Abandon (or retire after publish) branch `name`: remove its
@@ -1175,11 +1022,12 @@ object ManifestTable {
       if (!Files.isDirectory(Paths.get(cloneDir))) Iterator.empty
       else (0 to currentVersion(cloneDir)).iterator
         .filter(v => Files.exists(manifestPath(cloneDir, v)))
-        .flatMap(v => listFiles(cloneDir, v) ++
+        .map(Snapshot.read(cloneDir, _))
+        .flatMap(snap => snap.names ++
           // the clone's DV markers re-point into the source too: both the
           // doomed-key parquet AND its target files must survive a source
           // vacuum, or the clone's merge-on-read scan dangles
-          dvEntries(cloneDir, v).flatMap(e => e.file +: e.targets.toSeq))
+          snap.dvs.flatMap(e => e.file +: e.targets.toSeq))
         .collect { case f if f.startsWith(dataPrefix) =>
           f.stripPrefix(dataPrefix) }
     }.toSet
@@ -1212,12 +1060,21 @@ object ManifestTable {
     val cur = currentVersion(dir)
     require(cur >= 0, s"no committed snapshot in $dir")
     val keepFrom = math.max(0, cur - keepVersions + 1)
+    sweep(dir, retained = keepFrom to cur, dropped = 0 until keepFrom, force)
+  }
+
+  /** Delete manifests `dropped`, then every data file and segment that no
+    * `retained` version — and, unless `force`, no live registered clone —
+    * references. Returns (#manifests, #data files) removed. */
+  private def sweep(dir: String, retained: Seq[Int], dropped: Seq[Int],
+      force: Boolean): (Int, Int) = {
     val cloneKeep = if (force) Set.empty[String] else cloneReferencedFiles(dir)
-    val keepFiles = (keepFrom to cur).flatMap(listFiles(dir, _)).toSet ++
-      (keepFrom to cur).flatMap(dvEntries(dir, _).map(_.file)).toSet ++ cloneKeep
-    val keepSegs = (keepFrom to cur).flatMap(listSegmentNames(dir, _)).toSet
-    val droppedManifests = (0 until keepFrom)
-      .count(v => Files.deleteIfExists(manifestPath(dir, v)))
+    val kept = retained.map(Snapshot.read(dir, _))
+    val keepFiles =
+      kept.flatMap(s => s.names ++ s.dvs.map(_.file)).toSet ++ cloneKeep
+    val keepSegs = kept.flatMap(_.segments.map(_.split('\t').head)).toSet
+    val droppedManifests =
+      dropped.count(v => Files.deleteIfExists(manifestPath(dir, v)))
     val dataDir = Paths.get(dir, "data")
     val droppedFiles =
       if (!Files.isDirectory(dataDir)) 0
@@ -1255,26 +1112,9 @@ object ManifestTable {
     val present = (0 to cur).filter(v => Files.exists(manifestPath(dir, v)))
     val (dropped, retained) = present.partition { v =>
       v <= cur - keepLast && !tagged(v) &&
-        commitInstantMillis(dir, v).exists(_ < olderThanMillis)
+        Snapshot.read(dir, v).ts.exists(_ < olderThanMillis)
     }
-    val cloneKeep = if (force) Set.empty[String] else cloneReferencedFiles(dir)
-    val keepFiles = retained.flatMap(listFiles(dir, _)).toSet ++
-      retained.flatMap(dvEntries(dir, _).map(_.file)).toSet ++ cloneKeep
-    val keepSegs = retained.flatMap(listSegmentNames(dir, _)).toSet
-    val droppedManifests =
-      dropped.count(v => Files.deleteIfExists(manifestPath(dir, v)))
-    val dataDir = Paths.get(dir, "data")
-    val droppedFiles =
-      if (!Files.isDirectory(dataDir)) 0
-      else listDir(dataDir)
-        .filter(p => !keepFiles.contains(p.getFileName.toString))
-        .count(Files.deleteIfExists(_))
-    val metaDir = Paths.get(dir, "meta")
-    if (Files.isDirectory(metaDir))
-      listDir(metaDir)
-        .filter(p => !keepSegs.contains(p.getFileName.toString))
-        .foreach(Files.deleteIfExists(_))
-    (droppedManifests, droppedFiles.toInt)
+    sweep(dir, retained, dropped, force)
   }
 
   /** Incremental change read (CDC-style consumption): the rows ADDED between
@@ -1297,15 +1137,17 @@ object ManifestTable {
     * commit files, exactly once, with no re-bootstrap. */
   def changedFileNames(dir: String, fromV: Int, toV: Int): Seq[String] = {
     require(fromV <= toV, s"changedFileNames: fromV $fromV > toV $toV")
-    val versions = math.max(fromV, -1) + 1 to toV
-    versions.find(isMutate(dir, _)).foreach { v =>
+    val snaps = (math.max(fromV, -1) + 1 to toV).map(Snapshot.read(dir, _))
+    snaps.find(_.kind == Snapshot.Mutate).foreach { m =>
       throw new IllegalStateException(
-        s"change range ($fromV, $toV] crosses row-level mutation commit v$v; " +
-          "an append-only change feed cannot express it — re-bootstrap the consumer")
+        s"change range ($fromV, $toV] crosses row-level mutation commit " +
+          s"v${m.version}; an append-only change feed cannot express it — " +
+          "re-bootstrap the consumer")
     }
-    versions.filterNot(isRewrite(dir, _)).flatMap { v =>
+    snaps.filterNot(_.kind == Snapshot.Rewrite).flatMap { snap =>
+      val v = snap.version
       val before = if (v == 0) Set.empty[String] else listFiles(dir, v - 1).toSet
-      listFiles(dir, v).filterNot(before)
+      snap.names.filterNot(before)
     }
   }
 
@@ -1330,20 +1172,15 @@ object ManifestTable {
     * and at 100 TB an uncompacted table of per-batch files makes every scan
     * pay thousands of file opens for row groups that should be contiguous.
     * Returns the new committed version. */
-  def compact(s: SparkSession, dir: String, numFiles: Int = 1,
-      maxRetries: Int = 10): Int = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = currentVersion(dir)
-      require(v >= 0, s"no committed snapshot to compact in $dir")
-      val staged = stage(s, dir, readVersion(s, dir, v).repartition(numFiles))
+  def compact(s: SparkSession, dir: String, numFiles: Int = 1): Int =
+    commit(dir, Snapshot.Rewrite) { base =>
+      require(base.version >= 0, s"no committed snapshot to compact in $dir")
+      val staged = stage(s, dir,
+        readVersion(s, dir, base.version).repartition(numFiles))
       // DV/rename markers materialize into the rewrite; POLICIES do not —
       // they govern reads forever and must survive compaction
-      if (commitRewrite(dir, staged ++ carriedMeta(dir, v), v)) return v + 1
-      attempt += 1 // lost the race; staged files stay harmless orphans
+      Some(base.copy(files = staged, dvs = Nil, renames = Nil))
     }
-    throw new IllegalStateException(s"compact lost $maxRetries commit races in $dir")
-  }
 
   // ---------------------------------------------------------------------
   // File-level min/max statistics + data skipping (the Delta/Iceberg scan
@@ -1365,9 +1202,6 @@ object ManifestTable {
 
   /** Encode recorded ranges as the manifest-line stats suffix (the
     * writer-side counterpart of [[parseEntry]]). */
-  def encodeStatsPublic(stats: Map[String, ColRange]): String =
-    encodeStats(stats)
-
   private def encodeStats(stats: Map[String, ColRange]): String =
     stats.toSeq.sortBy(_._1).map { case (c, r) =>
       s"$c=${r.tag}:${r.min}:${r.max}"
@@ -1446,14 +1280,11 @@ object ManifestTable {
   private def hexDecode(s: String): Array[Byte] =
     s.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
 
-  /** Footer-harvested min/max for `cols` of one staged parquet file, or an
-    * empty map per column whose chunk statistics are absent (that column is
-    * then unprunable for this file — the safe degradation). Runs on the
-    * committing writer, O(footer) per NEW file only — the same moment Delta
-    * writes stats into its log. */
-  def footerStats(file: Path, cols: Seq[String]): Map[String, ColRange] =
-    withFooterBlocks(file)(statsFromBlocks(_, cols))
-
+  /** Footer-harvested min/max for `cols` from one staged parquet file's
+    * row groups, omitting each column whose chunk statistics are absent
+    * (that column is then unprunable for this file — the safe
+    * degradation). Runs on the committing writer, O(footer) per NEW file
+    * only — the same moment Delta writes stats into its log. */
   private def statsFromBlocks(
       blocks: Seq[org.apache.parquet.hadoop.metadata.BlockMetaData],
       cols: Seq[String]): Map[String, ColRange] = {
@@ -1548,12 +1379,9 @@ object ManifestTable {
     else bumpBytes(b.take(StrStatMaxBytes))
 
   /** Footer-harvested truncated UTF-8 min/max for STRING columns of one
-    * staged parquet file (columns whose statistics are absent, non-string,
-    * or unbumpable are simply missing — unprunable, the safe default). */
-  def footerStatsStr(file: Path,
-      cols: Seq[String]): Map[String, (Array[Byte], Array[Byte])] =
-    withFooterBlocks(file)(strStatsFromBlocks(_, cols))
-
+    * staged parquet file's row groups (columns whose statistics are
+    * absent, non-string, or unbumpable are simply missing — unprunable,
+    * the safe default). */
   private def strStatsFromBlocks(
       blocks: Seq[org.apache.parquet.hadoop.metadata.BlockMetaData],
       cols: Seq[String]): Map[String, (Array[Byte], Array[Byte])] = {
@@ -1645,10 +1473,7 @@ object ManifestTable {
     // from (an API table's first-ever append); a catalog table's
     // `INSERT … WHERE false` publishes nothing at all.
     val live = staged.filter(_._3._1 > 0)
-    val declared = {
-      val v = currentVersion(dir)
-      v >= 0 && declaredSchema(dir, v).isDefined
-    }
+    val declared = Snapshot.current(dir).schema.isDefined
     val kept =
       if (live.nonEmpty) live
       else if (declared) Seq.empty
@@ -1683,9 +1508,6 @@ object ManifestTable {
     * any row group does not record it — the safe degradation (COUNT(col)
     * stays scan-served, the CBO null estimate stays absent). With them,
     * `SELECT count(col)` is exact from metadata: rows − nulls. */
-  def footerNulls(file: Path, cols: Seq[String]): Map[String, Long] =
-    withFooterBlocks(file)(nullsFromBlocks(_, cols))
-
   private def nullsFromBlocks(
       blocks: Seq[org.apache.parquet.hadoop.metadata.BlockMetaData],
       cols: Seq[String]): Map[String, Long] =
@@ -1750,9 +1572,10 @@ object ManifestTable {
   def metadataAgg(dir: String, col: String): (Long, BigDecimal, BigDecimal) = {
     val v = currentVersion(dir)
     require(v >= 0, s"no committed snapshot in $dir")
-    require(dvLines(dir, v).isEmpty,
+    val snap = Snapshot.read(dir, v)
+    require(snap.dvs.isEmpty,
       "metadata aggregate is unknowable under deletion vectors — compact first")
-    val es = listLines(dir, v).map(parseEntry)
+    val es = snap.entries
     require(es.nonEmpty && es.forall(e => e.rows.isDefined && e.ranges.contains(col)),
       s"metadata aggregate needs a row count and a '$col' range on every file")
     (es.flatMap(_.rows).sum,
@@ -1964,8 +1787,6 @@ object ManifestTable {
       col == DvKeyCache.PosCol || targets.forall(counts.contains)
   }
 
-  private val DvPrefix = "#dv\t"
-
   private[sources] def encodeDv(e: DvEntry): String = {
     val base = s"#dv\t${e.file}\t${e.col}\t${e.targets.toSeq.sorted.mkString(",")}"
     // the counts leg only encodes when it prices every target — a
@@ -1977,16 +1798,7 @@ object ManifestTable {
     else base
   }
 
-  /** Raw `#dv` marker lines of version `v` (carried verbatim by successor
-    * commits that keep the same data files). */
-  def dvLines(dir: String, v: Int): Seq[String] = {
-    if (v < 0) return Seq.empty
-    new String(Files.readAllBytes(manifestPath(dir, v)), "UTF-8")
-      .split('\n').map(_.trim).filter(_.startsWith(DvPrefix)).toSeq
-  }
-
-  def dvEntries(dir: String, v: Int): Seq[DvEntry] =
-    dvLines(dir, v).map(parseDvLine)
+  def dvEntries(dir: String, v: Int): Seq[DvEntry] = Snapshot.read(dir, v).dvs
 
   /** Exact per-target doomed-live counts across EVERY marker of a
     * snapshot — positional bitmaps (exact by construction) plus keyed
@@ -2014,19 +1826,6 @@ object ManifestTable {
       .map(t => t -> (pos.getOrElse(t, 0L) + k.getOrElse(t, 0L))).toMap
   }
 
-  /** DV lines carried forward by a commit that keeps only `surviving` data
-    * files: targets intersect with the survivors; a DV left targeting
-    * nothing is dropped (its doomed rows were materialized away). */
-  private[sources] def carriedDvLines(dir: String, v: Int,
-      surviving: Set[String]): Seq[String] =
-    dvEntries(dir, v)
-      .map { e =>
-        val t = e.targets.intersect(surviving)
-        e.copy(targets = t, counts = e.counts.filter(kv => t(kv._1)))
-      }
-      .filter(_.targets.nonEmpty)
-      .map(encodeDv)
-
   /** Read data files `names` of version `v` with every applicable deletion
     * vector applied. Files are grouped by the exact DV set targeting them;
     * untargeted files scan clean, targeted groups anti-join against the
@@ -2035,8 +1834,10 @@ object ManifestTable {
     * anti-joins on the key column's evolved name — key values are
     * rename-invariant, so dooming on the evolved view is exact. */
   def readWithDvs(s: SparkSession, dir: String, v: Int,
-      names: Seq[String]): DataFrame =
-    applyDvs(s, dir, names, dvEntries(dir, v), renames(dir, v))
+      names: Seq[String]): DataFrame = {
+    val snap = Snapshot.read(dir, v)
+    applyDvs(s, dir, names, snap.dvs, snap.renames)
+  }
 
   /** Read data files `names` of version `v` with the snapshot's row- and
     * name-generation state applied: rename markers reconcile old-name
@@ -2044,20 +1845,22 @@ object ManifestTable {
     * composing freely since round 14. The engine-side read for partial
     * rewrites (filtered overwrite survivors). */
   def readFilesReconciled(s: SparkSession, dir: String, v: Int,
-      names: Seq[String]): DataFrame = {
-    val rns = renames(dir, v)
-    if (dvLines(dir, v).nonEmpty) readWithDvs(s, dir, v, names)
-    else if (rns.nonEmpty)
+      names: Seq[String]): DataFrame =
+    readReconciled(s, dir, Snapshot.read(dir, v), names)
+
+  private def readReconciled(s: SparkSession, dir: String, snap: Snapshot,
+      names: Seq[String]): DataFrame =
+    if (snap.dvs.nonEmpty) applyDvs(s, dir, names, snap.dvs, snap.renames)
+    else if (snap.renames.nonEmpty)
       applyRenames(s.read.option("mergeSchema", "true")
-        .parquet(names.map(dataPath(dir, _)): _*), rns)
+        .parquet(names.map(dataPath(dir, _)): _*), snap.renames)
     else s.read.parquet(names.map(dataPath(dir, _)): _*)
-  }
 
   /** Each column's FINAL name under version `v`'s rename chain (identity
     * when unrenamed) — what a rewrite that modernizes old-generation
     * rows should harvest stats under. */
   def finalNames(dir: String, v: Int): Map[String, String] =
-    collapseRenames(renames(dir, v))
+    collapseRenames(Snapshot.read(dir, v).renames)
 
   /** Collapse a rename chain into from → final-name (every historical
     * name of a column maps to its evolved name). One definition, shared
@@ -2133,7 +1936,7 @@ object ManifestTable {
     }.reduceLeft((a, b) => a.unionByName(b, allowMissingColumns = true))
   }
 
-  private def parseDvLine(l: String): DvEntry = {
+  private[sources] def parseDvLine(l: String): DvEntry = {
     val p = l.split('\t')
     DvEntry(p(1), p(2),
       if (p.length > 3) p(3).split(',').filter(_.nonEmpty).toSet else Set.empty,
@@ -2160,14 +1963,16 @@ object ManifestTable {
     * may be given under any generation; it normalizes to the evolved
     * name first. */
   private[sources] def aliasFamily(dir: String, v: Int,
-      col: String): Seq[String] = {
-    val fin = finalNames(dir, v)
+      col: String): Seq[String] = aliasFamily(Snapshot.read(dir, v), col)
+
+  private def aliasFamily(snap: Snapshot, col: String): Seq[String] = {
+    val fin = collapseRenames(snap.renames)
     val evolved = fin.getOrElse(col, col)
     evolved +: fin.collect { case (from, to) if to == evolved => from }.toSeq
   }
 
   /** Per-target DOOMED-LIVE counts for a NEW keyed marker: of `names`'
-    * rows still live under version `v`'s existing markers and renames,
+    * rows still live under `base`'s existing markers and renames,
     * how many key cells land in `keyDf` (one column under the EVOLVED
     * key name) — ONE distributed pass over exactly the candidate files,
     * the price of keeping COUNT(*), table history, and the LIMIT
@@ -2176,13 +1981,12 @@ object ManifestTable {
     * markers: a later delete never re-counts a row an earlier marker
     * already doomed. O(candidate files) driver rows come back — the
     * same bounded shape as the per-staged-file stats rows. */
-  private def doomedLiveCounts(s: SparkSession, dir: String, v: Int,
+  private def doomedLiveCounts(s: SparkSession, dir: String, base: Snapshot,
       names: Seq[String], col: String,
       keyDf: DataFrame): Map[String, Long] = {
     val tag = "__graft_src_file"
     val byBase = names.map(n => DvKeyCache.baseName(n) -> n).toMap
-    applyDvs(s, dir, names, dvEntries(dir, v), renames(dir, v),
-        tagCol = Some(tag))
+    applyDvs(s, dir, names, base.dvs, base.renames, tagCol = Some(tag))
       .select(col, tag)
       .join(broadcast(keyDf), Seq(col))
       .groupBy(tag).count()
@@ -2191,49 +1995,14 @@ object ManifestTable {
   }
 
   def deleteKeysMOR(s: SparkSession, dir: String, col: String,
-      keys: Seq[Long], maxRetries: Int = 10): Int = {
+      keys: Seq[Long]): Int = {
     import s.implicits._
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = currentVersion(dir)
-      require(v >= 0, s"no committed snapshot to delete from in $dir")
-      // rename markers compose (round 14): pre-rename files record their
-      // stats under OLD names, so pruning consults the whole alias
-      // family; the key parquet stages under the EVOLVED name, which is
-      // what the marker records and readers resolve per file generation
-      val family = aliasFamily(dir, v, col)
-      val evolved = family.head
-      val entries = listLines(dir, v).map(parseEntry)
-      val affected = entries.filter { e =>
-        family.flatMap(e.ranges.get).headOption.forall(r =>
-          keys.exists(x => BigDecimal(x) >= r.min && BigDecimal(x) <= r.max)) &&
-        family.flatMap(e.blooms.get).headOption.forall(bf =>
-          keys.exists(x => graft.functions.BloomSketch.contains(bf, x)))
-      }
-      if (affected.isEmpty) return v // nothing can hold the keys: no-op
-      // the staged key write and the doomed-live counting pass are
-      // independent actions — overlap them (guide §2.6)
-      val dvFileF = {
-        implicit val ec: scala.concurrent.ExecutionContext = overlapEc
-        scala.concurrent.Future(
-          stage(s, dir, keys.toDF(evolved).coalesce(1)))
-      }
-      // price the marker: exact doomed-live hits per candidate file, so
-      // the metadata COUNT/history/LIMIT tiers stay armed (round 15)
-      val hits = doomedLiveCounts(s, dir, v, affected.map(_.name),
-        evolved, keys.distinct.toDF(evolved))
-      val dvFile = scala.concurrent.Await.result(dvFileF,
-        scala.concurrent.duration.Duration.Inf)
-      require(dvFile.size == 1)
-      val dv = encodeDv(DvEntry(dvFile.head, evolved,
-        affected.map(_.name).toSet,
-        affected.map(e => e.name -> hits.getOrElse(e.name, 0L)).toMap))
-      val body = listLines(dir, v) ++ dvLines(dir, v) ++
-        renameLines(dir, v) ++ carriedMeta(dir, v) :+ dv
-      if (commitMutate(dir, body, v)) return v + 1
-      attempt += 1 // lost the race; the staged DV stays a harmless orphan
+    morDelete(s, dir, col, keys) { (family, e) =>
+      family.flatMap(e.ranges.get).headOption.forall(r =>
+        keys.exists(x => BigDecimal(x) >= r.min && BigDecimal(x) <= r.max)) &&
+      family.flatMap(e.blooms.get).headOption.forall(bf =>
+        keys.exists(x => graft.functions.BloomSketch.contains(bf, x)))
     }
-    throw new IllegalStateException(s"MOR delete lost $maxRetries races in $dir")
   }
 
   /** [[deleteKeysMOR]] for a STRING key column — the GDPR delete
@@ -2244,46 +2013,54 @@ object ManifestTable {
     * parquet, and readers binary-search sorted raw byte arrays exactly
     * like integral keys. Stats-less files are conservatively targeted. */
   def deleteStrKeysMOR(s: SparkSession, dir: String, col: String,
-      keys: Seq[String], maxRetries: Int = 10): Int = {
+      keys: Seq[String]): Int = {
     import s.implicits._
     val keyBytes = keys.map(_.getBytes("UTF-8"))
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = currentVersion(dir)
-      require(v >= 0, s"no committed snapshot to delete from in $dir")
-      val family = aliasFamily(dir, v, col)
-      val evolved = family.head
-      val entries = listLines(dir, v).map(parseEntry)
-      val affected = entries.filter { e =>
-        family.flatMap(e.strRanges.get).headOption.forall { case (lo, hi) =>
-          keyBytes.exists(x =>
-            java.util.Arrays.compareUnsigned(lo, x) <= 0 &&
-              java.util.Arrays.compareUnsigned(x, hi) <= 0)
-        }
+    morDelete(s, dir, col, keys) { (family, e) =>
+      family.flatMap(e.strRanges.get).headOption.forall { case (lo, hi) =>
+        keyBytes.exists(x =>
+          java.util.Arrays.compareUnsigned(lo, x) <= 0 &&
+            java.util.Arrays.compareUnsigned(x, hi) <= 0)
       }
-      if (affected.isEmpty) return v // nothing can hold the keys: no-op
-      // overlap the independent staged-key write with the counting pass
-      // (guide §2.6), exactly like deleteKeysMOR
-      val dvFileF = {
-        implicit val ec: scala.concurrent.ExecutionContext = overlapEc
-        scala.concurrent.Future(
-          stage(s, dir, keys.toDF(evolved).coalesce(1)))
-      }
-      val hits = doomedLiveCounts(s, dir, v, affected.map(_.name),
-        evolved, keys.distinct.toDF(evolved))
-      val dvFile = scala.concurrent.Await.result(dvFileF,
-        scala.concurrent.duration.Duration.Inf)
-      require(dvFile.size == 1)
-      val dv = encodeDv(DvEntry(dvFile.head, evolved,
-        affected.map(_.name).toSet,
-        affected.map(e => e.name -> hits.getOrElse(e.name, 0L)).toMap))
-      val body = listLines(dir, v) ++ dvLines(dir, v) ++
-        renameLines(dir, v) ++ carriedMeta(dir, v) :+ dv
-      if (commitMutate(dir, body, v)) return v + 1
-      attempt += 1 // lost the race; the staged DV stays a harmless orphan
     }
-    throw new IllegalStateException(s"MOR delete lost $maxRetries races in $dir")
   }
+
+  /** The MOR delete both key types share: `holds` admits the files that
+    * can hold a key (given the key column's alias family — rename markers
+    * compose since round 14: pre-rename files record their stats under
+    * OLD names), the keys stage as one parquet under the EVOLVED name —
+    * what the marker records and readers resolve per file generation —
+    * and one `#dv` marker targeting the admitted files publishes as a
+    * `#mutate` commit. A no-op when no file can hold any key. */
+  private def morDelete[K: org.apache.spark.sql.Encoder](s: SparkSession,
+      dir: String, col: String, keys: Seq[K])(
+      holds: (Seq[String], FileEntry) => Boolean): Int =
+    commit(dir, Snapshot.Mutate) { base =>
+      require(base.version >= 0, s"no committed snapshot to delete from in $dir")
+      val family = aliasFamily(base, col)
+      val evolved = family.head
+      val affected = base.entries.filter(holds(family, _))
+      if (affected.isEmpty) None
+      else {
+        // the staged key write and the doomed-live counting pass are
+        // independent actions — overlap them (guide §2.6)
+        val dvFileF = {
+          implicit val ec: scala.concurrent.ExecutionContext = overlapEc
+          scala.concurrent.Future(
+            stage(s, dir, s.createDataset(keys).toDF(evolved).coalesce(1)))
+        }
+        // price the marker: exact doomed-live hits per candidate file, so
+        // the metadata COUNT/history/LIMIT tiers stay armed (round 15)
+        val hits = doomedLiveCounts(s, dir, base, affected.map(_.name),
+          evolved, s.createDataset(keys.distinct).toDF(evolved))
+        val dvFile = scala.concurrent.Await.result(dvFileF,
+          scala.concurrent.duration.Duration.Inf)
+        require(dvFile.size == 1)
+        Some(base.copy(dvs = base.dvs :+ DvEntry(dvFile.head, evolved,
+          affected.map(_.name).toSet,
+          affected.map(e => e.name -> hits.getOrElse(e.name, 0L)).toMap)))
+      }
+    }
 
   /** RETRO-PRICE uncounted keyed markers (round 15): tables whose `#dv`
     * markers predate delete-time count recording decline the metadata
@@ -2299,57 +2076,50 @@ object ManifestTable {
     * leave the tiers declined anyway) or the arithmetic goes negative
     * (a damaged marker — refuse, never guess). Returns the new version
     * (current when every marker is already counted). */
-  def priceDvs(s: SparkSession, dir: String, maxRetries: Int = 10): Int = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = currentVersion(dir)
-      require(v >= 0, s"no committed snapshot to price in $dir")
-      val dvs = dvEntries(dir, v)
+  def priceDvs(s: SparkSession, dir: String): Int =
+    commit(dir, Snapshot.Rewrite) { base =>
+      require(base.version >= 0, s"no committed snapshot to price in $dir")
+      val dvs = base.dvs
       val uncounted = dvs.filterNot(_.fullyCounted)
-      if (uncounted.isEmpty) return v // nothing to price: no-op
-      val entries = listLines(dir, v).map(parseEntry)
-      val listed = entries.iterator.map(_.name).toSet
-      val rowsOf = entries.flatMap(e => e.rows.map(e.name -> _)).toMap
-      val targets = uncounted.flatMap(_.targets).distinct.filter(listed)
-      targets.foreach(t => require(rowsOf.contains(t),
-        s"price_dvs: $t lacks a recorded row count — cannot price"))
-      // one tagged pass, ALL markers applied → current live per target
-      // (every still-listed target gone stale from the manifest would
-      // leave nothing to measure — all markers then price to zeros)
-      val tag = "__graft_src_file"
-      val byBase = targets.map(t => DvKeyCache.baseName(t) -> t).toMap
-      val live =
-        if (targets.isEmpty) Map.empty[String, Long]
-        else applyDvs(s, dir, targets, dvs, renames(dir, v),
-            tagCol = Some(tag))
-          .groupBy(col(tag)).count().collect()
-          .map(r => byBase(r.getString(0)) -> r.getLong(1)).toMap
-      val counted = doomedCountsOfCounted(dir, dvs)
-      val remainder = targets.map { t =>
-        val r = rowsOf(t) - live.getOrElse(t, 0L) - counted.getOrElse(t, 0L)
-        require(r >= 0, s"price_dvs: negative doom remainder for $t " +
-          s"(rows=${rowsOf(t)} live=${live.getOrElse(t, 0L)} " +
-          s"counted=${counted.getOrElse(t, 0L)}) — damaged marker state")
-        t -> r
-      }.toMap
-      // firstFor only holds LISTED targets, so stale targets fall
-      // through to the zero branch below with no extra existence check
-      val firstFor = targets.map(t =>
-        t -> uncounted.find(_.targets(t)).get).toMap
-      val newDvLines = dvs.map { m =>
-        if (m.fullyCounted) encodeDv(m)
-        else encodeDv(m.copy(counts = m.targets.map(t =>
-          t -> (if (firstFor.get(t) contains m) remainder(t)
-                else 0L)).toMap))
+      if (uncounted.isEmpty) None // nothing to price: no-op
+      else {
+        val entries = base.entries
+        val listed = entries.iterator.map(_.name).toSet
+        val rowsOf = entries.flatMap(e => e.rows.map(e.name -> _)).toMap
+        val targets = uncounted.flatMap(_.targets).distinct.filter(listed)
+        targets.foreach(t => require(rowsOf.contains(t),
+          s"price_dvs: $t lacks a recorded row count — cannot price"))
+        // one tagged pass, ALL markers applied → current live per target
+        // (every still-listed target gone stale from the manifest would
+        // leave nothing to measure — all markers then price to zeros)
+        val tag = "__graft_src_file"
+        val byBase = targets.map(t => DvKeyCache.baseName(t) -> t).toMap
+        val live =
+          if (targets.isEmpty) Map.empty[String, Long]
+          else applyDvs(s, dir, targets, dvs, base.renames,
+              tagCol = Some(tag))
+            .groupBy(col(tag)).count().collect()
+            .map(r => byBase(r.getString(0)) -> r.getLong(1)).toMap
+        val counted = doomedCountsOfCounted(dir, dvs)
+        val remainder = targets.map { t =>
+          val r = rowsOf(t) - live.getOrElse(t, 0L) - counted.getOrElse(t, 0L)
+          require(r >= 0, s"price_dvs: negative doom remainder for $t " +
+            s"(rows=${rowsOf(t)} live=${live.getOrElse(t, 0L)} " +
+            s"counted=${counted.getOrElse(t, 0L)}) — damaged marker state")
+          t -> r
+        }.toMap
+        // firstFor only holds LISTED targets, so stale targets fall
+        // through to the zero branch below with no extra existence check
+        val firstFor = targets.map(t =>
+          t -> uncounted.find(_.targets(t)).get).toMap
+        Some(base.copy(dvs = dvs.map { m =>
+          if (m.fullyCounted) m
+          else m.copy(counts = m.targets.map(t =>
+            t -> (if (firstFor.get(t) contains m) remainder(t)
+                  else 0L)).toMap)
+        }))
       }
-      val body = listLines(dir, v) ++ newDvLines ++ renameLines(dir, v) ++
-        carriedMeta(dir, v)
-      if (commitRewrite(dir, body, v)) return v + 1
-      attempt += 1
     }
-    throw new IllegalStateException(
-      s"price_dvs lost $maxRetries commit races in $dir")
-  }
 
   /** DV MAINTENANCE — consolidate accumulated `#dv` markers without
     * touching any data file: afterwards every target file is referenced
@@ -2368,12 +2138,10 @@ object ManifestTable {
     * so incremental consumers skip it, exactly like compaction. Cost ∝
     * deleted keys, never table size. Returns the new version (the
     * current one when no file is multi-targeted). */
-  def consolidateDvs(s: SparkSession, dir: String, maxRetries: Int = 10): Int = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = currentVersion(dir)
-      require(v >= 0, s"no committed snapshot to consolidate in $dir")
-      val dvs = dvEntries(dir, v)
+  def consolidateDvs(s: SparkSession, dir: String): Int =
+    commit(dir, Snapshot.Rewrite) { base =>
+      require(base.version >= 0, s"no committed snapshot to consolidate in $dir")
+      val dvs = base.dvs
       val groups: Seq[(String, Seq[String], Seq[String])] =
         dvs.flatMap(m => m.targets.toSeq.map(t => (m.col, t, m.file)))
           .groupBy { case (c, t, _) => (c, t) }
@@ -2382,86 +2150,82 @@ object ManifestTable {
           .groupBy { case (c, _, fs) => (c, fs) }
           .map { case ((c, fs), ts) => (c, fs, ts.map(_._2).sorted) }
           .toSeq
-      if (groups.forall(_._2.size <= 1)) return v
-      // recorded doomed-live counts survive consolidation: each
-      // (marker, target) lands in exactly one group, so restricting a
-      // carried marker's counts to its group targets — and SUMMING
-      // across a merged group's markers — keeps the per-target totals
-      // exact; a group with any uncounted marker merges uncounted
-      def countsFor(c: String, keyFiles: Seq[String],
-          targets: Seq[String]): Map[String, Long] = {
-        val ms = dvs.filter(m => m.col == c && keyFiles.contains(m.file))
-        if (ms.exists(m => !m.targets.forall(m.counts.contains)))
-          Map.empty
-        else targets.map(t => t ->
-          ms.filter(_.targets(t)).map(_.counts.getOrElse(t, 0L)).sum).toMap
-      }
-      val newLines = groups.sortBy(g => (g._1, g._2.mkString(",")))
-          .flatMap { case (c, keyFiles, targets) =>
-        if (keyFiles.size == 1) // already minimal for these targets: the
-          // original key file carries, restricted to exactly this group
-          Seq(encodeDv(DvEntry(keyFiles.head, c, targets.toSet,
-            countsFor(c, keyFiles, targets))))
-        else if (c == "_pos") {
-          // positional markers OR their roaring bitmaps per target ON
-          // THE DRIVER — each positions file is compressed and bounded
-          // by graft.dv.maxBytes, so the merge is metadata-scale work
-          // (no Spark job); targets restrict naturally because lookups
-          // key by the target's basename
-          val merged = targets.map { t =>
-            val rb = new org.roaringbitmap.RoaringBitmap()
-            keyFiles.foreach(f =>
-              rb.or(DvKeyCache.doomedPositions(dataPath(dir, f), t)))
-            rb.runOptimize()
-            DvKeyCache.baseName(t) -> rb
-          }.filter(!_._2.isEmpty)
-          // a merged positions file past the per-file byte budget would
-          // make every subsequent scan REFUSE (the loader's loud
-          // maxBytes bound counts the WHOLE file) — decline merging
-          // this group and keep its original markers: reads stay
-          // exactly as fast as before, and the consolidation of other
-          // groups still lands
-          if (merged.map(_._2.serializedSizeInBytes().toLong).sum >
-              DvKeyCache.maxDvBytes)
-            keyFiles.map(f => encodeDv(DvEntry(f, c, targets.toSet)))
-          else {
-            val staged = GraftDeltaWriter.writePositionsFile(
-              dir, merged.iterator, "merged")
-            Seq(encodeDv(DvEntry(staged, c, targets.toSet)))
-          }
-        } else {
-          import org.apache.spark.sql.functions.{col => fcol}
-          // keyed markers union their single key column
-          val union = s.read.parquet(keyFiles.map(dataPath(dir, _)): _*)
-            .select(fcol(c))
-            .distinct().coalesce(1)
-            .persist() // counted once for the budget, staged once — not
-          try {        // two full read+distinct passes
-            // a merged key file past the reader's per-file budget would
-            // make every subsequent scan of the targeted files REFUSE
-            // (DvKeyCache.doomed's loud maxKeys bound) — decline merging
-            // this group and keep its original markers, same contract
-            // as the positional byte-budget decline
-            if (union.count() > DvKeyCache.maxKeys)
-              keyFiles.map(f => encodeDv(DvEntry(f, c, targets.toSet,
-                countsFor(c, Seq(f), targets))))
-            else {
-              val staged = stage(s, dir, union)
-              require(staged.size == 1)
-              Seq(encodeDv(DvEntry(staged.head, c, targets.toSet,
-                countsFor(c, keyFiles, targets))))
-            }
-          } finally union.unpersist(false)
+      if (groups.forall(_._2.size <= 1)) None
+      else {
+        // recorded doomed-live counts survive consolidation: each
+        // (marker, target) lands in exactly one group, so restricting a
+        // carried marker's counts to its group targets — and SUMMING
+        // across a merged group's markers — keeps the per-target totals
+        // exact; a group with any uncounted marker merges uncounted
+        def countsFor(c: String, keyFiles: Seq[String],
+            targets: Seq[String]): Map[String, Long] = {
+          val ms = dvs.filter(m => m.col == c && keyFiles.contains(m.file))
+          if (ms.exists(m => !m.targets.forall(m.counts.contains)))
+            Map.empty
+          else targets.map(t => t ->
+            ms.filter(_.targets(t)).map(_.counts.getOrElse(t, 0L)).sum).toMap
         }
+        val newDvs = groups.sortBy(g => (g._1, g._2.mkString(",")))
+            .flatMap { case (c, keyFiles, targets) =>
+          if (keyFiles.size == 1) // already minimal for these targets: the
+            // original key file carries, restricted to exactly this group
+            Seq(DvEntry(keyFiles.head, c, targets.toSet,
+              countsFor(c, keyFiles, targets)))
+          else if (c == "_pos") {
+            // positional markers OR their roaring bitmaps per target ON
+            // THE DRIVER — each positions file is compressed and bounded
+            // by graft.dv.maxBytes, so the merge is metadata-scale work
+            // (no Spark job); targets restrict naturally because lookups
+            // key by the target's basename
+            val merged = targets.map { t =>
+              val rb = new org.roaringbitmap.RoaringBitmap()
+              keyFiles.foreach(f =>
+                rb.or(DvKeyCache.doomedPositions(dataPath(dir, f), t)))
+              rb.runOptimize()
+              DvKeyCache.baseName(t) -> rb
+            }.filter(!_._2.isEmpty)
+            // a merged positions file past the per-file byte budget would
+            // make every subsequent scan REFUSE (the loader's loud
+            // maxBytes bound counts the WHOLE file) — decline merging
+            // this group and keep its original markers: reads stay
+            // exactly as fast as before, and the consolidation of other
+            // groups still lands
+            if (merged.map(_._2.serializedSizeInBytes().toLong).sum >
+                DvKeyCache.maxDvBytes)
+              keyFiles.map(f => DvEntry(f, c, targets.toSet))
+            else {
+              val staged = GraftDeltaWriter.writePositionsFile(
+                dir, merged.iterator, "merged")
+              Seq(DvEntry(staged, c, targets.toSet))
+            }
+          } else {
+            import org.apache.spark.sql.functions.{col => fcol}
+            // keyed markers union their single key column
+            val union = s.read.parquet(keyFiles.map(dataPath(dir, _)): _*)
+              .select(fcol(c))
+              .distinct().coalesce(1)
+              .persist() // counted once for the budget, staged once — not
+            try {        // two full read+distinct passes
+              // a merged key file past the reader's per-file budget would
+              // make every subsequent scan of the targeted files REFUSE
+              // (DvKeyCache.doomed's loud maxKeys bound) — decline merging
+              // this group and keep its original markers, same contract
+              // as the positional byte-budget decline
+              if (union.count() > DvKeyCache.maxKeys)
+                keyFiles.map(f => DvEntry(f, c, targets.toSet,
+                  countsFor(c, Seq(f), targets)))
+              else {
+                val staged = stage(s, dir, union)
+                require(staged.size == 1)
+                Seq(DvEntry(staged.head, c, targets.toSet,
+                  countsFor(c, keyFiles, targets)))
+              }
+            } finally union.unpersist(false)
+          }
+        }
+        Some(base.copy(dvs = newDvs))
       }
-      val body = listLines(dir, v) ++ newLines ++
-        renameLines(dir, v) ++ carriedMeta(dir, v)
-      if (commitRewrite(dir, body, v)) return v + 1
-      attempt += 1 // lost the race; staged unions stay harmless orphans
     }
-    throw new IllegalStateException(
-      s"consolidateDvs lost $maxRetries commit races in $dir")
-  }
 
   // ---------------------------------------------------------------------
   // Schema evolution: RENAME COLUMN as carried metadata (the column-
@@ -2479,36 +2243,35 @@ object ManifestTable {
   // is always available.
   // ---------------------------------------------------------------------
 
-  private val RenamePrefix = "#rename\t"
-
-  def renameLines(dir: String, v: Int): Seq[String] = {
-    if (v < 0) return Seq.empty
-    new String(Files.readAllBytes(manifestPath(dir, v)), "UTF-8")
-      .split('\n').map(_.trim).filter(_.startsWith(RenamePrefix)).toSeq
-  }
-
   /** (from, to) renames of version `v`, in application order. */
   def renames(dir: String, v: Int): Seq[(String, String)] =
-    renameLines(dir, v).map { l =>
-      val p = l.split('\t'); (p(1), p(2))
-    }
+    Snapshot.read(dir, v).renames
 
-  /** Rename side-effects on carried metadata (round 13): dependent
-    * property VALUES migrate with the column — the `graft.write.sort/
-    * ndv/sum` name lists, the `graft.partitioning` spec's column token,
-    * and the identity frontier key `graft.identity.<col>` (whose loss
-    * would silently RESTART identity assignment and collide ids) —
-    * while expression-bearing declarations that reference the old name
-    * (CHECK constraints, generation expressions) REFUSE the rename,
-    * the same conservative word-boundary rule the policy guard uses. */
-  /** Refuse renaming TO a name the chain already renamed AWAY: old
-    * files' physical column of that name would mean a DIFFERENT logical
-    * column than new files', an ambiguity no reader can reconcile (the
-    * scan would refuse the table forever) — fail the rename instead. */
-  private def guardRenameTarget(dir: String, v: Int, to: String): Unit =
-    require(!renames(dir, v).exists(_._1 == to),
+  /** The guards every rename `from → to` passes against `base`:
+    *  - a policy referencing the renamed column would silently stop
+    *    matching the evolved view — refuse rather than mis-govern;
+    *  - renaming TO a name the chain already renamed AWAY: old files'
+    *    physical column of that name would mean a DIFFERENT logical
+    *    column than new files', an ambiguity no reader can reconcile (the
+    *    scan would refuse the table forever);
+    *  - renaming AWAY a name the chain already renamed away once (RENAME
+    *    a→b; ADD COLUMN a; RENAME a→c): two chain entries with the same
+    *    FROM would make a physical 'a' column AMBIGUOUS — logical b in
+    *    pre-re-add files, logical c after — and the collapsed chain would
+    *    silently serve old files' b bytes as c.
+    * Compacting first is always available for the last two. */
+  private def guardRename(base: Snapshot, from: String, to: String): Unit = {
+    require(!base.policyMentions(from),
+      s"rename of '$from' refused: a governance policy references it — " +
+        "re-declare the policy against the new name first")
+    require(!base.renames.exists(_._1 == to),
       s"rename to '$to' refused: the name was already renamed away and " +
         "old files still carry it physically — compact first")
+    require(!base.renames.exists(_._1 == from),
+      s"rename of '$from' refused: the name was renamed away and " +
+        "re-added — old files' physical column means a different " +
+        "logical column; compact first")
+  }
 
   /** Rewrite every reference to column `from` into `to` inside an
     * expression's SQL text — by PARSING and RESOLVING it against the
@@ -2560,26 +2323,31 @@ object ManifestTable {
     })
   }
 
-  private def migrateRenameProps(props: Seq[String],
-      declaredJson: Option[String], from: String, to: String): Seq[String] = {
+  /** Rename side-effects on carried metadata (round 13): dependent
+    * property VALUES migrate with the column — the `graft.write.sort/
+    * ndv/sum` name lists, the `graft.partitioning` spec's column token,
+    * and the identity frontier key `graft.identity.<col>` (whose loss
+    * would silently RESTART identity assignment and collide ids) —
+    * while CHECK constraints that reference the old name are rewritten
+    * against the pre-rename schema (round 14), or refuse without one. */
+  private def migrateRenameProps(props: Seq[(String, String)],
+      declaredJson: Option[String], from: String,
+      to: String): Seq[(String, String)] = {
     val nameRe = ("\\b" + java.util.regex.Pattern.quote(from) + "\\b").r
     val preSchema = declaredJson.map(j =>
       org.apache.spark.sql.types.DataType.fromJson(j)
         .asInstanceOf[org.apache.spark.sql.types.StructType])
-    props.map { line =>
-      val p = line.split('\t')
-      val k = p(1)
-      val value = if (p.length > 2) p(2) else ""
+    props.map { case (k, value) =>
       def listMigrated: String = value.split(',').map(_.trim)
         .map(n => if (n == from) to else n).mkString(",")
       k match {
         case "graft.write.sort" | "graft.write.ndv" | "graft.write.sum" =>
-          s"$PropPrefix$k\t$listMigrated"
+          k -> listMigrated
         case "graft.partitioning" =>
-          s"$PropPrefix$k\t" + nameRe.replaceAllIn(value,
+          k -> nameRe.replaceAllIn(value,
             java.util.regex.Matcher.quoteReplacement(to))
         case _ if k == s"graft.identity.$from" =>
-          s"${PropPrefix}graft.identity.$to\t$value"
+          s"graft.identity.$to" -> value
         case _ if k.startsWith("graft.constraint.") &&
             nameRe.findFirstIn(
               java.net.URLDecoder.decode(value, "UTF-8")).isDefined =>
@@ -2593,69 +2361,41 @@ object ManifestTable {
             s"rename of '$from' refused: CHECK constraint " +
               s"'${k.stripPrefix("graft.constraint.")}' references it and " +
               "the table has no declared schema to re-resolve it against"))
-          val rewritten = renameInExprSql(pred, pre, from, to)
-          s"$PropPrefix$k\t" +
-            java.net.URLEncoder.encode(rewritten, "UTF-8")
-        case _ => line
+          k -> java.net.URLEncoder.encode(
+            renameInExprSql(pred, pre, from, to), "UTF-8")
+        case _ => k -> value
       }
     }
   }
 
+  /** The declared schema `st` with column `from` renamed to `to`;
+    * generation expressions referencing the old name REWRITE to the new
+    * one (round 14) before the field itself renames. */
+  private def renamedSchema(st: org.apache.spark.sql.types.StructType,
+      from: String, to: String): org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType(
+      rewriteGenExprs(st, from, to).fields.map(f =>
+        if (f.name == from) f.copy(name = to) else f))
+
   /** Publish a column rename as a metadata-only `#mutate` commit (schema
     * changes are inexpressible in an append-only feed — consumers
-    * re-bootstrap, the delete/update honesty contract). */
-  def renameColumn(dir: String, from: String, to: String,
-      maxRetries: Int = 10): Int = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = currentVersion(dir)
-      require(v >= 0, s"no committed snapshot to rename in $dir")
-      // a policy referencing the renamed column would silently stop
-      // matching the evolved view — refuse rather than mis-govern
-      // (word-boundary match is conservative: false refusals possible,
-      // silent policy breakage never)
-      val nameRe = ("\\b" + java.util.regex.Pattern.quote(from) + "\\b").r
-      require(!policyLines(dir, v).exists(l => nameRe.findFirstIn(l).isDefined),
-        s"rename of '$from' refused: a governance policy references it — " +
-          "re-declare the policy against the new name first")
-      guardRenameTarget(dir, v, to)
-      // refuse renaming AWAY a name the chain already renamed away once
-      // (RENAME a→b; ADD COLUMN a; RENAME a→c): two chain entries with
-      // the same FROM would make a physical 'a' column AMBIGUOUS —
-      // logical b in pre-re-add files, logical c after — and the
-      // collapsed chain would silently serve old files' b bytes as c.
-      // Like the target guard, compacting first is always available.
-      require(!renames(dir, v).exists(_._1 == from),
-        s"rename of '$from' refused: the name was renamed away and " +
-          "re-added — old files' physical column means a different " +
-          "logical column; compact first")
-      // the declared schema (empty-table authority) follows the rename;
-      // generation expressions referencing the old name REWRITE to the
-      // new one (round 14) before the field itself renames
-      val evolvedSchema = declaredSchema(dir, v).map { j =>
-        val st = org.apache.spark.sql.types.DataType.fromJson(j)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-        val renamed = org.apache.spark.sql.types.StructType(
-          rewriteGenExprs(st, from, to).fields.map(f =>
-            if (f.name == from) f.copy(name = to) else f))
-        s"$SchemaPrefix${renamed.json}"
-      }.toSeq
-      // live deletion vectors carry VERBATIM (round 14): a marker's key
-      // column keeps its name AT DELETE TIME — that name always matches
-      // the staged key parquet's physical column, and readers resolve it
-      // to the evolved name through the rename chain per file generation
-      val body = listLines(dir, v) ++ dvLines(dir, v) ++
-        renameLines(dir, v) ++
-        policyLines(dir, v) ++
-        migrateRenameProps(propLines(dir, v), declaredSchema(dir, v),
-          from, to) ++
-        evolvedSchema ++
-        epochLines(dir, v) :+ s"#rename\t$from\t$to"
-      if (commitMutate(dir, body, v)) return v + 1
-      attempt += 1
+    * re-bootstrap, the delete/update honesty contract). The declared
+    * schema (empty-table authority) follows the rename. Live deletion
+    * vectors carry VERBATIM (round 14): a marker's key column keeps its
+    * name AT DELETE TIME — that name always matches the staged key
+    * parquet's physical column, and readers resolve it to the evolved
+    * name through the rename chain per file generation. */
+  def renameColumn(dir: String, from: String, to: String): Int =
+    commit(dir, Snapshot.Mutate) { base =>
+      require(base.version >= 0, s"no committed snapshot to rename in $dir")
+      guardRename(base, from, to)
+      Some(base.copy(renames = base.renames :+ (from -> to),
+        props = migrateRenameProps(base.props, base.schema, from, to),
+        schema = base.schema.map(j => renamedSchema(
+          org.apache.spark.sql.types.DataType.fromJson(j)
+            .asInstanceOf[org.apache.spark.sql.types.StructType],
+          from, to).json)))
     }
-    throw new IllegalStateException(s"rename lost $maxRetries races in $dir")
-  }
 
   /** Reconcile a cross-generation scan with the rename chain: coalesce
     * old-name columns into their new names, in marker order. */
@@ -2683,35 +2423,20 @@ object ManifestTable {
   // refuses to silently cross, the same honesty contract as deletes.
   // ---------------------------------------------------------------------
 
-  private val PolicyPrefix = "#policy\t"
-
-  def policyLines(dir: String, v: Int): Seq[String] = {
-    if (v < 0) return Seq.empty
-    new String(Files.readAllBytes(manifestPath(dir, v)), "UTF-8")
-      .split('\n').map(_.trim).filter(_.startsWith(PolicyPrefix)).toSeq
-  }
-
   /** Publish (REPLACING any prior policy set) column masks and an optional
     * row filter, all as SQL expression strings evaluated at read time. */
   def setPolicy(dir: String, masks: Map[String, String],
-      rowFilter: Option[String] = None, maxRetries: Int = 10): Int = {
+      rowFilter: Option[String] = None): Int = {
     (masks.keys ++ masks.values ++ rowFilter).foreach(s =>
       require(!s.contains('\t') && !s.contains('\n'),
         s"policy expressions may not contain tabs/newlines: $s"))
-    val lines = masks.toSeq.sortBy(_._1)
-      .map { case (c, e) => s"#policy\tmask\t$c\t$e" } ++
-      rowFilter.map(e => s"#policy\tfilter\t$e")
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = currentVersion(dir)
-      require(v >= 0, s"no committed snapshot to set policy on in $dir")
-      val body = listLines(dir, v) ++ dvLines(dir, v) ++
-        renameLines(dir, v) ++ propLines(dir, v) ++
-        schemaLines(dir, v) ++ epochLines(dir, v) ++ lines
-      if (commitMutate(dir, body, v)) return v + 1
-      attempt += 1
+    val policies = masks.toSeq.sortBy(_._1)
+      .map { case (c, e) => Seq("mask", c, e) } ++
+      rowFilter.map(e => Seq("filter", e))
+    commit(dir, Snapshot.Mutate) { base =>
+      require(base.version >= 0, s"no committed snapshot to set policy on in $dir")
+      Some(base.copy(policies = policies))
     }
-    throw new IllegalStateException(s"setPolicy lost $maxRetries races in $dir")
   }
 
   /** The governed read: the snapshot with the metadata-carried row filter
@@ -2719,10 +2444,10 @@ object ManifestTable {
   def readGoverned(s: SparkSession, dir: String): DataFrame = {
     val v = currentVersion(dir)
     val base = readVersion(s, dir, v)
-    val pols = policyLines(dir, v).map(_.split('\t'))
-    val filtered = pols.collect { case Array(_, "filter", e) => e }
+    val pols = Snapshot.read(dir, v).policies
+    val filtered = pols.collect { case Seq("filter", e) => e }
       .foldLeft(base)((df, e) => df.filter(expr(e)))
-    pols.collect { case Array(_, "mask", c, e) => (c, e) }
+    pols.collect { case Seq("mask", c, e) => (c, e) }
       .foldLeft(filtered)((df, p) => df.withColumn(p._1, expr(p._2)))
   }
 
@@ -2734,74 +2459,29 @@ object ManifestTable {
   // compaction, restore, and clones; they never materialize away.
   // ---------------------------------------------------------------------
 
-  private val PropPrefix = "#prop\t"
-
-  def propLines(dir: String, v: Int): Seq[String] = {
-    if (v < 0) return Seq.empty
-    new String(Files.readAllBytes(manifestPath(dir, v)), "UTF-8")
-      .split('\n').map(_.trim).filter(_.startsWith(PropPrefix)).toSeq
-  }
-
   /** Current table properties of version `v` as a map. */
   def tableProperties(dir: String, v: Int): Map[String, String] =
-    propLines(dir, v).map { l =>
-      val p = l.split('\t'); p(1) -> (if (p.length > 2) p(2) else "")
-    }.toMap
+    Snapshot.read(dir, v).properties
 
   /** Publish (or replace) one table property. A metadata-only ordinary
     * commit: the data did not change, so the change feed crosses freely. */
-  def setTableProperty(dir: String, key: String, value: String,
-      maxRetries: Int = 10): Int = {
+  def setTableProperty(dir: String, key: String, value: String): Int = {
     require(!key.contains('\t') && !key.contains('\n') &&
       !value.contains('\t') && !value.contains('\n'),
       "property keys/values may not contain tabs/newlines")
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = currentVersion(dir)
-      require(v >= 0, s"no committed snapshot to set properties on in $dir")
-      val kept = propLines(dir, v).filterNot(_.startsWith(s"$PropPrefix$key\t"))
-      val body = listLines(dir, v) ++ dvLines(dir, v) ++
-        renameLines(dir, v) ++ policyLines(dir, v) ++
-        schemaLines(dir, v) ++ epochLines(dir, v) ++ kept :+
-        s"#prop\t$key\t$value"
-      if (commit(dir, body, v)) return v + 1
-      attempt += 1
+    commit(dir, Snapshot.Append) { base =>
+      require(base.version >= 0, s"no committed snapshot to set properties on in $dir")
+      Some(base.withProp(key, value))
     }
-    throw new IllegalStateException(s"setTableProperty lost $maxRetries races in $dir")
   }
-
-  private val SchemaPrefix = "#schema\t"
-
-  /** The declared schema recorded by `CREATE TABLE` (JSON), if any — the
-    * authority for an EMPTY table, where no data file can answer. Files,
-    * once present, are the ground truth (observed beats declared). */
-  def declaredSchema(dir: String, v: Int): Option[String] = {
-    if (v < 0) return None
-    new String(Files.readAllBytes(manifestPath(dir, v)), "UTF-8")
-      .split('\n').map(_.trim).find(_.startsWith(SchemaPrefix))
-      .map(_.stripPrefix(SchemaPrefix))
-  }
-
-  private def schemaLines(dir: String, v: Int): Seq[String] =
-    declaredSchema(dir, v).map(SchemaPrefix + _).toSeq
 
   /** Drop one table property (no-op commit if absent). */
-  def removeTableProperty(dir: String, key: String,
-      maxRetries: Int = 10): Int = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = currentVersion(dir)
-      require(v >= 0, s"no committed snapshot in $dir")
-      val kept = propLines(dir, v).filterNot(_.startsWith(s"$PropPrefix$key\t"))
-      if (kept.size == propLines(dir, v).size) return v // absent: no-op
-      val body = listLines(dir, v) ++ dvLines(dir, v) ++
-        renameLines(dir, v) ++ policyLines(dir, v) ++ kept ++
-        schemaLines(dir, v) ++ epochLines(dir, v)
-      if (commit(dir, body, v)) return v + 1
-      attempt += 1
+  def removeTableProperty(dir: String, key: String): Int =
+    commit(dir, Snapshot.Append) { base =>
+      require(base.version >= 0, s"no committed snapshot in $dir")
+      if (!base.props.exists(_._1 == key)) None // absent: no-op
+      else Some(base.withoutProp(key))
     }
-    throw new IllegalStateException(s"removeTableProperty lost $maxRetries races in $dir")
-  }
 
   /** One validated `ALTER TABLE` change, for [[alterAtomic]]. */
   sealed trait AlterOp
@@ -2824,10 +2504,8 @@ object ManifestTable {
     * DDL contract a warehouse user assumes). Ops apply in statement order;
     * renames make the commit a `#mutate` (schema changes are
     * inexpressible in an append-only feed), property-only statements stay
-    * ordinary metadata commits. NOTE: a fifth manual-body method — a new
-    * always-carried marker kind must be added here too (see
-    * [[carriedMeta]]'s scaladoc contract). */
-  def alterAtomic(dir: String, ops: Seq[AlterOp], maxRetries: Int = 10): Int = {
+    * ordinary metadata commits. */
+  def alterAtomic(dir: String, ops: Seq[AlterOp]): Int = {
     // ---- validate EVERYTHING before any commit ----
     ops.foreach {
       case AlterOp.SetProp(k, value) =>
@@ -2855,80 +2533,43 @@ object ManifestTable {
     val addOps = ops.collect { case a: AlterOp.AddCol => a }
     val dropOps = ops.collect { case d: AlterOp.DropCol => d }
     val widenOps = ops.collect { case w: AlterOp.WidenCol => w }
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = currentVersion(dir)
-      require(v >= 0, s"no committed snapshot to alter in $dir")
-      if (renameOps.nonEmpty) {
-        renameOps.foreach { r =>
-          val nameRe =
-            ("\\b" + java.util.regex.Pattern.quote(r.from) + "\\b").r
-          require(
-            !policyLines(dir, v).exists(l => nameRe.findFirstIn(l).isDefined),
-            s"rename of '${r.from}' refused: a governance policy " +
-              "references it — re-declare the policy against the new name " +
-              "first")
-          guardRenameTarget(dir, v, r.to)
-          // two chain entries with the same FROM (rename a→b, re-add
-          // a, rename a→c) would make a physical 'a' ambiguous across
-          // generations — refuse, same contract as renameColumn
-          require(!renames(dir, v).exists(_._1 == r.from),
-            s"rename of '${r.from}' refused: the name was renamed away " +
-              "and re-added — old files' physical column means a " +
-              "different logical column; compact first")
-        }
-      }
-      var props = propLines(dir, v)
-      ops.foreach {
-        case AlterOp.SetProp(k, value) =>
-          props = props.filterNot(_.startsWith(s"$PropPrefix$k\t")) :+
-            s"#prop\t$k\t$value"
-        case AlterOp.RemoveProp(k) =>
-          props = props.filterNot(_.startsWith(s"$PropPrefix$k\t"))
-        case AlterOp.Rename(from, to) =>
-          // dependent declarations follow the rename (or refuse) — the
-          // identity frontier, write-shape name lists, the partitioning
-          // spec; CHECK constraints and generation expressions that
-          // reference the old name refuse the statement
-          props = migrateRenameProps(props, declaredSchema(dir, v), from, to)
-        case _ => () // schema ops handled below
+    commit(dir, if (renameOps.nonEmpty) Snapshot.Mutate else Snapshot.Append) {
+        base =>
+      require(base.version >= 0, s"no committed snapshot to alter in $dir")
+      renameOps.foreach(r => guardRename(base, r.from, r.to))
+      // properties apply in statement order; dependent declarations follow
+      // a rename (or refuse) — the identity frontier, write-shape name
+      // lists, the partitioning spec, CHECK constraints
+      val withProps = ops.foldLeft(base) {
+        case (s, AlterOp.SetProp(k, value)) => s.withProp(k, value)
+        case (s, AlterOp.RemoveProp(k)) => s.withoutProp(k)
+        case (s, AlterOp.Rename(from, to)) => s.copy(props =
+          migrateRenameProps(s.props, base.schema, from, to))
+        case (s, _) => s // schema ops handled below
       }
       // the schema authority to evolve: the declared #schema, else (for
       // ADD COLUMN on a table created by its first insert) the observed
       // footer schema — ADD COLUMN must record a declared schema so the
       // widened view has an authority old files cannot provide
       val baseSchema: Option[org.apache.spark.sql.types.StructType] =
-        declaredSchema(dir, v)
+        base.schema
           .map(org.apache.spark.sql.types.DataType.fromJson(_)
             .asInstanceOf[org.apache.spark.sql.types.StructType])
-          .orElse {
-            val files = listFiles(dir, v)
-            if (files.isEmpty) None
-            else Some(ManifestStreamSource.toSparkSchema(
-              ManifestStreamSource.footerSchema(dataPath(dir, files.head))))
-          }
+          .orElse(base.names.headOption.map(f =>
+            ManifestStreamSource.toSparkSchema(
+              ManifestStreamSource.footerSchema(dataPath(dir, f)))))
       if (addOps.nonEmpty || dropOps.nonEmpty || widenOps.nonEmpty)
         require(baseSchema.isDefined,
           "ADD/DROP/ALTER COLUMN on a table with no schema authority (no " +
             "declared schema and no data files)")
-      dropOps.foreach { d =>
-        val nameRe =
-          ("\\b" + java.util.regex.Pattern.quote(d.name) + "\\b").r
-        require(
-          !policyLines(dir, v).exists(l => nameRe.findFirstIn(l).isDefined),
-          s"drop of '${d.name}' refused: a governance policy references " +
-            "it — re-declare the policy first")
-      }
+      dropOps.foreach(d => require(!base.policyMentions(d.name),
+        s"drop of '${d.name}' refused: a governance policy references " +
+          "it — re-declare the policy first"))
       val evolvedSchema = baseSchema.map { st0 =>
         // schema ops apply in STATEMENT order (a rename may precede an
         // add of the freed name, etc.)
         val st = ops.foldLeft(st0) {
-          case (st, AlterOp.Rename(from, to)) =>
-            // generation expressions referencing the old name rewrite to
-            // the new one (round 14) before the field itself renames
-            org.apache.spark.sql.types.StructType(
-              rewriteGenExprs(st, from, to).fields.map(f =>
-                if (f.name == from) f.copy(name = to) else f))
+          case (st, AlterOp.Rename(from, to)) => renamedSchema(st, from, to)
           case (st, AlterOp.AddCol(n, dt, dflt)) =>
             require(!st.fieldNames.contains(n),
               s"ADD COLUMN '$n' refused: the column already exists")
@@ -2967,53 +2608,26 @@ object ManifestTable {
             org.apache.spark.sql.types.StructType(st.fields.filterNot(_.name == n))
           case (st, _) => st
         }
-        s"$SchemaPrefix${st.json}"
-      }.filter(_ => declaredSchema(dir, v).isDefined || addOps.nonEmpty ||
+        st.json
+      }.filter(_ => base.schema.isDefined || addOps.nonEmpty ||
           dropOps.nonEmpty || widenOps.nonEmpty)
-        .toSeq
       // DVs carry VERBATIM through every alter, renames included (round
       // 14): a marker's key column keeps its delete-time name — readers
       // resolve it to the evolved name through the rename chain
-      val body = listLines(dir, v) ++ dvLines(dir, v) ++ renameLines(dir, v) ++
-        renameOps.map(r => s"#rename\t${r.from}\t${r.to}") ++
-        policyLines(dir, v) ++ props ++ evolvedSchema ++ epochLines(dir, v)
-      val ok =
-        if (renameOps.nonEmpty) commitMutate(dir, body, v)
-        else commit(dir, body, v)
-      if (ok) return v + 1
-      attempt += 1
+      Some(withProps.copy(
+        renames = base.renames ++ renameOps.map(r => r.from -> r.to),
+        schema = evolvedSchema))
     }
-    throw new IllegalStateException(
-      s"alterAtomic lost $maxRetries commit races in $dir")
   }
 
-  private val EpochPrefix = "#epoch\t"
-
-  /** `#epoch\t<queryId>\t<epochId>` markers: the high-water epoch each
-    * streaming query has committed into this table — the atomically-
-    * carried state that makes `writeStream.toTable` EXACTLY-ONCE (a
-    * replayed epoch ≤ the marker no-ops; the marker rides the same CAS
-    * as the data it covers, so sink state and data can never diverge). */
-  def epochLines(dir: String, v: Int): Seq[String] = {
-    if (v < 0) return Seq.empty
-    new String(Files.readAllBytes(manifestPath(dir, v)), "UTF-8")
-      .split('\n').map(_.trim).filter(_.startsWith(EpochPrefix)).toSeq
-  }
-
-  /** Committed high-water epoch for `queryId` in version `v`, if any. */
+  /** Committed high-water epoch for `queryId` in version `v`, if any: the
+    * `#epoch\t<queryId>\t<epochId>` marker each streaming query commits
+    * into this table — the atomically-carried state that makes
+    * `writeStream.toTable` EXACTLY-ONCE (a replayed epoch ≤ the marker
+    * no-ops; the marker rides the same CAS as the data it covers, so sink
+    * state and data can never diverge). */
   def committedEpoch(dir: String, v: Int, queryId: String): Option[Long] =
-    epochLines(dir, v).collectFirst {
-      case l if l.split('\t')(1) == queryId => l.split('\t')(2).toLong
-    }
-
-  /** The marker lines EVERY successor commit carries verbatim regardless
-    * of what it does to the data files: governance policies, table
-    * properties, the declared schema, and streaming epoch high-waters
-    * (unlike DV/rename markers, which interact with the file list and are
-    * carried by dedicated, path-specific logic). */
-  private[sources] def carriedMeta(dir: String, v: Int): Seq[String] =
-    policyLines(dir, v) ++ propLines(dir, v) ++ schemaLines(dir, v) ++
-      epochLines(dir, v)
+    Snapshot.read(dir, v).epoch(queryId)
 
   /** MERGE-ON-READ UPSERT (MERGE WHEN MATCHED THEN UPDATE, WHEN NOT
     * MATCHED THEN INSERT) — the Hudi merge-on-read shape: every batch row
@@ -3027,130 +2641,122 @@ object ManifestTable {
     * (the upsert contract — two same-key batch rows would both insert).
     * Returns the new version. */
   def upsertMOR(s: SparkSession, dir: String, batch: DataFrame,
-      col: String, maxRetries: Int = 10,
-      epoch: Option[(String, Long)] = None): Int = {
+      col: String, epoch: Option[(String, Long)] = None): Int =
+    commit(dir, Snapshot.Mutate)(upserted(s, dir, batch, col, epoch, _))
+
+  /** [[upsertMOR]]'s successor of `base` (None: a no-op). */
+  private def upserted(s: SparkSession, dir: String, batch: DataFrame,
+      col: String, epoch: Option[(String, Long)],
+      base: Snapshot): Option[Snapshot] = {
     import org.apache.spark.sql.functions.{col => c, min => fmin, max => fmax}
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = currentVersion(dir)
-      require(v >= 0, s"no committed snapshot to upsert into in $dir")
-      // exactly-once streaming leg (round 16): when the batch carries an
-      // epoch, a replayed epoch ≤ the committed high-water no-ops BEFORE
-      // staging a byte, and the new high-water marker rides the SAME
-      // #mutate CAS as the upsert itself — sink state and data cannot
-      // diverge (the #epoch contract of the V2 streaming sink, extended
-      // to in-place MOR corrections)
-      epoch.foreach { case (qid, eid) =>
-        if (committedEpoch(dir, v, qid).exists(_ >= eid)) return v
-      }
-      // rename markers compose (round 14): the batch arrives under the
-      // EVOLVED names (it must — it inserts as the new generation), and
-      // pre-rename files' stats are consulted under the key column's
-      // whole alias family
-      val keyFamily = aliasFamily(dir, v, col)
-      require(keyFamily.head == col,
-        s"upsertMOR key column '$col' was renamed to '${keyFamily.head}' — " +
-          "upsert under the evolved name")
-      // target = files whose recorded range intersects the batch key span
-      // (1-row bound collect; no key list reaches the driver). The same
-      // pass enforces the ROW-IDENTITY contract for every upsert entry
-      // point (round 17): a NULL key is a malformed correction — passing
-      // it through would either vanish the batch (all-null span used to
-      // read as "empty batch" and no-op after the source was consumed)
-      // or land un-amendable rows no later correction can target.
-      val span = batch.agg(
-        org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)),
-        org.apache.spark.sql.functions.count(c(col)),
-        fmin(c(col)), fmax(c(col))).head()
-      if (span.getLong(0) == 0L) return v // empty batch: idempotent no-op
-      require(span.getLong(1) == span.getLong(0),
-        s"upsertMOR into $dir: ${span.getLong(0) - span.getLong(1)} of " +
-          s"${span.getLong(0)} rows carry a NULL '$col' key — an upsert " +
-          "key is a row identity; fix the feed or append instead")
-      // numeric-tolerant extraction: the key column may be any integral /
-      // decimal / floating type, not just BIGINT (the stats machinery is
-      // BigDecimal-typed for the same reason)
-      def num(a: Any): BigDecimal = a match {
-        case l: java.lang.Long => BigDecimal(l.longValue)
-        case i: java.lang.Integer => BigDecimal(i.intValue)
-        case s: java.lang.Short => BigDecimal(s.intValue)
-        case b: java.lang.Byte => BigDecimal(b.intValue)
-        // a NaN key is as un-amendable an identity as NULL (NaN never
-        // equals itself in a join), and Spark orders NaN GREATEST, so
-        // any NaN key surfaces here as the span max — refuse with the
-        // same named row-identity contract, not a bare
-        // NumberFormatException from BigDecimal
-        case d: java.lang.Double if d.isNaN || d.isInfinite =>
-          throw new IllegalArgumentException(
-            s"upsertMOR into $dir: the '$col' key span contains $d — " +
-              "an upsert key is a row identity; NaN/Infinite keys " +
-              "cannot be targeted by later corrections")
-        case f: java.lang.Float if f.isNaN || f.isInfinite =>
-          throw new IllegalArgumentException(
-            s"upsertMOR into $dir: the '$col' key span contains $f — " +
-              "an upsert key is a row identity; NaN/Infinite keys " +
-              "cannot be targeted by later corrections")
-        case d: java.lang.Double => BigDecimal(d.doubleValue)
-        case f: java.lang.Float => BigDecimal(f.doubleValue)
-        case bd: java.math.BigDecimal => BigDecimal(bd)
-        case x => throw new IllegalArgumentException(
-          s"upsertMOR key column '$col' has non-numeric type ${x.getClass}")
-      }
-      val (lo, hi) = (num(span.get(2)), num(span.get(3)))
-      val affected = listLines(dir, v).map(parseEntry)
-        .filter(e => keyFamily.flatMap(e.ranges.get).headOption
-          .forall(r => r.max >= lo && r.min <= hi))
-        .map(_.name).toSet
-      // The staged key write, the staged data write, and the doomed-live
-      // counting pass are three INDEPENDENT distributed actions (disjoint
-      // unique output paths, no shared intermediate): overlap them on the
-      // driver pool instead of serializing three job latencies (guide
-      // §2.6). Results and commit order are unchanged — everything joins
-      // before the CAS.
-      locally {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        implicit val ec: scala.concurrent.ExecutionContext = overlapEc
-        val dvF = Future(stage(s, dir, batch.select(c(col)).distinct()))
-        val dataF = Future(stageWithStats(s, dir, batch, Seq(col)))
-        val hitsF = Future(
-          if (affected.isEmpty) Map.empty[String, Long]
-          else doomedLiveCounts(s, dir, v, affected.toSeq, col,
-            batch.select(c(col)).distinct()))
-        val dvFiles = Await.result(dvF, Duration.Inf)
-        val dataFiles = Await.result(dataF, Duration.Inf)
-        val markers =
-          if (affected.isEmpty) Seq.empty // pure insert: nothing to doom
-          else {
-            // price the statement's doomed-live hits per candidate file so
-            // the metadata COUNT/history/LIMIT tiers survive the upsert.
-            // The batch's keys may stage as SEVERAL files (no coalesce
-            // bottleneck at scale) — every consumer SUMS counts across
-            // markers per target, so the statement's total rides on the
-            // first marker and the rest carry explicit zeros
-            val hits = Await.result(hitsF, Duration.Inf)
-            val zero = affected.map(n => n -> 0L).toMap
-            dvFiles.zipWithIndex.map { case (f, i) =>
-              encodeDv(DvEntry(f, col, affected,
-                if (i == 0) affected.map(n =>
-                  n -> hits.getOrElse(n, 0L)).toMap
-                else zero))
-            }
-          }
-        val meta = epoch match {
-          case Some((qid, eid)) =>
-            carriedMeta(dir, v).filterNot(_.startsWith(s"$EpochPrefix$qid\t")) :+
-              s"$EpochPrefix$qid\t$eid"
-          case None => carriedMeta(dir, v)
-        }
-        val body = listLines(dir, v) ++ dvLines(dir, v) ++
-          renameLines(dir, v) ++ meta ++ dataFiles ++ markers
-        if (commitMutate(dir, body, v)) return v + 1
-      }
-      attempt += 1 // lost the race; staged files stay harmless orphans
+    require(base.version >= 0, s"no committed snapshot to upsert into in $dir")
+    // exactly-once streaming leg (round 16): when the batch carries an
+    // epoch, a replayed epoch ≤ the committed high-water no-ops BEFORE
+    // staging a byte, and the new high-water marker rides the SAME
+    // #mutate CAS as the upsert itself — sink state and data cannot
+    // diverge (the #epoch contract of the V2 streaming sink, extended
+    // to in-place MOR corrections)
+    if (epoch.exists { case (qid, eid) => base.epoch(qid).exists(_ >= eid) })
+      return None
+    // rename markers compose (round 14): the batch arrives under the
+    // EVOLVED names (it must — it inserts as the new generation), and
+    // pre-rename files' stats are consulted under the key column's
+    // whole alias family
+    val keyFamily = aliasFamily(base, col)
+    require(keyFamily.head == col,
+      s"upsertMOR key column '$col' was renamed to '${keyFamily.head}' — " +
+        "upsert under the evolved name")
+    // target = files whose recorded range intersects the batch key span
+    // (1-row bound collect; no key list reaches the driver). The same
+    // pass enforces the ROW-IDENTITY contract for every upsert entry
+    // point (round 17): a NULL key is a malformed correction — passing
+    // it through would either vanish the batch (all-null span used to
+    // read as "empty batch" and no-op after the source was consumed)
+    // or land un-amendable rows no later correction can target.
+    val span = batch.agg(
+      org.apache.spark.sql.functions.count(
+        org.apache.spark.sql.functions.lit(1)),
+      org.apache.spark.sql.functions.count(c(col)),
+      fmin(c(col)), fmax(c(col))).head()
+    if (span.getLong(0) == 0L) return None // empty batch: idempotent no-op
+    require(span.getLong(1) == span.getLong(0),
+      s"upsertMOR into $dir: ${span.getLong(0) - span.getLong(1)} of " +
+        s"${span.getLong(0)} rows carry a NULL '$col' key — an upsert " +
+        "key is a row identity; fix the feed or append instead")
+    // numeric-tolerant extraction: the key column may be any integral /
+    // decimal / floating type, not just BIGINT (the stats machinery is
+    // BigDecimal-typed for the same reason)
+    def num(a: Any): BigDecimal = a match {
+      case l: java.lang.Long => BigDecimal(l.longValue)
+      case i: java.lang.Integer => BigDecimal(i.intValue)
+      case s: java.lang.Short => BigDecimal(s.intValue)
+      case b: java.lang.Byte => BigDecimal(b.intValue)
+      // a NaN key is as un-amendable an identity as NULL (NaN never
+      // equals itself in a join), and Spark orders NaN GREATEST, so
+      // any NaN key surfaces here as the span max — refuse with the
+      // same named row-identity contract, not a bare
+      // NumberFormatException from BigDecimal
+      case d: java.lang.Double if d.isNaN || d.isInfinite =>
+        throw new IllegalArgumentException(
+          s"upsertMOR into $dir: the '$col' key span contains $d — " +
+            "an upsert key is a row identity; NaN/Infinite keys " +
+            "cannot be targeted by later corrections")
+      case f: java.lang.Float if f.isNaN || f.isInfinite =>
+        throw new IllegalArgumentException(
+          s"upsertMOR into $dir: the '$col' key span contains $f — " +
+            "an upsert key is a row identity; NaN/Infinite keys " +
+            "cannot be targeted by later corrections")
+      case d: java.lang.Double => BigDecimal(d.doubleValue)
+      case f: java.lang.Float => BigDecimal(f.doubleValue)
+      case bd: java.math.BigDecimal => BigDecimal(bd)
+      case x => throw new IllegalArgumentException(
+        s"upsertMOR key column '$col' has non-numeric type ${x.getClass}")
     }
-    throw new IllegalStateException(s"MOR upsert lost $maxRetries races in $dir")
+    val (lo, hi) = (num(span.get(2)), num(span.get(3)))
+    val affected = base.entries
+      .filter(e => keyFamily.flatMap(e.ranges.get).headOption
+        .forall(r => r.max >= lo && r.min <= hi))
+      .map(_.name).toSet
+    // The staged key write, the staged data write, and the doomed-live
+    // counting pass are three INDEPENDENT distributed actions (disjoint
+    // unique output paths, no shared intermediate): overlap them on the
+    // driver pool instead of serializing three job latencies (guide
+    // §2.6). Results and commit order are unchanged — everything joins
+    // before the CAS.
+    locally {
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.duration.Duration
+      implicit val ec: scala.concurrent.ExecutionContext = overlapEc
+      val dvF = Future(stage(s, dir, batch.select(c(col)).distinct()))
+      val dataF = Future(stageWithStats(s, dir, batch, Seq(col)))
+      val hitsF = Future(
+        if (affected.isEmpty) Map.empty[String, Long]
+        else doomedLiveCounts(s, dir, base, affected.toSeq, col,
+          batch.select(c(col)).distinct()))
+      val dvFiles = Await.result(dvF, Duration.Inf)
+      val dataFiles = Await.result(dataF, Duration.Inf)
+      val markers =
+        if (affected.isEmpty) Seq.empty // pure insert: nothing to doom
+        else {
+          // price the statement's doomed-live hits per candidate file so
+          // the metadata COUNT/history/LIMIT tiers survive the upsert.
+          // The batch's keys may stage as SEVERAL files (no coalesce
+          // bottleneck at scale) — every consumer SUMS counts across
+          // markers per target, so the statement's total rides on the
+          // first marker and the rest carry explicit zeros
+          val hits = Await.result(hitsF, Duration.Inf)
+          val zero = affected.map(n => n -> 0L).toMap
+          dvFiles.zipWithIndex.map { case (f, i) =>
+            DvEntry(f, col, affected,
+              if (i == 0) affected.map(n =>
+                n -> hits.getOrElse(n, 0L)).toMap
+              else zero)
+          }
+        }
+      val next = base.copy(files = base.files ++ dataFiles,
+        dvs = base.dvs ++ markers)
+      Some(epoch.fold(next) { case (qid, eid) => next.withEpoch(qid, eid) })
+    }
   }
 
   /** Metadata-only pruning for `col IN keys` using both stat kinds: a file
@@ -3199,42 +2805,13 @@ object ManifestTable {
     * keeps working after the delete. Returns the new committed version
     * (or the current one if no file can contain any key — a metadata-only
     * no-op). */
-  def deleteKeys(s: SparkSession, dir: String, col: String, keys: Seq[Long],
-      maxRetries: Int = 10): Int = {
+  def deleteKeys(s: SparkSession, dir: String, col: String,
+      keys: Seq[Long]): Int = {
     import org.apache.spark.sql.functions.{col => c}
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = currentVersion(dir)
-      require(v >= 0, s"no committed snapshot to delete from in $dir")
-      require(renameLines(dir, v).isEmpty,
-        "copy-on-write delete under a pending rename is refused — compact first")
-      val entries = listLines(dir, v).map(parseEntry)
-      val affected = entries.filter { e =>
-        e.ranges.get(col).forall(r =>
-          keys.exists(x => BigDecimal(x) >= r.min && BigDecimal(x) <= r.max)) &&
-        e.blooms.get(col).forall(bf =>
-          keys.exists(x => graft.functions.BloomSketch.contains(bf, x)))
-      }
-      if (affected.isEmpty) return v // nothing can hold the keys: no-op
-      val affectedNames = affected.map(_.name).toSet
-      val keep = listLines(dir, v) // raw lines: untouched stats ride along
-        .filterNot(l => affectedNames.contains(l.split('\t').head))
-      val survivors = readWithDvs(s, dir, v, affected.map(_.name).toSeq)
-        .filter(!c(col).isin(keys: _*))
-      // rewrites carry the same stat kinds the originals did (string
-      // envelopes included — a rewrite must not silently stop pruning)
-      val statsCols = affected
-        .flatMap(e => e.ranges.keys ++ e.strRanges.keys).distinct
-      val bloomCols = affected.flatMap(_.blooms.keys).distinct
-      val staged =
-        if (survivors.isEmpty) Seq.empty[String]
-        else stageWithIndexes(s, dir, survivors, statsCols, bloomCols)
-      val carried = carriedDvLines(dir, v,
-        keep.map(_.split('\t').head).toSet) ++ carriedMeta(dir, v)
-      if (commitMutate(dir, keep ++ staged ++ carried, v)) return v + 1
-      attempt += 1 // lost the race; staged files stay harmless orphans
+    rewriteKeyed(s, dir, col, keys, "delete") { rows =>
+      val survivors = rows.filter(!c(col).isin(keys: _*))
+      if (survivors.isEmpty) None else Some(survivors)
     }
-    throw new IllegalStateException(s"delete lost $maxRetries commit races in $dir")
   }
 
   /** Copy-on-write UPDATE (`UPDATE SET c = expr WHERE col IN keys`) — the
@@ -3248,42 +2825,51 @@ object ManifestTable {
     * per matching row. Returns the new committed version (current version
     * if no file can hold any key). */
   def updateKeys(s: SparkSession, dir: String, col: String, keys: Seq[Long],
-      assignments: Map[String, Column], maxRetries: Int = 10): Int = {
+      assignments: Map[String, Column]): Int = {
     import org.apache.spark.sql.functions.{col => c, when}
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = currentVersion(dir)
-      require(v >= 0, s"no committed snapshot to update in $dir")
-      require(renameLines(dir, v).isEmpty,
-        "copy-on-write update under a pending rename is refused — compact first")
-      val entries = listLines(dir, v).map(parseEntry)
-      val affected = entries.filter { e =>
+    val hit = c(col).isin(keys: _*)
+    // all assignments read OLD values (standard UPDATE semantics):
+    // withColumns resolves every expression against the pre-update rows
+    rewriteKeyed(s, dir, col, keys, "update")(rows => Some(
+      rows.withColumns(assignments.map { case (t, e) =>
+        t -> when(hit, e).otherwise(c(t)) })))
+  }
+
+  /** The copy-on-write rewrite [[deleteKeys]] and [[updateKeys]] share:
+    * the files whose stats admit a key are read with their deletion
+    * vectors applied, `rewrite` turns their rows into the replacement rows
+    * (None: nothing to stage), and the replacements restage carrying the
+    * same stat kinds the originals did (string envelopes included — a
+    * rewrite must not silently stop pruning). Untouched files keep their
+    * lines verbatim, and one `#mutate` commit publishes the result with
+    * the rewritten files struck from the markers' targets. */
+  private def rewriteKeyed(s: SparkSession, dir: String, col: String,
+      keys: Seq[Long], op: String)(
+      rewrite: DataFrame => Option[DataFrame]): Int =
+    commit(dir, Snapshot.Mutate) { base =>
+      require(base.version >= 0, s"no committed snapshot to $op in $dir")
+      require(base.renames.isEmpty,
+        s"copy-on-write $op under a pending rename is refused — compact first")
+      val affected = base.entries.filter { e =>
         e.ranges.get(col).forall(r =>
           keys.exists(x => BigDecimal(x) >= r.min && BigDecimal(x) <= r.max)) &&
         e.blooms.get(col).forall(bf =>
           keys.exists(x => graft.functions.BloomSketch.contains(bf, x)))
       }
-      if (affected.isEmpty) return v
-      val affectedNames = affected.map(_.name).toSet
-      val keep = listLines(dir, v)
-        .filterNot(l => affectedNames.contains(l.split('\t').head))
-      val hit = c(col).isin(keys: _*)
-      // all assignments read OLD values (standard UPDATE semantics):
-      // withColumns resolves every expression against the pre-update rows
-      val rewritten = readWithDvs(s, dir, v, affected.map(_.name).toSeq)
-        .withColumns(assignments.map { case (t, e) =>
-          t -> when(hit, e).otherwise(c(t)) })
-      val statsCols = affected
-        .flatMap(e => e.ranges.keys ++ e.strRanges.keys).distinct
-      val bloomCols = affected.flatMap(_.blooms.keys).distinct
-      val staged = stageWithIndexes(s, dir, rewritten, statsCols, bloomCols)
-      val carried = carriedDvLines(dir, v,
-        keep.map(_.split('\t').head).toSet) ++ carriedMeta(dir, v)
-      if (commitMutate(dir, keep ++ staged ++ carried, v)) return v + 1
-      attempt += 1
+      if (affected.isEmpty) None // nothing can hold the keys: no-op
+      else {
+        val affectedNames = affected.map(_.name).toSet
+        val keep = base.files // raw lines: untouched stats ride along
+          .filterNot(l => affectedNames.contains(l.split('\t').head))
+        val statsCols = affected
+          .flatMap(e => e.ranges.keys ++ e.strRanges.keys).distinct
+        val bloomCols = affected.flatMap(_.blooms.keys).distinct
+        val staged = rewrite(applyDvs(s, dir, affected.map(_.name), base.dvs,
+            base.renames))
+          .fold(Seq.empty[String])(stageWithIndexes(s, dir, _, statsCols, bloomCols))
+        Some(base.copy(files = keep ++ staged).strikeDvTargets)
+      }
     }
-    throw new IllegalStateException(s"update lost $maxRetries commit races in $dir")
-  }
 
   /** Metadata-only file pruning for `col BETWEEN lo AND hi` (inclusive):
     * (files that may hold matches, total files in the snapshot). A file is
@@ -3340,45 +2926,44 @@ object ManifestTable {
   /** Stage `batch` into audit snapshot `tag` (base = current version). */
   def stageAudit(s: SparkSession, dir: String, batch: DataFrame,
       tag: String, statsCols: Seq[String] = Nil): Unit = {
-    val v = currentVersion(dir)
-    require(renameLines(dir, v).isEmpty,
+    val base = Snapshot.current(dir)
+    require(base.renames.isEmpty,
       "write-audit-publish under a pending rename is refused — compact first")
     val staged =
       if (statsCols.nonEmpty) stageWithStats(s, dir, batch, statsCols)
       else stage(s, dir, batch)
-    val lines = s"#base=$v" +: (listLines(dir, v) ++ staged ++
-      dvLines(dir, v) ++ carriedMeta(dir, v))
-    Files.write(auditPath(dir, tag), lines.mkString("\n").getBytes("UTF-8"))
+    // the candidate is the would-be next snapshot, in the manifest codec
+    // behind a `#base=<v>` header line
+    val audit = base.copy(kind = Snapshot.Append, files = base.files ++ staged,
+      segments = Nil, ts = None)
+    Files.write(auditPath(dir, tag),
+      s"#base=${base.version}\n${audit.encode}".getBytes("UTF-8"))
   }
 
-  private def auditLines(dir: String, tag: String): (Int, Seq[String]) = {
+  /** (base version, candidate snapshot) of audit `tag`. */
+  private def auditSnapshot(dir: String, tag: String): (Int, Snapshot) = {
     val p = auditPath(dir, tag)
     require(Files.exists(p), s"no audit snapshot '$tag' in $dir")
-    val all = new String(Files.readAllBytes(p), "UTF-8")
-      .split('\n').map(_.trim).filter(_.nonEmpty).toSeq
-    val base = all.head.stripPrefix("#base=").toInt
-    (base, all.tail)
+    val all = new String(Files.readAllBytes(p), "UTF-8").split('\n').toSeq
+    val base = all.head.trim.stripPrefix("#base=").toInt
+    (base, Snapshot.decode(base + 1, all.tail))
   }
 
   /** Read the audit snapshot: the exact table state `tag` would publish
     * (deletion-vector markers in the audit apply here too — the checks
     * must see what production would see). */
   def readAudit(s: SparkSession, dir: String, tag: String): DataFrame = {
-    val (_, lines) = auditLines(dir, tag)
-    val dvs = lines.filter(_.startsWith(DvPrefix))
-    // every OTHER marker line (#policy, #rename, future kinds) is metadata,
-    // not a data file — only unprefixed lines name parquet under data/
-    val data = lines.filterNot(_.startsWith("#"))
-    applyDvs(s, dir, data.map(_.split('\t').head), dvs.map(parseDvLine))
+    val (_, audit) = auditSnapshot(dir, tag)
+    applyDvs(s, dir, audit.names, audit.dvs)
   }
 
   /** Publish a passing audit atomically. Returns the new version, or None
     * if a concurrent commit moved the base — the caller must re-stage and
     * RE-AUDIT against the new base (never publish stale checks). */
   def publishAudit(dir: String, tag: String): Option[Int] = {
-    val (base, lines) = auditLines(dir, tag)
+    val (base, audit) = auditSnapshot(dir, tag)
     if (currentVersion(dir) != base) return None
-    if (commit(dir, lines, base)) {
+    if (publish(dir, audit, base)) {
       Files.deleteIfExists(auditPath(dir, tag))
       Some(base + 1)
     } else None
@@ -3498,75 +3083,66 @@ object ManifestTable {
     * fewer than 2 small files — nothing worth rewriting). */
   def optimize(s: SparkSession, dir: String, numFiles: Int = 1,
       zorderBy: Seq[String] = Nil, statsCols: Seq[String] = Nil,
-      smallFileBytes: Long = Long.MaxValue, maxRetries: Int = 10,
+      smallFileBytes: Long = Long.MaxValue,
       onlyFiles: Option[Set[String]] = None): Int = {
     import org.apache.spark.sql.functions.{col => c}
     require(zorderBy.isEmpty || zorderBy.size == 2,
       "zorderBy takes exactly two integral columns (Morton interleave)")
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = currentVersion(dir)
-      require(v >= 0, s"no committed snapshot to optimize in $dir")
-      val lines = listLines(dir, v)
+    commit(dir, Snapshot.Rewrite) { base =>
+      require(base.version >= 0, s"no committed snapshot to optimize in $dir")
       // `onlyFiles` scopes the rewrite (partition-targeted maintenance):
       // a file outside the set keeps its manifest line verbatim no
       // matter its size
-      val (small, big) = lines.partition { l =>
+      val (small, big) = base.files.partition { l =>
         val name = l.split('\t').head
         onlyFiles.forall(_.contains(name)) &&
           Files.size(Paths.get(dataPath(dir, name))) < smallFileBytes
       }
       // nothing worth rewriting (zorder with zero admitted files included:
       // reading an empty path list would throw, and the layout is a no-op)
-      if (small.size < 2 && zorderBy.isEmpty) return v
-      if (small.isEmpty) return v
-      // DV-aware read MATERIALIZES deletes into the rewritten files; the
-      // untouched big files keep their (intersected) markers below. Under
-      // a rename chain the rewrite reads the EVOLVED view, so rewritten
-      // files carry the new names while the carried markers keep
-      // reconciling the untouched old ones — DVs and renames compose.
-      val df = readFilesReconciled(s, dir, v, small.map(_.split('\t').head))
-      val laid = zorderBy match {
-        case Seq(a, b) =>
-          df.withColumn("__zkey",
-              graft.operators.AuditOps.morton6(c(a).cast("int"), c(b).cast("int")))
-            .repartitionByRange(numFiles, c("__zkey"))
-            .sortWithinPartitions(c("__zkey")).drop("__zkey")
-        case _ => df.repartition(numFiles)
+      if ((small.size < 2 && zorderBy.isEmpty) || small.isEmpty) None
+      else {
+        // DV-aware read MATERIALIZES deletes into the rewritten files; the
+        // untouched big files keep their (intersected) markers below.
+        // Under a rename chain the rewrite reads the EVOLVED view, so
+        // rewritten files carry the new names while the carried markers
+        // keep reconciling the untouched old ones — DVs and renames
+        // compose.
+        val df = readReconciled(s, dir, base, small.map(_.split('\t').head))
+        val laid = zorderBy match {
+          case Seq(a, b) =>
+            df.withColumn("__zkey",
+                graft.operators.AuditOps.morton6(c(a).cast("int"), c(b).cast("int")))
+              .repartitionByRange(numFiles, c("__zkey"))
+              .sortWithinPartitions(c("__zkey")).drop("__zkey")
+          case _ => df.repartition(numFiles)
+        }
+        // declared NDV/SUM columns re-harvest through maintenance: a DML
+        // rewrite drops a file's sketches/sums (the delta writer can't
+        // recompute them), and compaction is where the metadata tier
+        // re-arms — the same degrade-then-maintain story as bucket ids
+        val ndvC = declaredCols(base, "graft.write.ndv", df)
+        val sumC = declaredCols(base, "graft.write.sum", df)
+        val staged =
+          if (statsCols.nonEmpty || ndvC.nonEmpty || sumC.nonEmpty)
+            stageWithIndexes(s, dir, laid, statsCols = statsCols,
+              bloomCols = Nil, ndvCols = ndvC, sumCols = sumC)
+          else stage(s, dir, laid)
+        // renames carry while old-generation files remain; policies and
+        // properties never materialize away
+        Some(base.copy(files = big ++ staged,
+          renames = if (big.isEmpty) Nil else base.renames).strikeDvTargets)
       }
-      // declared NDV/SUM columns re-harvest through maintenance: a DML
-      // rewrite drops a file's sketches/sums (the delta writer can't
-      // recompute them), and compaction is where the metadata tier
-      // re-arms — the same degrade-then-maintain story as bucket ids
-      val props = tableProperties(dir, v)
-      def declared(key: String): Seq[String] = props.get(key).toSeq
-        .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
-        .filter(df.columns.contains)
-      val ndvC = declared("graft.write.ndv")
-      val sumC = declared("graft.write.sum")
-      val staged =
-        if (statsCols.nonEmpty || ndvC.nonEmpty || sumC.nonEmpty)
-          stageWithIndexes(s, dir, laid, statsCols = statsCols,
-            bloomCols = Nil, ndvCols = ndvC, sumCols = sumC)
-        else stage(s, dir, laid)
-      val carried = carriedDvLines(dir, v, big.map(_.split('\t').head).toSet) ++
-        (if (big.isEmpty) Seq.empty else renameLines(dir, v)) ++
-        carriedMeta(dir, v) // policies/properties never materialize away
-      if (commitRewrite(dir, big ++ staged ++ carried, v)) return v + 1
-      attempt += 1 // lost the race; staged files stay harmless orphans
     }
-    throw new IllegalStateException(s"optimize lost $maxRetries commit races in $dir")
   }
 
-  /** Restore a bucketed table's physical layout: rewrite EVERY file
-    * clustered by the declared `bucket(n, col)` transform, recording each
-    * file's `__bucket` id — the maintenance op that re-arms
-    * storage-partitioned joins after row-level DML landed bucket-less
-    * insert files. One `#rewrite` CAS; on a lost race the whole pass
-    * re-runs against the winner's snapshot. The rewrite cost is one full
-    * pass over the table (like any re-clustering), so it amortizes the
-    * way compaction does: run it when the bucket-less fraction justifies
-    * giving the next N joins their shuffle-free plan back. */
+  /** The column list table property `key` declares, restricted to the
+    * columns of `df`. */
+  private def declaredCols(snap: Snapshot, key: String,
+      df: DataFrame): Seq[String] =
+    snap.properties.get(key).toSeq.flatMap(_.split(',')).map(_.trim)
+      .filter(_.nonEmpty).filter(df.columns.contains)
+
   /** PARTITION-SPEC EVOLUTION (round 15): re-declare the table's
     * `graft.partitioning` on a LIVE table in ONE metadata-only commit —
     * the Iceberg spec-evolution contract re-expressed for this format.
@@ -3582,28 +3158,26 @@ object ManifestTable {
     * New inserts route/cluster by the new spec immediately. Every
     * referenced column must exist in the table's evolved view — refused
     * otherwise. Returns the new version. */
-  def setPartitioning(dir: String, spec: String, maxRetries: Int = 10): Int = {
+  def setPartitioning(dir: String, spec: String): Int = {
     val (ids, bks) = GraftCatalog.partitionCols(spec)
     val times = GraftCatalog.timeCols(spec)
     val clus = GraftCatalog.clusterCols(spec)
     require(ids.nonEmpty || bks.nonEmpty || times.nonEmpty || clus.nonEmpty,
       s"unparseable partitioning spec '$spec' — expected " +
         "identity(c) / bucket(n, c) / years|months|days(c) / cluster(...)")
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = currentVersion(dir)
-      require(v >= 0, s"no committed snapshot to alter in $dir")
+    commit(dir, Snapshot.Append) { base =>
+      require(base.version >= 0, s"no committed snapshot to alter in $dir")
       // column authority: the declared schema if any, else the observed
       // footer names of one file, both through the rename chain's final
       // names — a spec naming an absent column refuses now, not at the
       // first insert that cannot route
-      val fin = finalNames(dir, v)
+      val fin = collapseRenames(base.renames)
       val authority: Option[Set[String]] =
-        declaredSchema(dir, v)
+        base.schema
           .map(org.apache.spark.sql.types.DataType.fromJson(_)
             .asInstanceOf[org.apache.spark.sql.types.StructType]
             .fieldNames.toSet)
-          .orElse(listFiles(dir, v).headOption.map { f =>
+          .orElse(base.names.headOption.map { f =>
             val mt = ManifestStreamSource.footerSchema(dataPath(dir, f))
             (0 until mt.getFieldCount).map(i =>
               fin.getOrElse(mt.getFieldName(i), mt.getFieldName(i))).toSet
@@ -3612,88 +3186,68 @@ object ManifestTable {
       authority.foreach(cols => refd.foreach(c => require(cols(c),
         s"SET partitioning '$spec' refused: column '$c' does not exist " +
           s"on $dir")))
-      val oldBks = tableProperties(dir, v).get("graft.partitioning")
+      val oldBks = base.properties.get("graft.partitioning")
         .map(GraftCatalog.partitionCols(_)._2).getOrElse(Seq.empty)
-      val bucketChanged = oldBks != bks
-      val lines =
-        if (!bucketChanged) listLines(dir, v)
-        else listLines(dir, v).map(_.replaceAll(";__bucket=\\d+", ""))
-      val props = propLines(dir, v)
-        .filterNot(_.startsWith("#prop\tgraft.partitioning\t")) :+
-        s"#prop\tgraft.partitioning\t$spec"
-      val body = lines ++ dvLines(dir, v) ++ renameLines(dir, v) ++
-        policyLines(dir, v) ++ props ++ schemaLines(dir, v) ++
-        epochLines(dir, v)
+      val next = base.withProp("graft.partitioning", spec)
       // striking bucket ids changes manifest lines but no live content —
       // a content-preserving #rewrite, so incremental consumers skip it
-      val ok =
-        if (bucketChanged) commitRewrite(dir, body, v)
-        else commit(dir, body, v)
-      if (ok) return v + 1
-      attempt += 1
+      Some(if (oldBks == bks) next
+        else next.copy(kind = Snapshot.Rewrite,
+          files = base.files.map(_.replaceAll(";__bucket=\\d+", ""))))
     }
-    throw new IllegalStateException(
-      s"setPartitioning lost $maxRetries commit races in $dir")
   }
 
-  def rebucket(s: SparkSession, dir: String, maxRetries: Int = 10): Int = {
+  /** Restore a bucketed table's physical layout: rewrite EVERY file
+    * clustered by the declared `bucket(n, col)` transform, recording each
+    * file's `__bucket` id — the maintenance op that re-arms
+    * storage-partitioned joins after row-level DML landed bucket-less
+    * insert files. One `#rewrite` CAS; on a lost race the whole pass
+    * re-runs against the winner's snapshot. The rewrite cost is one full
+    * pass over the table (like any re-clustering), so it amortizes the
+    * way compaction does: run it when the bucket-less fraction justifies
+    * giving the next N joins their shuffle-free plan back. */
+  def rebucket(s: SparkSession, dir: String): Int = {
     import org.apache.spark.sql.functions.{col => c}
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = currentVersion(dir)
-      require(v >= 0, s"no committed snapshot to rebucket in $dir")
-      val spec = tableProperties(dir, v).getOrElse("graft.partitioning",
+    commit(dir, Snapshot.Rewrite) { base =>
+      require(base.version >= 0, s"no committed snapshot to rebucket in $dir")
+      val spec = base.properties.getOrElse("graft.partitioning",
         throw new IllegalArgumentException(
           s"rebucket($dir): table declares no partitioning"))
       val (ids, bks) = GraftCatalog.partitionCols(spec)
       require(ids.isEmpty && bks.size == 1,
         s"rebucket($dir): exactly one bucket transform required, got $spec")
       val (n, colName) = bks.head
-      require(renameLines(dir, v).isEmpty,
+      require(base.renames.isEmpty,
         s"rebucket($dir) refused: rename markers present — compact first")
-      val lines = listLines(dir, v)
-      if (lines.isEmpty) return v
-      val entries = lines.map(parseEntry)
-      val statsCols = entries
-        .flatMap(e => e.ranges.keys ++ e.strRanges.keys).distinct
-      // a full rewrite MATERIALIZES deletion vectors (exactly like
-      // optimize): the DV-merged read drops doomed rows, the new files
-      // hold only live rows, and no marker carries — a MOR fact table
-      // re-arms its storage-partitioned joins in ONE pass instead of
-      // compact-then-rebucket
-      val df =
-        if (dvLines(dir, v).nonEmpty)
-          readWithDvs(s, dir, v, entries.map(_.name))
-        else s.read.option("mergeSchema", "true")
-          .parquet(entries.map(e => dataPath(dir, e.name)): _*)
-      val clustered = df.repartition(n, c(colName))
-      val sortCols = tableProperties(dir, v).get("graft.write.sort").toSeq
-        .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
-      val shaped = if (sortCols.isEmpty) clustered
-        else clustered.sortWithinPartitions(sortCols.map(c): _*)
-      def declared(key: String): Seq[String] = tableProperties(dir, v)
-        .get(key).toSeq.flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
-        .filter(df.columns.contains)
-      val staged = stageWithIndexes(s, dir, shaped, statsCols = statsCols,
-        bloomCols = Seq(colName), recordBucket = true,
-        ndvCols = declared("graft.write.ndv"),
-        sumCols = declared("graft.write.sum"))
-      if (commitRewrite(dir, staged ++ carriedMeta(dir, v), v)) return v + 1
-      attempt += 1 // lost the race; staged files stay harmless orphans
+      if (base.files.isEmpty) None
+      else {
+        val entries = base.entries
+        val statsCols = entries
+          .flatMap(e => e.ranges.keys ++ e.strRanges.keys).distinct
+        // a full rewrite MATERIALIZES deletion vectors (exactly like
+        // optimize): the DV-merged read drops doomed rows, the new files
+        // hold only live rows, and no marker carries — a MOR fact table
+        // re-arms its storage-partitioned joins in ONE pass instead of
+        // compact-then-rebucket
+        val df =
+          if (base.dvs.nonEmpty)
+            applyDvs(s, dir, entries.map(_.name), base.dvs, base.renames)
+          else s.read.option("mergeSchema", "true")
+            .parquet(entries.map(e => dataPath(dir, e.name)): _*)
+        val clustered = df.repartition(n, c(colName))
+        val sortCols = base.properties.get("graft.write.sort").toSeq
+          .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
+        val shaped = if (sortCols.isEmpty) clustered
+          else clustered.sortWithinPartitions(sortCols.map(c): _*)
+        val staged = stageWithIndexes(s, dir, shaped, statsCols = statsCols,
+          bloomCols = Seq(colName), recordBucket = true,
+          ndvCols = declaredCols(base, "graft.write.ndv", df),
+          sumCols = declaredCols(base, "graft.write.sum", df))
+        Some(base.copy(files = staged, dvs = Nil))
+      }
     }
-    throw new IllegalStateException(
-      s"rebucket lost $maxRetries commit races in $dir")
   }
 
-  /** ACID MERGE WHEN NOT MATCHED THEN INSERT: anti-join `batch` against the
-    * CURRENT snapshot on `keyCols` (pre-hashed to two independent 64-bit
-    * keys — 16 bytes/row across the shuffle, `Relational.dedupAppend`'s
-    * scale recipe), stage only the fresh rows, and CAS-commit
-    * old-files + new-files. On a lost race the whole reconcile re-runs
-    * against the winner's snapshot, so concurrent merges serialize cleanly
-    * and a replayed batch is a no-op (fresh set becomes empty — committed
-    * as an empty delta to record the attempt, or skipped via
-    * `skipEmptyDelta`). */
   /** APPEND one batch as one commit WITHOUT [[merge]]'s anti-join — for
     * callers that KNOW the batch is disjoint from every committed row
     * (deterministic disjoint slices, first load of a partition): the
@@ -3703,18 +3257,8 @@ object ManifestTable {
     * merge of the same disjoint batch: existing lines + staged files, DV /
     * rename / table-property markers carried forward, same CAS retry.
     * Callers that cannot prove disjointness must use [[merge]]. */
-  def append(s: SparkSession, dir: String, batch: DataFrame,
-      maxRetries: Int = 10): Int = {
-    val staged = stage(s, dir, batch) // version-independent: stage once
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = currentVersion(dir)
-      if (commit(dir, listLines(dir, v) ++ staged ++ dvLines(dir, v) ++
-          renameLines(dir, v) ++ carriedMeta(dir, v), v)) return v + 1
-      attempt += 1 // lost the race; the staged files are version-agnostic
-    }
-    throw new IllegalStateException(s"append lost $maxRetries commit races in $dir")
-  }
+  def append(s: SparkSession, dir: String, batch: DataFrame): Int =
+    appendStaged(dir, stage(s, dir, batch)) // version-independent: stage once
 
   /** [[append]] for a SEQUENCE of provably-disjoint batches: staging is
     * version-independent (uniquely-named orphan files, invisible until a
@@ -3725,44 +3269,40 @@ object ManifestTable {
     * (same lines in the same order, same version arithmetic, same retry).
     * Callers own [[append]]'s disjointness proof, extended pairwise
     * across the batches. */
-  def appendAll(s: SparkSession, dir: String, batches: Seq[DataFrame],
-      maxRetries: Int = 10): Int = {
+  def appendAll(s: SparkSession, dir: String,
+      batches: Seq[DataFrame]): Int = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: scala.concurrent.ExecutionContext = overlapEc
     val stagedAll = Await.result(
       Future.traverse(batches)(b => Future(stage(s, dir, b))), Duration.Inf)
-    var last = currentVersion(dir)
-    stagedAll.foreach { staged =>
-      var attempt = 0
-      var done = false
-      while (!done && attempt < maxRetries) {
-        val v = currentVersion(dir)
-        if (commit(dir, listLines(dir, v) ++ staged ++ dvLines(dir, v) ++
-            renameLines(dir, v) ++ carriedMeta(dir, v), v)) {
-          last = v + 1; done = true
-        } else attempt += 1 // lost a race; staged files stay harmless orphans
-      }
-      if (!done) throw new IllegalStateException(
-        s"appendAll lost $maxRetries commit races in $dir")
-    }
-    last
+    stagedAll.foldLeft(currentVersion(dir))((_, staged) => appendStaged(dir, staged))
   }
 
+  /** Publish already-staged files as one append commit onto the head. */
+  private def appendStaged(dir: String, staged: Seq[String]): Int =
+    commit(dir, Snapshot.Append)(base =>
+      Some(base.copy(files = base.files ++ staged)))
+
+  /** ACID MERGE WHEN NOT MATCHED THEN INSERT: anti-join `batch` against the
+    * CURRENT snapshot on `keyCols` (pre-hashed to two independent 64-bit
+    * keys — 16 bytes/row across the shuffle, `Relational.dedupAppend`'s
+    * scale recipe), stage only the fresh rows, and CAS-commit
+    * old-files + new-files. On a lost race the whole reconcile re-runs
+    * against the winner's snapshot, so concurrent merges serialize cleanly
+    * and a replayed batch is a no-op (fresh set becomes empty — committed
+    * as an empty delta to record the attempt, or skipped via
+    * `skipEmptyDelta`). */
   def merge(s: SparkSession, dir: String, batch: DataFrame,
-      keyCols: Seq[String], skipEmptyDelta: Boolean = true,
-      maxRetries: Int = 10): Int = {
+      keyCols: Seq[String], skipEmptyDelta: Boolean = true): Int = {
     def k(seed: String, cols: Seq[Column]) =
       if (seed.isEmpty) xxhash64(cols: _*) else xxhash64(lit(seed) +: cols: _*)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = currentVersion(dir)
-      val existing = listLines(dir, v) // raw lines: per-file stats carry forward
+    commit(dir, Snapshot.Append) { base =>
       val cols = keyCols.map(batch.col)
       val fresh =
-        if (v < 0) batch
+        if (base.version < 0) batch
         else {
-          val cur = read(s, dir)
+          val cur = readVersion(s, dir, base.version)
           val curKeys = cur.select(
             k("", keyCols.map(cur.col)).as("k1"),
             k("graft_k2", keyCols.map(cur.col)).as("k2"))
@@ -3784,16 +3324,12 @@ object ManifestTable {
       if (skipEmptyDelta &&
           staged.forall(n => footerRowCount(Paths.get(dir, "data", n)) == 0L)) {
         staged.foreach(n => Files.deleteIfExists(Paths.get(dir, "data", n)))
-        return v // idempotent no-op
+        None // idempotent no-op
       }
       // DV and rename markers ride along: the kept data files are
       // unchanged, so every DV still targets exactly what it did, and the
       // rename chain keeps reconciling the older generations
-      if (commit(dir, existing ++ staged ++ dvLines(dir, v) ++
-          renameLines(dir, v) ++ carriedMeta(dir, v), v)) return v + 1
-      // lost the race: the staged files stay harmless orphans; re-reconcile
-      attempt += 1
+      else Some(base.copy(files = base.files ++ staged))
     }
-    throw new IllegalStateException(s"merge lost $maxRetries commit races in $dir")
   }
 }

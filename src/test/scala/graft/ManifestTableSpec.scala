@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * idempotency under replay. */
 class ManifestTableSpec extends AnyFunSuite {
   import TestSpark._
-  import sources.ManifestTable
+  import sources.{ManifestTable, Snapshot}
 
   private def freshDir(tag: String): String = {
     val d = s"${System.getProperty("java.io.tmpdir")}/graft_mt_${tag}_" +
@@ -674,7 +674,7 @@ class ManifestTableSpec extends AnyFunSuite {
       val fs = (1 to 4).map { m =>
         Future {
           ManifestTable.merge(spark, dir,
-            li.filter(col("l_orderkey") % 7 === m), keys, maxRetries = 30)
+            li.filter(col("l_orderkey") % 7 === m), keys)
         }
       }
       Await.result(Future.sequence(fs), 5.minutes)
@@ -958,8 +958,9 @@ class ManifestTableSpec extends AnyFunSuite {
     assert(kept.map(ManifestTable.dataPath(dir, _)).toSet == flatKept.toSet)
     // rewrite commits carry their kind through the segmented form
     assert(ManifestTable.commitSegmented(dir, staged, 0, segmentSize = 8,
-      kind = "#rewrite"))
-    assert(ManifestTable.isRewrite(dir, 1) && !ManifestTable.isRewrite(dir, 0))
+      kind = Snapshot.Rewrite))
+    assert(Snapshot.read(dir, 1).kind == Snapshot.Rewrite &&
+      Snapshot.read(dir, 0).kind != Snapshot.Rewrite)
     assert(ManifestTable.listLines(dir, 1).toSet == staged.toSet)
     // vacuum to the latest version collects v0's now-unreferenced segments
     // but keeps v1's (the data files are shared and all still referenced)
@@ -1090,14 +1091,14 @@ class ManifestTableSpec extends AnyFunSuite {
     ManifestTable.optimize(spark, dir, numFiles = 1,
       statsCols = Seq("l_orderkey"), smallFileBytes = 8192)
     val vO = ManifestTable.currentVersion(dir)
-    assert(ManifestTable.dvLines(dir, vO).nonEmpty,
+    assert(Snapshot.read(dir, vO).dvs.nonEmpty,
       "a rewrite that keeps targeted files must carry their DV markers")
     assert(ManifestTable.read(spark, dir).count() == expected)
 
     // FULL compaction materializes: markers gone, content invariant
     ManifestTable.compact(spark, dir, numFiles = 2)
     val vC = ManifestTable.currentVersion(dir)
-    assert(ManifestTable.dvLines(dir, vC).isEmpty,
+    assert(Snapshot.read(dir, vC).dvs.isEmpty,
       "a full rewrite must materialize the delete and drop the DV markers")
     assert(ManifestTable.read(spark, dir).count() == expected)
     assert(ManifestTable.read(spark, dir)
@@ -1145,7 +1146,7 @@ class ManifestTableSpec extends AnyFunSuite {
     val totalBefore = ManifestTable.read(spark, dir)
       .agg(sum(col("l_quantity").cast("decimal(18,2)"))).head().getDecimal(0)
     ManifestTable.compact(spark, dir, numFiles = 2)
-    assert(ManifestTable.dvLines(dir, ManifestTable.currentVersion(dir)).isEmpty)
+    assert(Snapshot.read(dir, ManifestTable.currentVersion(dir)).dvs.isEmpty)
     assert(ManifestTable.read(spark, dir)
       .agg(sum(col("l_quantity").cast("decimal(18,2)"))).head()
       .getDecimal(0) == totalBefore)
@@ -1184,8 +1185,8 @@ class ManifestTableSpec extends AnyFunSuite {
     // the alias family, and the read drops the doomed row across all
     // generations without compaction
     val vMor = ManifestTable.deleteKeysMOR(spark, dir, "p_partkey", Seq(2L))
-    assert(ManifestTable.dvLines(dir, vMor).nonEmpty &&
-      ManifestTable.renameLines(dir, vMor).nonEmpty)
+    assert(Snapshot.read(dir, vMor).dvs.nonEmpty &&
+      Snapshot.read(dir, vMor).renames.nonEmpty)
     assert(ManifestTable.read(spark, dir)
       .filter(col("p_partkey") === 2L).count() == 0)
     // undo via restore so the totals below stay the original ones
@@ -1203,7 +1204,7 @@ class ManifestTableSpec extends AnyFunSuite {
     // content invariant — and DML works again
     ManifestTable.compact(spark, dir, numFiles = 2)
     val vC = ManifestTable.currentVersion(dir)
-    assert(ManifestTable.renameLines(dir, vC).isEmpty)
+    assert(Snapshot.read(dir, vC).renames.isEmpty)
     val flat = ManifestTable.read(spark, dir)
     assert(flat.columns.contains("list_price") && flat.count() == p.count())
     assert(flat.agg(sum(col("list_price").cast("decimal(18,2)")))
@@ -1300,8 +1301,8 @@ class ManifestTableSpec extends AnyFunSuite {
     assert(ManifestTable.read(spark, dir).count() == ev.count())
     // policies survive compaction (unlike DV/rename, they never materialize)
     ManifestTable.compact(spark, dir, numFiles = 1)
-    assert(ManifestTable.policyLines(dir,
-      ManifestTable.currentVersion(dir)).nonEmpty)
+    assert(Snapshot.read(dir,
+      ManifestTable.currentVersion(dir)).policies.nonEmpty)
     assert(ManifestTable.readGoverned(spark, dir)
       .filter(col("event_type") === "error").count() == 0)
     // …and travel with clones
@@ -1466,7 +1467,7 @@ class ManifestTableSpec extends AnyFunSuite {
     // restore to the DV version republishes the markers with the lines
     ManifestTable.deleteKeysMOR(spark, src, "l_orderkey", Seq(777L))
     val vR = ManifestTable.restore(src, v1)
-    assert(ManifestTable.dvLines(src, vR).nonEmpty)
+    assert(Snapshot.read(src, vR).dvs.nonEmpty)
     assert(ManifestTable.read(spark, src).count() == afterDelete)
   }
 

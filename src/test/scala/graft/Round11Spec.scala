@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * commit-instant time travel. */
 class Round11Spec extends AnyFunSuite {
   import TestSpark._
-  import sources.ManifestTable
+  import sources.{ManifestTable, Snapshot}
 
   private def freshDir(tag: String): String = {
     val d = s"${System.getProperty("java.io.tmpdir")}/graft_r11_${tag}_" +
@@ -138,9 +138,9 @@ class Round11Spec extends AnyFunSuite {
     Thread.sleep(1100) // distinct commit instants at millis granularity
     val s1 = ManifestTable.stage(spark, dir, ev.filter(col("event_id") % 2 =!= 0))
     assert(ManifestTable.commit(dir, ManifestTable.listLines(dir, 0) ++ s1, 0))
-    val t0 = ManifestTable.commitInstantMillis(dir, 0)
+    val t0 = Snapshot.read(dir, 0).ts
       .getOrElse(fail("v0 must carry a #ts marker"))
-    val t1 = ManifestTable.commitInstantMillis(dir, 1)
+    val t1 = Snapshot.read(dir, 1).ts
       .getOrElse(fail("v1 must carry a #ts marker"))
     assert(t0 < t1)
     // a directory copy / backup-restore rewrites mtimes; simulate the
@@ -1282,7 +1282,7 @@ class Round11Spec extends AnyFunSuite {
     assert(v3Only.nonEmpty)
     // cutoff AFTER v4's instant: v0..v4 are "old"; keep_last=1 keeps the
     // head, the tag keeps v1 — v0/v2/v3/v4 expire
-    val cutoff = ManifestTable.commitInstantMillis(dir, 4).get + 1
+    val cutoff = Snapshot.read(dir, 4).ts.get + 1
     spark.sql(s"CALL g11ex.system.expire(table => 't', " +
       s"older_than_millis => ${cutoff}L, keep_last => 1)")
     assert(!java.nio.file.Files.exists(

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * streams frozen at their start version. */
 class Round12Spec extends AnyFunSuite {
   import TestSpark._
-  import sources.ManifestTable
+  import sources.{ManifestTable, Snapshot}
 
   private def freshDir(tag: String): String = {
     val d = s"${System.getProperty("java.io.tmpdir")}/graft_r12_${tag}_" +
@@ -530,7 +530,7 @@ class Round12Spec extends AnyFunSuite {
       .collect().map(_.getLong(0))
     spark.sql(s"""DELETE FROM g12mo.default.t
       WHERE k IN (${doomed.mkString(", ")})""")
-    assert(ManifestTable.dvLines(dir, ManifestTable.currentVersion(dir))
+    assert(Snapshot.read(dir, ManifestTable.currentVersion(dir)).dvs
       .nonEmpty, "the MOR delete must publish a #dv marker, not rewrite")
     // the scan itself serves live rows (pre-fix: refused until compaction)
     val q = spark.sql("SELECT k, v FROM g12mo.default.t")
@@ -595,8 +595,8 @@ class Round12Spec extends AnyFunSuite {
       (CAST(1 AS BIGINT), 1.0), (CAST(2 AS BIGINT), 2.0),
       (CAST(3 AS BIGINT), 3.0)""")
     spark.sql("DELETE FROM g12hd.default.t WHERE k IN (2)")
-    assert(ManifestTable.dvLines(s"$root/t",
-      ManifestTable.currentVersion(s"$root/t")).nonEmpty)
+    assert(Snapshot.read(s"$root/t",
+      ManifestTable.currentVersion(s"$root/t")).dvs.nonEmpty)
     val e4 = intercept[Exception] {
       spark.sql("ALTER TABLE g12hd.default.t DROP COLUMN k")
     }

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * merge-on-read scans. */
 class Round13Spec extends AnyFunSuite {
   import TestSpark._
-  import sources.ManifestTable
+  import sources.{ManifestTable, Snapshot}
 
   private def freshDir(tag: String): String = {
     val d = s"${System.getProperty("java.io.tmpdir")}/graft_r13_${tag}_" +
@@ -777,8 +777,8 @@ class Round13Spec extends AnyFunSuite {
       s"missing=${(want.toSet -- got.toSet).take(5)} " +
         s"extra=${(got.toSet -- want.toSet).take(5)}")
     // no compaction happened: the markers are still present
-    assert(ManifestTable.renameLines(dir,
-      ManifestTable.currentVersion(dir)).nonEmpty,
+    assert(Snapshot.read(dir,
+      ManifestTable.currentVersion(dir)).renames.nonEmpty,
       "DML must carry the rename markers, not materialize them")
     ManifestTable.destroy(root)
   }
@@ -893,8 +893,8 @@ class Round13Spec extends AnyFunSuite {
       (50L until 100L).map(k => (k, 1998, k.toDouble)).toSet
     assert(got == want,
       s"missing=${(want -- got).take(5)} extra=${(got -- want).take(5)}")
-    assert(ManifestTable.renameLines(dir,
-      ManifestTable.currentVersion(dir)).nonEmpty,
+    assert(Snapshot.read(dir,
+      ManifestTable.currentVersion(dir)).renames.nonEmpty,
       "the overwrite must carry the markers for untouched old-name files")
     ManifestTable.destroy(root)
   }

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * state without compaction. */
 class Round14Spec extends AnyFunSuite {
   import TestSpark._
-  import sources.ManifestTable
+  import sources.{ManifestTable, Snapshot}
 
   private def freshDir(tag: String): String = {
     val d = s"${System.getProperty("java.io.tmpdir")}/graft_r14_${tag}_" +
@@ -55,7 +55,7 @@ class Round14Spec extends AnyFunSuite {
       WHEN MATCHED THEN UPDATE SET v = s.v
       WHEN NOT MATCHED THEN INSERT *""")                    // v5
     val vM = ManifestTable.currentVersion(dir)
-    assert(ManifestTable.renameLines(dir, vM).nonEmpty,
+    assert(Snapshot.read(dir, vM).renames.nonEmpty,
       "the rename chain survives the MERGE")
     val after = spark.sql("SELECT id, v FROM g14lf.default.t")
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
@@ -109,7 +109,7 @@ class Round14Spec extends AnyFunSuite {
     val v = ManifestTable.currentVersion(dir)
     assert(ManifestTable.dvEntries(dir, v).map(_.col).toSet ==
       Set("uid", "k"), "markers stage under the evolved names")
-    assert(ManifestTable.renameLines(dir, v).nonEmpty, "no compaction")
+    assert(Snapshot.read(dir, v).renames.nonEmpty, "no compaction")
     assert(spark.sql("SELECT uid FROM g14rg.default.t")
       .collect().map(_.getString(0)).toSet ==
       ((0 until 20).map(i => s"u$i").toSet -- Set("u3", "u15", "u7")))

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * plus the round-9 feature gates. */
 class Round9Spec extends AnyFunSuite {
   import TestSpark._
-  import sources.ManifestTable
+  import sources.{ManifestTable, Snapshot}
 
   private def freshDir(tag: String): String = {
     val d = s"${System.getProperty("java.io.tmpdir")}/graft_r9_${tag}_" +
@@ -31,7 +31,7 @@ class Round9Spec extends AnyFunSuite {
     ev.limit(50).createOrReplaceTempView("r9_ovw_batch")
     spark.sql("INSERT OVERWRITE g9ovw.default.t SELECT * FROM r9_ovw_batch")
     val v = ManifestTable.currentVersion(dir)
-    assert(ManifestTable.policyLines(dir, v).size == 2,
+    assert(Snapshot.read(dir, v).policies.size == 2,
       "overwrite must carry the #policy markers — dropping them is a " +
         "silent governance regression")
     val governed = ManifestTable.readGoverned(spark, dir)
@@ -183,12 +183,12 @@ class Round9Spec extends AnyFunSuite {
       .select("version", "kind").collect().toSeq
     assert(hist(cowDir) == hist(apiDir),
       "CoW DELETE statement must commit exactly like the API deleteKeys")
-    assert(ManifestTable.isMutate(morDir, ManifestTable.currentVersion(morDir)))
+    assert(Snapshot.read(morDir, ManifestTable.currentVersion(morDir)).kind == Snapshot.Mutate)
     // MOR really took the deletion-vector path: markers present, CoW not
-    assert(ManifestTable.dvLines(morDir,
-      ManifestTable.currentVersion(morDir)).nonEmpty)
-    assert(ManifestTable.dvLines(cowDir,
-      ManifestTable.currentVersion(cowDir)).isEmpty)
+    assert(Snapshot.read(morDir,
+      ManifestTable.currentVersion(morDir)).dvs.nonEmpty)
+    assert(Snapshot.read(cowDir,
+      ManifestTable.currentVersion(cowDir)).dvs.isEmpty)
     // and all three answer identically
     val expect = li.filter(!col("l_orderkey").isin(keys: _*)).count()
     Seq(cowDir, morDir, apiDir).foreach(d =>
@@ -220,8 +220,8 @@ class Round9Spec extends AnyFunSuite {
     val vNow = ManifestTable.currentVersion(dir)
     assert(ManifestTable.tableProperties(dir, vNow)("delete.mode") == "mor")
     spark.sql("DELETE FROM g9prop.default.t WHERE k IN (3, 4)")
-    assert(ManifestTable.dvLines(dir,
-      ManifestTable.currentVersion(dir)).nonEmpty,
+    assert(Snapshot.read(dir,
+      ManifestTable.currentVersion(dir)).dvs.nonEmpty,
       "the CREATE TABLE property must route the DELETE through MOR")
     assert(ManifestTable.read(spark, dir).count() == 98)
     // the DSv2 table surfaces them too
@@ -382,7 +382,7 @@ class Round9Spec extends AnyFunSuite {
     val vNow = ManifestTable.currentVersion(dir)
     assert(ManifestTable.tableProperties(dir, vNow)("owner.team") == "data",
       "properties must survive a rename commit")
-    assert(ManifestTable.policyLines(dir, vNow).size == 1,
+    assert(Snapshot.read(dir, vNow).policies.size == 1,
       "policies must survive a rename commit")
     // renaming a column a policy references is refused, not mis-governed
     intercept[IllegalArgumentException] {
@@ -467,7 +467,7 @@ class Round9Spec extends AnyFunSuite {
       when(col("grp") === 3, col("v") * 2).otherwise(col("v")))
       .agg(sum("v")).head().getDouble(0)
     assert(math.abs(afterUpdate.agg(sum("v")).head().getDouble(0) - expectSum) < 1e-9)
-    assert(ManifestTable.isMutate(dir, ManifestTable.currentVersion(dir)),
+    assert(Snapshot.read(dir, ManifestTable.currentVersion(dir)).kind == Snapshot.Mutate,
       "a row-level UPDATE must publish a mutate commit")
     // time travel still serves the pre-update snapshot
     assert(math.abs(ManifestTable.readVersion(spark, dir, 0)
@@ -585,19 +585,18 @@ class Round9Spec extends AnyFunSuite {
     run()
     val v1 = ManifestTable.currentVersion(dir)
     assert(ManifestTable.read(spark, dir).count() == 40)
-    val epochs = ManifestTable.epochLines(dir, v1)
+    val epochs = Snapshot.read(dir, v1).epochs
     assert(epochs.size == 1, "one streaming query = one high-water marker")
     // a same-checkpoint restart appends nothing (source offsets recorded)
     run()
     assert(ManifestTable.read(spark, dir).count() == 40)
-    // the marker survives unrelated lifecycle commits (carriedMeta)
+    // the marker survives unrelated lifecycle commits
     ManifestTable.compact(spark, dir, numFiles = 1)
     val vNow = ManifestTable.currentVersion(dir)
-    assert(ManifestTable.epochLines(dir, vNow) == epochs,
+    assert(Snapshot.read(dir, vNow).epochs == epochs,
       "the epoch high-water must ride every successor commit")
     // the exactly-once guard: a replayed epoch <= the marker no-ops
-    val queryId = epochs.head.split('\t')(1)
-    val epochId = epochs.head.split('\t')(2).toLong
+    val (queryId, epochId) = epochs.head
     assert(ManifestTable.committedEpoch(dir, vNow, queryId).contains(epochId))
   }
 

@@ -44,7 +44,7 @@ class DeltaRebaseSpec extends AnyFunSuite {
     GraftDeltaCommitter.commit(dir, 0, deleteAll(p2, dir),
       () => Some(Set(p2)))
     assert(ManifestTable.currentVersion(dir) == 2)
-    assert(ManifestTable.isMutate(dir, 2))
+    assert(Snapshot.read(dir, 2).kind == Snapshot.Mutate)
     val remaining = ManifestTable.read(spark, dir).agg(
       count(lit(1)), min(col("k")), max(col("k"))).head()
     assert((remaining.getLong(0), remaining.getLong(1), remaining.getLong(2))
