@@ -60,10 +60,10 @@ object Explain {
     "q_ngram_jaccard", "q_containment", "q_doc_embed", "q_minhash_pairs",
     "q_split_leakage",
     // round 14: the positional-DV and rename-pushdown queries build +
-    // mutate manifest tables at construction; the DSIR select executes
-    // its eager localCheckpoint
+    // mutate manifest tables at construction; the DSIR select and the
+    // clean corpus execute their eager localCheckpoints
     "q_positional_dv", "q_changes_positional", "q_rename_pushdown",
-    "q_dsir_select",
+    "q_dsir_select", "q_clean_corpus",
     // round 15: the DSIR sampler and substring-dedup execute their
     // eager localCheckpoints; the view and MOR-count queries build +
     // mutate manifest tables at construction
@@ -117,17 +117,7 @@ object Explain {
         "q_ngram_jaccard", "q_ngram_counts", "q_chunk_docs", "q_session_window")
     // FINAL mode executes real work → use the bench-shaped session; the
     // static explain sweep stays tiny (plans only)
-    val width = if (finalMode) sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") else "4"
-    val spark = SparkSession.builder()
-      .master(s"local[$width]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", width)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.windowExec.buffer.in.memory.threshold", "1048576")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession(if (finalMode) LocalSession.envCpus else "4")
     spark.sparkContext.setLogLevel("ERROR")
     if (finalMode) { finalJoins(spark, sfDir, names); spark.stop(); return }
     names.foreach { n =>

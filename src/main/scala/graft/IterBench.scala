@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Multi-scale fixpoint measurement: `IterBench <sfDir>` builds the
   * SCALE-PATH near-dup pair graph (MinHash+LSH banding — pair count and
@@ -21,43 +20,35 @@ import org.apache.spark.sql.SparkSession
 object IterBench {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession()
     spark.sparkContext.setLogLevel("WARN")
 
-    val pairs = operators.DedupOps.minhashLsh(spark, dir)
-      .select("doc_a", "doc_b")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = pairs.count()
+    Materialize.scoped { held =>
+      val pairs = held(operators.DedupOps.minhashLsh(spark, dir)
+        .select("doc_a", "doc_b"))
+      val n = pairs.count()
 
-    def timed[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val a = f
-      (a, (System.nanoTime() - t0) / 1e9)
+      def timed[A](f: => A): (A, Double) = {
+        val t0 = System.nanoTime()
+        val a = f
+        (a, (System.nanoTime() - t0) / 1e9)
+      }
+      val ((starLabels, starRounds), starSecs) = timed {
+        val (df, r) = operators.CurationOps.starComponentsWithRounds(spark, pairs)
+        val mat = df.localCheckpoint(true) // materialize inside the timing
+        (mat, r)
+      }
+      val ((lpLabels, lpRounds), lpSecs) = timed {
+        val (df, r) = operators.CurationOps.labelPropagationWithRounds(spark, pairs)
+        val mat = df.localCheckpoint(true)
+        (mat, r)
+      }
+      // the two algorithms must produce the SAME labeling (symmetric diff 0)
+      val agree = starLabels.exceptAll(lpLabels).isEmpty &&
+        lpLabels.exceptAll(starLabels).isEmpty
+      println(f"[iterbench] dir=$dir pairs=$n star_rounds=$starRounds " +
+        f"star_secs=$starSecs%.1f lp_rounds=$lpRounds lp_secs=$lpSecs%.1f agree=$agree")
     }
-    val ((starLabels, starRounds), starSecs) = timed {
-      val (df, r) = operators.CurationOps.starComponentsWithRounds(spark, pairs)
-      val mat = df.localCheckpoint(true) // materialize inside the timing
-      (mat, r)
-    }
-    val ((lpLabels, lpRounds), lpSecs) = timed {
-      val (df, r) = operators.CurationOps.labelPropagationWithRounds(spark, pairs)
-      val mat = df.localCheckpoint(true)
-      (mat, r)
-    }
-    // the two algorithms must produce the SAME labeling (symmetric diff 0)
-    val agree = starLabels.exceptAll(lpLabels).isEmpty &&
-      lpLabels.exceptAll(starLabels).isEmpty
-    println(f"[iterbench] dir=$dir pairs=$n star_rounds=$starRounds " +
-      f"star_secs=$starSecs%.1f lp_rounds=$lpRounds lp_secs=$lpSecs%.1f agree=$agree")
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft.ml
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import org.apache.spark.ml.Pipeline
 import org.apache.spark.ml.evaluation.RegressionEvaluator
 import org.apache.spark.ml.feature.{OneHotEncoder, StringIndexer, VectorAssembler}
@@ -31,19 +31,18 @@ object Forecast {
     * correlations ≈ 0), so the label is the reference's revenue formula
     * `extendedprice * (1 - discount)` — a real relationship the pipeline must
     * recover (R² ≈ 1 asserted in tests) rather than noise it can't. */
-  def fareRegression(s: SparkSession, dir: String): DataFrame = {
+  def fareRegression(s: SparkSession, dir: String): DataFrame = Materialize.scoped { held =>
     import s.implicits._
-    // Persist the feature projection: the fit, the test-metric pass, and the
+    // Hold the feature projection: the fit, the test-metric pass, and the
     // split counts all re-derive from it — uncached, each action re-ran the
     // parquet scan + projection + per-partition sampling (guide §5: reused
     // AND more expensive to recompute than to hold; ~4 narrow doubles/row).
     // Caching never changes values: same data, same partitioning, so the
     // seed-42 split is bit-identical.
-    val data = Tables.lineitem(s, dir)
+    val data = held(Tables.lineitem(s, dir)
       .select($"l_extendedprice", $"l_discount",
         ($"l_extendedprice" * $"l_discount").as("price_disc"),
-        ($"l_extendedprice" * (lit(1.0) - $"l_discount")).as("label"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        ($"l_extendedprice" * (lit(1.0) - $"l_discount")).as("label")))
     val Array(train, test) = data.randomSplit(Array(0.8, 0.2), seed = 42)
 
     val pipeline = new Pipeline().setStages(Array(
@@ -68,7 +67,6 @@ object Forecast {
     val (nTest, sse, sy, syy) =
       (m.getLong(0), m.getDouble(1), m.getDouble(2), m.getDouble(3))
     val nTrain = data.count() - nTest
-    data.unpersist(false)
     val rmse = math.sqrt(sse / nTest)
     val r2 = 1.0 - sse / (syy - sy * sy / nTest)
     Seq((nTrain, nTest, rmse, r2))
@@ -76,28 +74,27 @@ object Forecast {
   }
 
   /** GBT demand forecast on hourly event counts; returns one metrics row. */
-  def demandForecast(s: SparkSession, dir: String): DataFrame = {
+  def demandForecast(s: SparkSession, dir: String): DataFrame = Materialize.scoped { held =>
     import s.implicits._
-    // Persist the tiny hourly aggregate (a few hundred to a few thousand
+    // Hold the tiny hourly aggregate (a few hundred to a few thousand
     // rows): uncached, the GBT fit, both evaluator passes, and both split
     // counts each re-ran the full events scan + hash aggregate (guide §5).
     // Caching changes no values — same rows, same partitioning, identical
     // seed-42 split.
-    // coalesce(1) before the persist: the hourly aggregate is O(hours ×
+    // coalesce(1) before the cache: the hourly aggregate is O(hours ×
     // event types) rows — thousands at any fixture scale, bounded by the
     // time range, not the fact volume — yet uncoalesced it cached as 32
     // shuffle partitions and every one of the GBT fit's ~50 tiny jobs
     // launched 32+ tasks over it (pure scheduling overhead, guide §2.6).
     // The narrow coalesce keeps the events scan + partial agg parallel;
     // only the final (tiny) agg output lands in one partition.
-    val hourly = Tables.events(s, dir)
+    val hourly = held(Tables.events(s, dir)
       .groupBy(date_trunc("hour", $"ts").as("hour_ts"), $"event_type")
       .agg(count(lit(1)).cast("double").as("label"))
       .select($"label", $"event_type",
         hour($"hour_ts").cast("double").as("hod"),
         dayofweek($"hour_ts").cast("double").as("dow"))
-      .coalesce(1)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .coalesce(1))
     val Array(train, test) = hourly.randomSplit(Array(0.8, 0.2), seed = 42)
 
     val pipeline = new Pipeline().setStages(Array(
@@ -118,7 +115,6 @@ object Forecast {
       .first()
     val (nTest, sse, sae) = (m.getLong(0), m.getDouble(1), m.getDouble(2))
     val nTrain = hourly.count() - nTest
-    hourly.unpersist(false)
     val rmse = math.sqrt(sse / nTest)
     val mae = sae / nTest
     Seq((nTrain, nTest, rmse, mae))
@@ -128,27 +124,26 @@ object Forecast {
   /** CrossValidator over the demand LR: 2×2 hyperparameter grid, 3 folds,
     * fixed seed — model selection machinery on the small hourly aggregate
     * (SURVEY.md §7 Phase 5). Returns the winning params + metric. */
-  def demandCrossVal(s: SparkSession, dir: String): DataFrame = {
+  def demandCrossVal(s: SparkSession, dir: String): DataFrame = Materialize.scoped { held =>
     import org.apache.spark.ml.tuning.{CrossValidator, ParamGridBuilder}
     import s.implicits._
-    // Persist the tiny hourly aggregate: CrossValidator's 3 folds × 4 grid
+    // Hold the tiny hourly aggregate: CrossValidator's 3 folds × 4 grid
     // points each re-evaluated the events scan + aggregate through the
     // fold splits — one cache turns ~12 rescans into one (guide §5).
     // coalesce(1) for the same reason as demandForecast: the 3 folds × 4
     // grid points ran ~80 jobs of 32-38 tasks each over a cached aggregate
     // of a few thousand rows — the 32-partition cached layout was the
-    // whole regression this persist caused in round 17 (job scheduling ×
+    // whole regression this cache caused in round 17 (job scheduling ×
     // task launch overhead, guide §2.6). One cached partition makes each
     // fold fit a single-task job. Metric flags are bound checks, so the
     // (deterministic) split realignment cannot flip the hashed output.
-    val hourly = Tables.events(s, dir)
+    val hourly = held(Tables.events(s, dir)
       .groupBy(date_trunc("hour", $"ts").as("hour_ts"), $"event_type")
       .agg(count(lit(1)).cast("double").as("label"))
       .select($"label", $"event_type",
         hour($"hour_ts").cast("double").as("hod"),
         dayofweek($"hour_ts").cast("double").as("dow"))
-      .coalesce(1)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .coalesce(1))
 
     val lr = new LinearRegression().setSolver("normal")
     val pipeline = new Pipeline().setStages(Array(
@@ -171,7 +166,6 @@ object Forecast {
       // normal-equation solves; serially they just serialize job scheduling
       .setParallelism(4)
     val model = cv.fit(hourly)
-    hourly.unpersist(false)
     val best = model.bestModel.asInstanceOf[org.apache.spark.ml.PipelineModel]
       .stages.last.asInstanceOf[org.apache.spark.ml.regression.LinearRegressionModel]
     Seq((best.getRegParam, best.getElasticNetParam, model.avgMetrics.min))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -52,13 +52,12 @@ object CurationOps {
     * totals one row, and the per-doc score is a map-side join + hash
     * aggregate — nothing shuffles the text, nothing is all-pairs, and
     * the expensive tokenize runs once. */
-  def dsirSelect(s: SparkSession, dir: String): DataFrame = {
+  def dsirSelect(s: SparkSession, dir: String): DataFrame = Materialize.scoped { held =>
     import s.implicits._
-    val feats = Tables.documentsSpread(s, dir)
+    val feats = held(Tables.documentsSpread(s, dir)
       .select($"doc_id", $"lang", explode(toks($"text")).as("tok"))
       .where($"tok" =!= "")
-      .select($"doc_id", $"lang", substring(md5($"tok"), 1, 2).as("f"))
-      .persist()
+      .select($"doc_id", $"lang", substring(md5($"tok"), 1, 2).as("f")))
     val stat = feats.groupBy($"f").agg(
       count(lit(1)).as("cr"),
       count(when($"doc_id" % 7 === 0, 1)).as("ct"))
@@ -81,19 +80,14 @@ object CurationOps {
     // positive LLR votes): on this synthetic fixture the stand-in
     // target's unigram distribution matches raw, so n_selected is
     // honestly ~0 — the oracle still bites on every doc's exact
-    // integer score through the sums and extrema. The eager
-    // localCheckpoint EXECUTES the plan while the token cache is live
-    // (the sibling ops' pattern); a finally-unpersist would evict it
-    // before the caller ever ran the lazy plan.
-    val out = scores.groupBy($"lang")
+    // integer score through the sums and extrema.
+    scores.groupBy($"lang")
       .agg(count(lit(1)).as("n_docs"),
         count(when($"score" > 0, 1)).as("n_selected"),
         sum($"score").as("sum_score"),
         min($"score").as("min_score"),
         max($"score").as("max_score"))
       .localCheckpoint(true)
-    feats.unpersist(false)
-    out
   }
 
   private val dsirSelectSql =
@@ -150,20 +144,15 @@ object CurationOps {
     * window — no global sort, no per-source serialization. The oracle
     * states the plain global per-source cumsum semantics. */
   def dsirSample(s: SparkSession, dir: String,
-      target: Column = col("doc_id") % 97 === 0): DataFrame = {
+      target: Column = col("doc_id") % 97 === 0): DataFrame = Materialize.scoped { held =>
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    val feats = Tables.documentsSpread(s, dir)
+    // filled: the stat aggregate, the scores join and the two broadcast
+    // builds (dirn, cum) schedule concurrently (unfilled, jobSum ~3.4× wall)
+    val feats = held.fill(Tables.documentsSpread(s, dir)
       .select($"doc_id", $"source", explode(toks($"text")).as("tok"))
       .where($"tok" =!= "")
-      .select($"doc_id", $"source", substring(md5($"tok"), 1, 2).as("f"))
-      .persist()
-    // materialize ONCE before the consumers launch: the stat aggregate,
-    // the scores join, and the two broadcast builds (dirn, cum) schedule
-    // concurrently, and concurrent first-touch of an unmaterialized cache
-    // re-runs the tokenize→explode→md5 pipeline per consumer (measured:
-    // jobSum ~3.4× wall on this query) — guide §5 caching
-    feats.count()
+      .select($"doc_id", $"source", substring(md5($"tok"), 1, 2).as("f")))
     val stat = feats.groupBy($"f").agg(
       count(when(!target, 1)).as("cr"),
       count(when(target, 1)).as("ct"))
@@ -198,12 +187,11 @@ object CurationOps {
     // the per-doc score table is TINY (one row per raw doc) but its
     // pipeline (feats join dirn → groupBy) is the query's heavy pass, and
     // it feeds THREE consumers (the cum broadcast build and both union
-    // sides) that schedule as separate jobs — cache it as one partition
-    // and materialize once (guide §5; measured jobSum ~3× wall before)
-    val ranked = scores.withColumn("pri", pri)
+    // sides) that schedule as separate jobs — fill it as one partition
+    // (measured jobSum ~3× wall before)
+    val ranked = held.fill(scores.withColumn("pri", pri)
       .withColumn("bkt", floor((-$"pri").cast("double") / 1048576.0).cast("int"))
-      .coalesce(1).persist()
-    ranked.count()
+      .coalesce(1))
     val bucketW = Window.partitionBy($"source").orderBy($"bkt")
     val cum = ranked.groupBy($"source", $"bkt")
       .agg(sum($"n_tokens").as("btok"))
@@ -219,18 +207,13 @@ object CurationOps {
       .withColumn("before",
         $"cum_before" + sum($"n_tokens").over(withinW) - $"n_tokens")
       .filter($"before" < budget)
-    // eager: the plan must execute while the token cache is live (the
-    // dsirSelect pattern — a finally-unpersist would evict it first)
-    val out = full.select($"source", $"n_tokens", $"score")
+    full.select($"source", $"n_tokens", $"score")
       .union(boundary.select($"source", $"n_tokens", $"score"))
       .groupBy($"source")
       .agg(count(lit(1)).as("n_docs"),
         sum($"n_tokens").as("sum_tokens"),
         sum($"score").as("sum_score"))
       .localCheckpoint(true)
-    ranked.unpersist(false)
-    feats.unpersist(false)
-    out
   }
 
   private val dsirSampleSql =
@@ -317,33 +300,33 @@ object CurationOps {
     * aggregate carries only surviving (doc_id, hash) pairs. Pairwise work
     * happens on 64-bit hashes, never strings (collisions ~|sh|²/2⁶⁴,
     * negligible; the oracle checks the string semantics agree). */
-  def decontaminate(s: SparkSession, dir: String): DataFrame = {
+  def decontaminate(s: SparkSession, dir: String): DataFrame = Materialize.scoped { held =>
     import s.implicits._
-    // persist the hashed-shingle projection: both branches consume it, and
-    // without materialization InferFiltersFromGenerate pushes size(sh)>0 /
-    // isnotnull(sh) predicates below the explode — re-evaluating the whole
-    // tokenize→shingle→hash pipeline 3× per row (measured 7.6 s → 1.5 s at
-    // sf0.1). Cache holds only (doc_id, 64-bit hashes) — tiny vs the text.
-    val docs = Tables.documentsSpread(s, dir)
-      .filter(size(toks($"text")) >= 3)
-      .select($"doc_id",
-        transform(shingles($"text", 3), x => xxhash64(x)).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materialize once: the benchmark-side broadcast build and the
-    // corpus-side probe scan schedule concurrently, and concurrent
-    // first-touch of an unmaterialized cache re-runs the shingle pipeline
-    // per consumer (guide §5 caching)
-    docs.count()
-    val bench = docs.filter($"doc_id" % 97 === 0)
-      .select(explode($"sh").as("h")).distinct()
-    val out = docs.filter($"doc_id" % 97 =!= 0)
+    val (docs, bench) = shingleHashes(s, dir, held)
+    docs.filter($"doc_id" % 97 =!= 0)
       .select($"doc_id", explode($"sh").as("h"))
       .join(broadcast(bench), "h")
       .groupBy($"doc_id")
       .agg(count(lit(1)).as("n_shared"))
       .localCheckpoint(true)
-    docs.unpersist(false)
-    out
+  }
+
+  /** The decontamination family's shared inputs: the filled (doc_id, sh)
+    * projection of every document with ≥ 3 tokens, sh = its distinct
+    * 3-shingles hashed to 64 bits, and the benchmark set = the distinct
+    * hashes of the `doc_id % 97 = 0` stand-in. The cache is the plan's
+    * barrier too: without it InferFiltersFromGenerate pushes size(sh)>0 /
+    * isnotnull(sh) below the explode and re-evaluates the whole
+    * tokenize→shingle→hash pipeline 3× per row (measured 7.6 s → 1.5 s at
+    * sf0.1). It holds only 64-bit hashes — tiny vs the text. */
+  private def shingleHashes(s: SparkSession, dir: String,
+      held: Materialize.Held): (DataFrame, DataFrame) = {
+    import s.implicits._
+    val docs = held.fill(Tables.documentsSpread(s, dir)
+      .filter(size(toks($"text")) >= 3)
+      .select($"doc_id",
+        transform(shingles($"text", 3), x => xxhash64(x)).as("sh")))
+    (docs, docs.filter($"doc_id" % 97 === 0).select(explode($"sh").as("h")).distinct())
   }
 
   /** Streaming decontamination: the corpus arrives as a document STREAM
@@ -354,7 +337,8 @@ object CurationOps {
     * O(flagged docs) — a production deployment would watermark on ingest
     * time; the bounded replay keeps it exact here). Same oracle as the batch
     * op: streaming must not change the answer. */
-  def streamingDecontaminate(s: SparkSession, dir: String): DataFrame = {
+  def streamingDecontaminate(s: SparkSession,
+      dir: String): DataFrame = Materialize.scoped { held =>
     import s.implicits._
     val docSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
@@ -364,11 +348,10 @@ object CurationOps {
       org.apache.spark.sql.types.StructField("n_chars", org.apache.spark.sql.types.LongType)))
     // static side: benchmark shingle hashes — PERSISTED, because the static
     // side of a stream-static join is re-evaluated every micro-batch
-    val bench = Tables.documents(s, dir)
+    val bench = held(Tables.documents(s, dir)
       .filter($"doc_id" % 97 === 0 && size(toks($"text")) >= 3)
       .select(explode(transform(shingles($"text", 3), x => xxhash64(x))).as("h"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     graft.functions.ShingleGen.register(s)
     val stream = s.readStream.schema(docSchema)
       .parquet(s"$dir/[d]ocuments.parquet")
@@ -384,9 +367,7 @@ object CurationOps {
       .join(broadcast(bench), "h")
       .groupBy($"doc_id")
       .agg(count(lit(1)).as("n_shared"))
-    val out = graft.streaming.StreamingOps.runToParquet(s, stream, "graft_decont")
-    bench.unpersist(false)
-    out
+    graft.streaming.StreamingOps.runToParquet(s, stream, "graft_decont")
   }
 
   private val decontaminateSql =
@@ -566,14 +547,12 @@ object CurationOps {
     * count it converged in — shared by the fixture query and the
     * multi-scale fixpoint measurement (`graft.IterBench` / SF1.md). */
   private[graft] def labelPropagationWithRounds(s: SparkSession,
-      pairTable: DataFrame): (DataFrame, Int) = {
+      pairTable: DataFrame): (DataFrame, Int) = Materialize.scoped { held =>
     import s.implicits._
     val cols = pairTable.columns
-    val pairs = pairTable
-      .select(col(cols(0)).as("doc_a"), col(cols(1)).as("doc_b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val edges = pairs.union(pairs.select($"doc_b", $"doc_a")).toDF("src", "dst")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val pairs = held(pairTable
+      .select(col(cols(0)).as("doc_a"), col(cols(1)).as("doc_b")))
+    val edges = held(pairs.union(pairs.select($"doc_b", $"doc_a")).toDF("src", "dst"))
     var labels = edges.select($"src".as("id")).distinct()
       .withColumn("label", $"id").localCheckpoint(true)
     // labels only ever decrease, so Σlabel strictly decreases until the
@@ -595,8 +574,6 @@ object CurationOps {
       labels = next
       iter += 1
     }
-    pairs.unpersist(false)
-    edges.unpersist(false)
     // the scale-governing number for an iterative op: each round is a
     // full shuffle, so round count IS the cost model (SF1.md measures it)
     System.err.println(s"[rounds] dedup_clusters_labelprop rounds=$iter")
@@ -885,25 +862,9 @@ object CurationOps {
     * only quality-rule survivors kept — summarized per language. The anti/
     * semi joins carry only doc_id sets (never text); every shuffle is keyed
     * on doc_id. */
-  def cleanCorpus(s: SparkSession, dir: String): DataFrame = {
+  def cleanCorpus(s: SparkSession, dir: String): DataFrame = Materialize.scoped { held =>
     import s.implicits._
-    // lazy twin of decontaminate(): the anti join needs only the doc_id set,
-    // so skip the eager checkpoint (which would run the full decontamination
-    // job at plan-construction time). The persist guards the shingle
-    // projection from InferFiltersFromGenerate re-evaluation; it
-    // materializes once inside the single final action.
-    val docs = Tables.documentsSpread(s, dir)
-      .filter(size(toks($"text")) >= 3)
-      .select($"doc_id",
-        transform(shingles($"text", 3), x => xxhash64(x)).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materialize once: the benchmark-side broadcast build and the
-    // corpus-side probe scan schedule concurrently, and concurrent
-    // first-touch of an unmaterialized cache re-runs the shingle pipeline
-    // per consumer (guide §5 caching)
-    docs.count()
-    val bench = docs.filter($"doc_id" % 97 === 0)
-      .select(explode($"sh").as("h")).distinct()
+    val (docs, bench) = shingleHashes(s, dir, held)
     val contaminated = docs.filter($"doc_id" % 97 =!= 0)
       .select($"doc_id", explode($"sh").as("h"))
       .join(broadcast(bench), "h")
@@ -914,8 +875,7 @@ object CurationOps {
     // recomputed ~6× per row — measured ~6.7 s for the composition vs
     // ~0.5 s for the rules alone). Cached: the tiny (doc_id, flags) table;
     // the filter then runs against cached rows.
-    val keepers = TextAnalysis.qualityRules(s, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val keepers = held(TextAnalysis.qualityRules(s, dir))
       .filter($"keep").select($"doc_id")
     Tables.documents(s, dir)
       .filter($"doc_id" % 97 =!= 0)
@@ -924,6 +884,7 @@ object CurationOps {
       .groupBy($"lang")
       .agg(count(lit(1)).as("n_docs"),
         sum($"n_chars").as("sum_chars"))
+      .localCheckpoint(true)
   }
 
   private def cleanCorpusSql(rulesSql: String): String =
@@ -1000,24 +961,13 @@ object CurationOps {
     * kilobytes no matter how many eval benchmarks pile up, and the exact
     * verify join only sees sketch survivors (false positives get dropped
     * there, so the oracle is the same SQL as `q_decontaminate`). */
-  def bloomDecontaminate(s: SparkSession, dir: String): DataFrame = {
+  def bloomDecontaminate(s: SparkSession, dir: String): DataFrame = Materialize.scoped { held =>
     import s.implicits._
     graft.functions.BloomOps.register(s)
-    val docs = Tables.documentsSpread(s, dir)
-      .filter(size(toks($"text")) >= 3)
-      .select($"doc_id",
-        transform(shingles($"text", 3), x => xxhash64(x)).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materialize once: the benchmark-side broadcast build and the
-    // corpus-side probe scan schedule concurrently, and concurrent
-    // first-touch of an unmaterialized cache re-runs the shingle pipeline
-    // per consumer (guide §5 caching)
-    docs.count()
-    val bench = docs.filter($"doc_id" % 97 === 0)
-      .select(explode($"sh").as("h")).distinct()
+    val (docs, bench) = shingleHashes(s, dir, held)
     val sketch = bench.agg(
       graft.functions.BloomOps.bloomBuild($"h", 1 << 18, 5).as("bloom"))
-    val out = docs.filter($"doc_id" % 97 =!= 0)
+    docs.filter($"doc_id" % 97 =!= 0)
       .select($"doc_id", explode($"sh").as("h"))
       .join(broadcast(sketch)) // 1-row sketch, cross-broadcast
       .filter(graft.functions.BloomOps.bloomContains($"bloom", $"h"))
@@ -1026,8 +976,6 @@ object CurationOps {
       .groupBy($"doc_id")
       .agg(count(lit(1)).as("n_shared"))
       .localCheckpoint(true)
-    docs.unpersist(false)
-    out
   }
 
   /** Sequence packing — the GPT-style training-data step that concatenates
@@ -1183,26 +1131,15 @@ object CurationOps {
     * only (doc_id, count) pairs; the persisted projection holds 64-bit
     * hashes, never text. The left join adds one shuffle of (doc_id, n_total)
     * pairs — 16 bytes a row regardless of document size. */
-  def contamFraction(s: SparkSession, dir: String): DataFrame = {
+  def contamFraction(s: SparkSession, dir: String): DataFrame = Materialize.scoped { held =>
     import s.implicits._
-    val docs = Tables.documentsSpread(s, dir)
-      .filter(size(toks($"text")) >= 3)
-      .select($"doc_id",
-        transform(shingles($"text", 3), x => xxhash64(x)).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materialize once: the benchmark-side broadcast build and the
-    // corpus-side probe scan schedule concurrently, and concurrent
-    // first-touch of an unmaterialized cache re-runs the shingle pipeline
-    // per consumer (guide §5 caching)
-    docs.count()
-    val bench = docs.filter($"doc_id" % 97 === 0)
-      .select(explode($"sh").as("h")).distinct()
+    val (docs, bench) = shingleHashes(s, dir, held)
     val corpus = docs.filter($"doc_id" % 97 =!= 0)
     val shared = corpus.select($"doc_id", explode($"sh").as("h"))
       .join(broadcast(bench), "h")
       .groupBy($"doc_id")
       .agg(count(lit(1)).as("n_shared"))
-    val out = corpus.select($"doc_id", size($"sh").cast("long").as("n_total"))
+    corpus.select($"doc_id", size($"sh").cast("long").as("n_total"))
       .join(shared, Seq("doc_id"), "left")
       .withColumn("n_shared", coalesce($"n_shared", lit(0L)))
       .groupBy(expr("(10 * n_shared) div n_total").as("decile"))
@@ -1210,8 +1147,6 @@ object CurationOps {
         sum($"n_shared").as("sum_shared"),
         sum($"n_total").as("sum_total"))
       .localCheckpoint(true)
-    docs.unpersist(false)
-    out
   }
 
   private val contamFractionSql =
@@ -1517,7 +1452,7 @@ object CurationOps {
     * re-evaluates per micro-batch — and carry only (lang, block, hashes),
     * never text. The G-way block explode replicates only the streamed
     * batch, reproducing the batch operator's shuffle shape. */
-  def streamIngestReport(s: SparkSession, dir: String): DataFrame = {
+  def streamIngestReport(s: SparkSession, dir: String): DataFrame = Materialize.scoped { held =>
     import s.implicits._
     graft.functions.ArrayOps.register(s)
     val G = 8
@@ -1546,10 +1481,9 @@ object CurationOps {
     val corpusWide =
       if (corpusFiltered.rdd.getNumPartitions < sp) corpusFiltered.repartition(sp)
       else corpusFiltered
-    val corpusSh = corpusWide
+    val corpusSh = held(corpusWide
       .select($"lang", hsh($"text").as("sh_b"),
-        pmod(xxhash64($"doc_id"), lit(G)).as("gb"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        pmod(xxhash64($"doc_id"), lit(G)).as("gb")))
 
     val stream = s.readStream.schema(docSchema)
       .parquet(s"$dir/[d]ocuments.parquet")
@@ -1570,7 +1504,6 @@ object CurationOps {
     val nearCounts = graft.streaming.StreamingOps
       .runToParquet(s, stream, "graft_ingest")
       .select($"doc_id", $"n_near")
-    corpusSh.unpersist(false)
 
     // cheap stages compose batch-side around the drained counts
     val batch = Tables.documents(s, dir).filter($"doc_id" >= cut)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import graft.functions.VectorOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -84,24 +84,21 @@ object DedupOps {
     * the join output. No task holds more than (n_lang/G)² candidates and
     * nothing unbounded is broadcast (AQE may still broadcast at fixture
     * scale — the correct adaptive choice, not a plan property). */
-  def ngramJaccard(s: SparkSession, dir: String, threshold: Double = 0.3): DataFrame = {
+  def ngramJaccard(s: SparkSession, dir: String,
+      threshold: Double = 0.3): DataFrame = Materialize.scoped { held =>
     import s.implicits._
     graft.functions.ArrayOps.register(s)
     val G = 8
-    // persist + materialize ONCE: both legs of the self-join below are
-    // separate shuffle map stages, so uncached the tokenize→shingle→hash→
-    // sort pipeline ran TWICE per call (guide §1.2 / §5) — and this pair
-    // table feeds five registered queries (jaccard, clusters ×2,
-    // keep-best, cluster-cap). The eager checkpoint of the (tiny) pair
-    // output lets the cache drop before the caller's plan runs.
-    val docs = Tables.documentsSpread(s, dir)
+    // filled: both legs of the self-join below are separate shuffle map
+    // stages, so uncached the tokenize→shingle→hash→sort pipeline ran TWICE
+    // per call (guide §1.2) — and this pair table feeds five registered
+    // queries (jaccard, clusters ×2, keep-best, cluster-cap)
+    val docs = held.fill(Tables.documentsSpread(s, dir)
       // cheap precondition (= the oracle's len(t)>=3): filtering on size(sh)
       // would evaluate the whole shingle pipeline a second time
       .filter(size(toks($"text")) >= 3)
       .select($"doc_id", $"lang", hashedShingles($"text").as("sh"))
-      .withColumn("g", pmod(xxhash64($"doc_id"), lit(G)))
-      .persist()
-    docs.count()
+      .withColumn("g", pmod(xxhash64($"doc_id"), lit(G))))
     val a = docs.select($"lang", $"doc_id".as("doc_a"), $"sh".as("sh_a"), $"g".as("ga"))
       .withColumn("gb", explode(sequence($"ga", lit(G - 1))))
     val b = docs.select($"lang", $"doc_id".as("doc_b"), $"sh".as("sh_b"), $"g".as("gb"))
@@ -110,7 +107,7 @@ object DedupOps {
     // lang × G(G+1)/2 block keys. A broadcast join here (AQE's pick at
     // fixture scale, where the single-split probe side is one task) serializes
     // the whole pair scan; at 100 TB neither side is broadcastable anyway.
-    val out = a.join(b.hint("SHUFFLE_HASH"), Seq("lang", "ga", "gb"))
+    a.join(b.hint("SHUFFLE_HASH"), Seq("lang", "ga", "gb"))
       // diagonal blocks see both orientations and self-pairs: keep one
       .filter($"ga" =!= $"gb" || $"doc_a" < $"doc_b")
       // size-ratio upper bound: jaccard <= min(|A|,|B|)/max(|A|,|B|) — prunes
@@ -127,9 +124,7 @@ object DedupOps {
         greatest($"doc_a", $"doc_b").as("doc_b"),
         jaccard($"sh_a", $"sh_b").as("jacc"))
       .filter($"jacc" > threshold)
-      .localCheckpoint(true) // tiny pair table; lets docs unpersist now
-    docs.unpersist(false)
-    out
+      .localCheckpoint(true) // tiny pair table
   }
 
   /** ASYMMETRIC containment detection — the doc-inside-doc case the
@@ -143,25 +138,23 @@ object DedupOps {
     * directions of each unordered pair are evaluated from the ONE joined
     * row. The threshold compare is pure-integer (`inter·10 ≥ 9·|inner|`),
     * so no float boundary can flip membership across engines. */
-  def containmentPairs(s: SparkSession, dir: String): DataFrame = {
+  def containmentPairs(s: SparkSession, dir: String): DataFrame = Materialize.scoped { held =>
     import s.implicits._
     graft.functions.ArrayOps.register(s)
     val G = 8
-    // same single-computation recipe as ngramJaccard: persist + materialize
-    // the shingle table once (both self-join legs are separate map stages),
-    // checkpoint the small pair output, release the cache
-    val docs = Tables.documentsSpread(s, dir)
+    // same recipe as ngramJaccard: the shingle table filled once (both
+    // self-join legs are separate map stages), the small pair output
+    // checkpointed
+    val docs = held.fill(Tables.documentsSpread(s, dir)
       .filter(size(toks($"text")) >= 3)
       .select($"doc_id", $"lang", hashedShingles($"text").as("sh"))
-      .withColumn("g", pmod(xxhash64($"doc_id"), lit(G)))
-      .persist()
-    docs.count()
+      .withColumn("g", pmod(xxhash64($"doc_id"), lit(G))))
     val a = docs.select($"lang", $"doc_id".as("doc_a"), $"sh".as("sh_a"), $"g".as("ga"))
       .withColumn("gb", explode(sequence($"ga", lit(G - 1))))
     val b = docs.select($"lang", $"doc_id".as("doc_b"), $"sh".as("sh_b"), $"g".as("gb"))
       .withColumn("ga", explode(sequence(lit(0), $"gb")))
     val inter = graft.functions.ArrayOps.sortedIntersectCount($"sh_a", $"sh_b")
-    val out = a.join(b.hint("SHUFFLE_HASH"), Seq("lang", "ga", "gb"))
+    a.join(b.hint("SHUFFLE_HASH"), Seq("lang", "ga", "gb"))
       .filter($"ga" =!= $"gb" || $"doc_a" < $"doc_b")
       // strict smaller-into-larger: equal-size pairs are the exact-dup
       // detector's job, not containment's
@@ -177,8 +170,6 @@ object DedupOps {
       .select($"lang", $"inner_doc", $"outer_doc",
         ($"inter".cast("double") / $"n_inner").as("coverage"))
       .localCheckpoint(true) // small directed-pair table
-    docs.unpersist(false)
-    out
   }
 
   private val containmentSql = {
@@ -212,7 +203,8 @@ object DedupOps {
     * hashes, permutations, banding, and verification are restated exactly
     * in DuckDB SQL, so the emitted pair set is hash-checked rather than
     * spec-bounded — the xxhash64 family this replaces was Spark-only. */
-  def minhashLsh(s: SparkSession, dir: String, threshold: Double = 0.3): DataFrame = {
+  def minhashLsh(s: SparkSession, dir: String,
+      threshold: Double = 0.3): DataFrame = Materialize.scoped { held =>
     import s.implicits._
     graft.functions.ArrayOps.register(s)
     val numPerm = 32
@@ -223,10 +215,9 @@ object DedupOps {
     // sides, both verification sides) — persist the small per-doc table
     // instead of recomputing the shingling 4×. ~0.5 KB/doc: fits memory at
     // any realistic docs-per-executor; spills to disk otherwise.
-    val docs = Tables.documentsSpread(s, dir)
+    val docs = held(Tables.documentsSpread(s, dir)
       .filter(size(toks($"text")) >= 3)
-      .select($"doc_id", md5Shingles($"text").as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select($"doc_id", md5Shingles($"text").as("sh")))
 
     // Signatures via explode + 32 min-aggregates: one shuffle on doc_id,
     // fully codegen'd — no nested array HOFs, no 32 intermediate arrays/row.
@@ -245,13 +236,10 @@ object DedupOps {
         col(s"m${rowsPerBand * b}").as("m0"),
         col(s"m${rowsPerBand * b + 1}").as("m1"))
     }
-    val bands = sig.select($"doc_id", explode(array(bandCols: _*)).as("e"))
-      .select($"doc_id", $"e.band", $"e.m0", $"e.m1")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materialize ONCE (docs fills transitively through the signature
-    // aggregate) before the band self-join and the two verification joins
-    // race to first-touch the caches — guide §5 caching
-    bands.count()
+    // filled before the band self-join and the two verification joins;
+    // docs fills transitively through the signature aggregate
+    val bands = held.fill(sig.select($"doc_id", explode(array(bandCols: _*)).as("e"))
+      .select($"doc_id", $"e.band", $"e.m0", $"e.m1"))
 
     val candidates = bands.as("x").join(bands.as("y"),
         $"x.band" === $"y.band" && $"x.m0" === $"y.m0" &&
@@ -259,21 +247,14 @@ object DedupOps {
       .select($"x.doc_id".as("doc_a"), $"y.doc_id".as("doc_b"))
       .distinct()
 
-    val result = candidates
+    candidates
       .join(docs.select($"doc_id".as("doc_a"), $"sh".as("sh_a")), "doc_a")
       .join(docs.select($"doc_id".as("doc_b"), $"sh".as("sh_b")), "doc_b")
       // unrounded, same as ngramJaccard — the verification threshold must
       // agree exactly with the brute-force baseline's
       .select($"doc_a", $"doc_b", jaccard($"sh_a", $"sh_b").as("jacc"))
       .filter($"jacc" > threshold)
-
-    // materialize the (small) pair list and release the intermediates now —
-    // leaked persisted blocks otherwise pile up across queries and strangle
-    // storage memory for the rest of the session
-    val out = result.localCheckpoint(true)
-    docs.unpersist(false)
-    bands.unpersist(false)
-    out
+      .localCheckpoint(true)
   }
 
   /** SimHash: 60-bit signature per document from per-token md5-derived bit
@@ -474,7 +455,8 @@ object DedupOps {
     * per-document windows over only the FLAGGED positions. The md5
     * shingle key is engine-portable; a collision flags identically on
     * both sides, so comparisons stay exact. */
-  def substringDedup(s: SparkSession, dir: String, k: Int = 8): DataFrame = {
+  def substringDedup(s: SparkSession, dir: String,
+      k: Int = 8): DataFrame = Materialize.scoped { held =>
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
     val docs = Tables.documentsSpread(s, dir)
@@ -483,15 +465,11 @@ object DedupOps {
       .agg(count(lit(1)).as("n_docs"),
         sum(size($"t")).cast("long").as("total_tokens"))
     // positioned k-shingles: one row per (doc, start position)
-    val sh = docs.where(size($"t") >= k)
+    val sh = held.fill(docs.where(size($"t") >= k)
       .select($"doc_id", $"source",
         posexplode(transform(sequence(lit(0), size($"t") - k),
           i => md5(concat_ws(" ", slice($"t", i + 1, lit(k)))))))
-      .withColumnRenamed("pos", "p").withColumnRenamed("col", "h")
-      .persist()
-    // materialize once before the dup aggregate and the flag join race to
-    // first-touch the cache (guide §5 caching)
-    sh.count()
+      .withColumnRenamed("pos", "p").withColumnRenamed("col", "h"))
     val dup = sh.groupBy($"h")
       .agg(countDistinct($"doc_id").as("nd"))
       .where($"nd" > 1).select($"h")
@@ -509,16 +487,12 @@ object DedupOps {
       .agg(sum($"covered").as("dup_tokens"))
     val flagged = perDoc.groupBy($"source")
       .agg(count(lit(1)).as("n_flagged"), sum($"dup_tokens").as("dup_tokens"))
-    // eager: the plan must execute while the shingle cache is live (the
-    // dsirSelect pattern — a finally-unpersist would evict it first)
-    val out = tot.join(flagged, Seq("source"), "left")
+    tot.join(flagged, Seq("source"), "left")
       .select($"source", $"n_docs",
         coalesce($"n_flagged", lit(0L)).as("n_flagged"),
         coalesce($"dup_tokens", lit(0L)).as("dup_tokens"),
         $"total_tokens")
       .localCheckpoint(true)
-    sh.unpersist(false)
-    out
   }
 
   private val substringDedupSql =

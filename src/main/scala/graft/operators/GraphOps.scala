@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -43,7 +43,7 @@ object GraphOps {
     * at joins/aggregates); this is part of the training-data-engine surface
     * (e.g. PageRank-weighted corpus sampling a la Common Crawl curation).
     */
-  def pageRank(s: SparkSession, dir: String): DataFrame = {
+  def pageRank(s: SparkSession, dir: String): DataFrame = Materialize.scoped { held =>
     import s.implicits._
     val nation = Tables.nation(s, dir)
     val edges = Tables.lineitem(s, dir).select($"l_orderkey", $"l_suppkey")
@@ -57,11 +57,10 @@ object GraphOps {
       .agg(count(lit(1)).as("w"))
     val outw = edges.groupBy($"src").agg(sum($"w").as("wout"))
     // edge transition fractions: exact-int division, computed once and
-    // persisted — the only big table in the loop
-    val frac = edges.join(outw, "src")
+    // held — the only big table in the loop
+    val frac = held(edges.join(outw, "src")
       .select($"src", $"dst",
-        ($"w".cast("double") / $"wout".cast("double")).as("f"))
-      .persist()
+        ($"w".cast("double") / $"wout".cast("double")).as("f")))
     val nodes = nation.select($"n_nationkey".as("node"))
     var ranks = nodes.withColumn("r", lit(InitRank))
     for (_ <- 1 to Iters) {
@@ -72,11 +71,9 @@ object GraphOps {
           round(lit(Teleport) + lit(Damping) * coalesce($"contrib", lit(0.0)), 12)
             .as("r"))
     }
-    val out = ranks.join(nation, $"node" === $"n_nationkey")
+    ranks.join(nation, $"node" === $"n_nationkey")
       .select($"n_name", $"r".as("pr"))
       .localCheckpoint(true) // cut the 5-iteration lineage before reuse
-    frac.unpersist(false)
-    out
   }
 
   private def pageRankSql: String = {

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -315,6 +315,17 @@ object Relational {
       |  WHERE c.c_mktsegment = 'BUILDING'
       |  GROUP BY o.o_orderkey)
       |ORDER BY rev DESC, o_orderkey LIMIT 10""".stripMargin
+
+  /** Stages the temp view `src` into `table` with one INSERT per distinct
+    * `yr` (bounded: orders span ≤ 8 years). The DISTINCT probe and every
+    * INSERT re-plan the same source projection, so it is held for the loop
+    * (the probe fills it) and the INSERTs scan the cache, not the parquet. */
+  private def insertPerYear(s: SparkSession, src: String, table: String): Unit =
+    Materialize.scoped { held =>
+      held(s.table(src))
+      s.sql(s"SELECT DISTINCT yr FROM $src ORDER BY yr").collect().map(_.getInt(0))
+        .foreach(y => s.sql(s"INSERT INTO $table SELECT * FROM $src WHERE yr = $y"))
+    }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_full_outer" -> ((s, d) => fullOuterRecon(s, d)),
@@ -1461,17 +1472,7 @@ object Relational {
           year(col("o_orderdate")).cast("int").as("yr"),
           col("o_orderkey"), col("o_totalprice"))
         .createOrReplaceTempView("r11_pt_src")
-      // the DISTINCT probe and each per-year INSERT re-plan the same source
-      // projection; persist it for the loop's lifetime (materialized by the
-      // probe, dropped before returning) so 8 INSERTs scan the cache, not
-      // the parquet (guide §5 caching: reused and recomputed per action)
-      val yrsSrc = s.table("r11_pt_src").persist()
-      val yrs = s.sql("SELECT DISTINCT yr FROM r11_pt_src ORDER BY yr")
-        .collect().map(_.getInt(0)) // bounded: ≤ 8 years
-      yrs.foreach { y =>
-        s.sql(s"INSERT INTO graft_pi.default.ord SELECT * FROM r11_pt_src WHERE yr = $y")
-      }
-      yrsSrc.unpersist(false)
+      insertPerYear(s, "r11_pt_src", "graft_pi.default.ord")
       s.sql("""SELECT partition AS part, n_rows
         FROM graft_pi.default.`ord$partitions`""")
     }),
@@ -1496,17 +1497,7 @@ object Relational {
           year(col("o_orderdate")).cast("int").as("yr"),
           col("o_orderkey"), col("o_totalprice"))
         .createOrReplaceTempView("r11_ga_src")
-      // the DISTINCT probe and each per-year INSERT re-plan the same source
-      // projection; persist it for the loop's lifetime (materialized by the
-      // probe, dropped before returning) so 8 INSERTs scan the cache, not
-      // the parquet (guide §5 caching: reused and recomputed per action)
-      val yrsSrc = s.table("r11_ga_src").persist()
-      val yrs = s.sql("SELECT DISTINCT yr FROM r11_ga_src ORDER BY yr")
-        .collect().map(_.getInt(0))
-      yrs.foreach { y =>
-        s.sql(s"INSERT INTO graft_ga.default.ord SELECT * FROM r11_ga_src WHERE yr = $y")
-      }
-      yrsSrc.unpersist(false)
+      insertPerYear(s, "r11_ga_src", "graft_ga.default.ord")
       s.sql("""SELECT yr, count(*) AS n, min(o_orderkey) AS mn,
         max(o_totalprice) AS mx
         FROM graft_ga.default.ord GROUP BY yr""")
@@ -1529,17 +1520,7 @@ object Relational {
           year(col("o_orderdate")).cast("int").as("yr"),
           col("o_orderkey"), col("o_totalprice"))
         .createOrReplaceTempView("r11_fa_src")
-      // the DISTINCT probe and each per-year INSERT re-plan the same source
-      // projection; persist it for the loop's lifetime (materialized by the
-      // probe, dropped before returning) so 8 INSERTs scan the cache, not
-      // the parquet (guide §5 caching: reused and recomputed per action)
-      val yrsSrc = s.table("r11_fa_src").persist()
-      val yrs = s.sql("SELECT DISTINCT yr FROM r11_fa_src ORDER BY yr")
-        .collect().map(_.getInt(0)) // bounded: ≤ 8 years
-      yrs.foreach { y =>
-        s.sql(s"INSERT INTO graft_fa.default.ord SELECT * FROM r11_fa_src WHERE yr = $y")
-      }
-      yrsSrc.unpersist(false)
+      insertPerYear(s, "r11_fa_src", "graft_fa.default.ord")
       s.sql("""SELECT count(*) AS n, min(o_orderkey) AS mn,
         max(o_totalprice) AS mx
         FROM graft_fa.default.ord WHERE yr = 1997""")
@@ -1567,17 +1548,7 @@ object Relational {
           col("o_orderkey"),
           col("o_totalprice").cast("decimal(18,2)").as("price"))
         .createOrReplaceTempView("r12_su_src")
-      // the DISTINCT probe and each per-year INSERT re-plan the same source
-      // projection; persist it for the loop's lifetime (materialized by the
-      // probe, dropped before returning) so 8 INSERTs scan the cache, not
-      // the parquet (guide §5 caching: reused and recomputed per action)
-      val yrsSrc = s.table("r12_su_src").persist()
-      val yrs = s.sql("SELECT DISTINCT yr FROM r12_su_src ORDER BY yr")
-        .collect().map(_.getInt(0)) // bounded: ≤ 8 years
-      yrs.foreach { y =>
-        s.sql(s"INSERT INTO graft_su.default.ord SELECT * FROM r12_su_src WHERE yr = $y")
-      }
-      yrsSrc.unpersist(false)
+      insertPerYear(s, "r12_su_src", "graft_su.default.ord")
       s.sql("""SELECT yr, count(*) AS n, CAST(sum(price) AS DOUBLE) AS sum_price,
         sum(o_orderkey) AS sum_k
         FROM graft_su.default.ord GROUP BY yr""")

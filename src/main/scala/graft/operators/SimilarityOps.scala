@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import graft.functions.VectorOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -157,7 +157,7 @@ object SimilarityOps {
     * (which cluster strongly) the same recall costs a far smaller scan;
     * nProbe is the recall/cost dial either way. */
   def knnIvf(s: SparkSession, dir: String, k: Int = 5, nQueries: Int = 10,
-      nCells: Int = 16, nProbe: Int = 10): DataFrame = {
+      nCells: Int = 16, nProbe: Int = 10): DataFrame = Materialize.scoped { held =>
     import s.implicits._
     VectorOps.register(s)
     graft.functions.TopKAgg.register(s)
@@ -178,9 +178,8 @@ object SimilarityOps {
     val cellSims = array((0 until nCells).map { c =>
       VectorOps.cosineSim($"embedding",
         typedlit(centArr(c).map(_.toFloat).toSeq)) }: _*)
-    val assigned = ev.select($"vec_id", $"embedding",
-      (array_position(cellSims, array_max(cellSims)) - 1).cast("int").as("cell"))
-      .persist()
+    val assigned = held(ev.select($"vec_id", $"embedding",
+      (array_position(cellSims, array_max(cellSims)) - 1).cast("int").as("cell")))
 
     val cents = centArr.zipWithIndex
       .map { case (c, i) => (i, c.map(_.toFloat)) }
@@ -196,7 +195,7 @@ object SimilarityOps {
       .filter($"pr" <= nProbe)
       .select($"query_id", $"qv", $"cell")
 
-    val out = probes
+    probes
       .join(assigned.select($"cell", $"vec_id".as("cand_id"), $"embedding".as("cv")), "cell")
       .filter($"query_id" =!= $"cand_id")
       .select($"query_id",
@@ -207,8 +206,6 @@ object SimilarityOps {
       .select($"query_id", $"col.id".as("cand_id"), $"col.score".as("cos_sim"),
         ($"pos" + 1).cast("int").as("rank"))
       .localCheckpoint(true)
-    assigned.unpersist(false)
-    out
   }
 
   /** PERSISTED vector index (IVF as tables) — the ANN index as a durable
@@ -449,11 +446,12 @@ object SimilarityOps {
     * rows; m×16×8 floats), the corpus never is. Rows-only (KMeans training
     * has no SQL oracle); recall vs the exact top-k is spec-bounded. */
   def knnPq(s: SparkSession, dir: String, k: Int = 5, nQueries: Int = 10,
-      m: Int = 8, subDim: Int = 8, codebookSize: Int = 16): DataFrame = {
+      m: Int = 8, subDim: Int = 8,
+      codebookSize: Int = 16): DataFrame = Materialize.scoped { held =>
     import s.implicits._
     VectorOps.register(s)
     graft.functions.TopKAgg.register(s)
-    val ev = Tables.embeddings(s, dir).select($"vec_id", $"embedding").persist()
+    val ev = held(Tables.embeddings(s, dir).select($"vec_id", $"embedding"))
 
     // one codebook per subspace, trained on a DETERMINISTIC BOUNDED SAMPLE
     // with a driver-side Lloyd loop — the standard PQ recipe (codebooks
@@ -522,7 +520,7 @@ object SimilarityOps {
     // on |queries|·16k rows, never the corpus; the raw query vectors ride
     // in the same broadcast qdf (already driver-resident) — no second
     // corpus scan to recover them
-    val out = shortlist
+    shortlist
       .join(ev.select($"vec_id".as("cand_id"), $"embedding".as("cv")), "cand_id")
       .join(broadcast(qdf.select($"query_id", $"qv")), "query_id")
       .select($"query_id", $"cand_id",
@@ -533,8 +531,6 @@ object SimilarityOps {
       .select($"query_id", $"col.id".as("cand_id"), $"col.score".as("cos_sim"),
         ($"pos" + 1).cast("int").as("rank"))
       .localCheckpoint(true)
-    ev.unpersist(false)
-    out
   }
 
   /** IVF×PQ — the composed billion-vector ANN architecture (Jégou et al.
@@ -559,11 +555,11 @@ object SimilarityOps {
     * has no SQL oracle); recall@5 vs exact top-k is spec-bounded. */
   def knnIvfPq(s: SparkSession, dir: String, k: Int = 5, nQueries: Int = 10,
       nCells: Int = 16, nProbe: Int = 10, m: Int = 8, subDim: Int = 8,
-      codebookSize: Int = 16): DataFrame = {
+      codebookSize: Int = 16): DataFrame = Materialize.scoped { held =>
     import s.implicits._
     VectorOps.register(s)
     graft.functions.TopKAgg.register(s)
-    val ev = Tables.embeddings(s, dir).select($"vec_id", $"embedding").persist()
+    val ev = held(Tables.embeddings(s, dir).select($"vec_id", $"embedding"))
 
     // ONE bounded sample (the knnPq id-range recipe, ≤4096 rows at any
     // corpus size) trains BOTH quantizer levels driver-side: the coarse
@@ -675,7 +671,7 @@ object SimilarityOps {
     // stage 2 — exact re-rank of the shortlist only
     val qOnly = qvecs.toSeq.map { case (qid, qv) => (qid, qv.toSeq) }
       .toDF("query_id", "qv")
-    val out = shortlist
+    shortlist
       .join(ev.select($"vec_id".as("cand_id"), $"embedding".as("cv")), "cand_id")
       .join(broadcast(qOnly), "query_id")
       .select($"query_id", $"cand_id",
@@ -686,8 +682,6 @@ object SimilarityOps {
       .select($"query_id", $"col.id".as("cand_id"), $"col.score".as("cos_sim"),
         ($"pos" + 1).cast("int").as("rank"))
       .localCheckpoint(true)
-    ev.unpersist(false)
-    out
   }
 
   /** Per-label centroid (average pooling) in LONG form — (label, pos,
@@ -741,7 +735,7 @@ object SimilarityOps {
     * Cosine = int dot / sqrt(int norms): exact integers into correctly-
     * rounded sqrt/divide, so Spark and DuckDB agree bitwise. */
   def sparseCosinePairs(s: SparkSession, dir: String,
-      prefix: Int = 2, threshold: Double = 0.6): DataFrame = {
+      prefix: Int = 2, threshold: Double = 0.6): DataFrame = Materialize.scoped { held =>
     import s.implicits._
     val t = split(trim($"text"), "\\s+")
     // zip_with over two shifted slices beats transform+element_at ~2.5×
@@ -750,18 +744,13 @@ object SimilarityOps {
       zip_with(slice(t, lit(1), size(t) - 1), slice(t, lit(2), size(t) - 1),
         (a, b) => concat(a, lit(" "), b)))
       .otherwise(array().cast("array<string>"))
-    val tf = Tables.documentsSpread(s, dir)
+    // filled: df, the two pfx sides and the two vecs legs are scheduled
+    // concurrently (unfilled, jobSum ≈ 2× wall on this query)
+    val tf = held.fill(Tables.documentsSpread(s, dir)
       .select($"doc_id", explode(bigrams).as("term"))
       .groupBy($"doc_id", $"term").agg(count(lit(1)).as("tf"))
-      .coalesce(8) // few-hundred-k tiny rows: 8 cached partitions keep the
-                   // ~6 concurrent consumer jobs at 8 tasks instead of 32
-      .persist()
-    // materialize the cache ONCE before the consumers launch: df, the two
-    // pfx sides, and the two vecs legs are scheduled concurrently, and
-    // concurrent first-touch of an unmaterialized cache re-runs the whole
-    // tokenize→explode→agg pipeline per consumer (measured: jobSum ≈ 2×
-    // wall on this query) — guide §5 caching
-    tf.count()
+      .coalesce(8)) // few-hundred-k tiny rows: 8 cached partitions keep the
+                    // ~6 concurrent consumer jobs at 8 tasks instead of 32
     val df = tf.groupBy($"term").agg(count(lit(1)).as("df"))
     // rarest-`prefix` terms per doc via one hash agg (sort ≤|terms(doc)|
     // structs per group, keep 2) — cheaper than ranking the whole posting
@@ -784,7 +773,7 @@ object SimilarityOps {
       .agg(array_sort(collect_list(
         shiftleft(xxhash64($"term"), 16) + least($"tf", lit(65535L)))).as("vec"),
         sum($"tf" * $"tf").as("nrm"))
-    val out = cand
+    cand
       .join(vecs.select($"doc_id".as("doc_a"), $"vec".as("va"), $"nrm".as("na")), "doc_a")
       .join(vecs.select($"doc_id".as("doc_b"), $"vec".as("vb"), $"nrm".as("nb")), "doc_b")
       .withColumn("cos",
@@ -793,8 +782,6 @@ object SimilarityOps {
       .filter($"cos" >= threshold)
       .select($"doc_a", $"doc_b", round($"cos", 6).as("cos_sim"))
       .localCheckpoint(true)
-    tf.unpersist(false)
-    out
   }
 
   private val sparseCosineSql =

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -332,28 +332,22 @@ object TextAnalysis {
     * scanned exactly twice, not five times — and released once the (small,
     * frequency-pruned) result is checkpointed. `ln` may differ by 1 ulp
     * across engines → round(6). */
-  def pmiBigrams(s: SparkSession, dir: String, minCount: Int = 20): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
+  def pmiBigrams(s: SparkSession, dir: String,
+      minCount: Int = 20): DataFrame = Materialize.scoped { held =>
     import s.implicits._
     val toks = Tables.documentsSpread(s, dir)
       .select(tokens(lower($"text")).as("t"))
-    val uni = toks.select(explode($"t").as("tok"))
-      .groupBy($"tok").agg(count(lit(1)).as("c"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val uni = held.fill(toks.select(explode($"t").as("tok"))
+      .groupBy($"tok").agg(count(lit(1)).as("c")))
     val bi = toks.filter(size($"t") >= 2)
       .select(explode(arrays_zip(
         slice($"t", lit(1), size($"t") - 1),
         slice($"t", lit(2), size($"t") - 1))).as("p"))
       .select(col("p").getField("0").as("w1"), col("p").getField("1").as("w2"))
-    val bic = bi.groupBy($"w1", $"w2").agg(count(lit(1)).as("n_pair"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // materialize both count tables once before their five consumer
-    // branches (two broadcast totals, two joins, one probe) race to
-    // first-touch them (guide §5 caching)
-    uni.count(); bic.count()
+    val bic = held.fill(bi.groupBy($"w1", $"w2").agg(count(lit(1)).as("n_pair")))
     val nUni = uni.agg(sum($"c").as("n_uni"))
     val nBi = bic.agg(sum($"n_pair").as("n_bi"))
-    val result = bic.filter($"n_pair" >= minCount)
+    bic.filter($"n_pair" >= minCount)
       .join(uni.select($"tok".as("w1"), $"c".as("c1")), "w1")
       .join(uni.select($"tok".as("w2"), $"c".as("c2")), "w2")
       .crossJoin(broadcast(nUni)).crossJoin(broadcast(nBi))
@@ -361,12 +355,7 @@ object TextAnalysis {
         round(log(($"n_pair".cast("double") / $"n_bi") /
           (($"c1".cast("double") / $"n_uni") * ($"c2".cast("double") / $"n_uni"))), 6)
           .as("pmi"))
-    // materialize the pruned pair list, then release the count tables —
-    // leaked persisted blocks pile up across queries (see DedupOps.minhash)
-    val out = result.localCheckpoint(true)
-    uni.unpersist(false)
-    bic.unpersist(false)
-    out
+      .localCheckpoint(true)
   }
 
   private val pmiBigramsSql =

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import org.apache.spark.ml.feature.{HashingTF, IDF, NGram, Normalizer, RegexTokenizer, StopWordsRemover}
 import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -178,18 +178,14 @@ object TextFeatures {
     docKnnFrom(s, keptTokens(s, dir), k, nQueries)
 
   private def docKnnFrom(s: SparkSession, kept: DataFrame, k: Int,
-      nQueries: Int): DataFrame = {
+      nQueries: Int): DataFrame = Materialize.scoped { held =>
     import s.implicits._
     graft.functions.VectorOps.register(s)
     graft.functions.TopKAgg.register(s)
-    val e = docEmbeddingsFrom(s, kept)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materialize once before the query-side broadcast build and the
-    // candidate scan race to first-touch the cache (see tfidfExactKnnFrom)
-    e.count()
+    val e = held.fill(docEmbeddingsFrom(s, kept))
     val q = e.filter($"vec_id" < nQueries)
       .select($"vec_id".as("query_id"), $"embedding".as("qv"))
-    val out = e.select($"vec_id".as("cand_id"), $"embedding".as("cv"))
+    e.select($"vec_id".as("cand_id"), $"embedding".as("cv"))
       .join(broadcast(q), $"query_id" =!= $"cand_id")
       .select($"query_id", $"cand_id",
         round(graft.functions.VectorOps.cosineSim($"qv", $"cv"), 6).as("cos_sim"))
@@ -199,8 +195,6 @@ object TextFeatures {
       .select($"query_id", $"col.id".as("cand_id"), $"col.score".as("cos_sim"),
         ($"pos" + 1).cast("int").as("rank"))
       .localCheckpoint(true)
-    e.unpersist(false)
-    out
   }
 
   /** Round-16 driver-gate graduation of q_doc_embed: re-emit the embedding
@@ -212,23 +206,20 @@ object TextFeatures {
     * murmur3 bucketing DuckDB cannot restate. A Normalizer/IDF/HashingTF
     * regression (wrong norm, wrong dimensionality, phantom buckets) flips a
     * flag FALSE and breaks the hash. */
-  def docEmbedGate(s: SparkSession, dir: String): DataFrame = {
+  def docEmbedGate(s: SparkSession, dir: String): DataFrame = Materialize.scoped { held =>
     import s.implicits._
     // one tokenization pass feeds both the stats pipeline and the anchor
     // column (was two single-task re-derivations — guide §1.2)
-    val kt = keptTokens(s, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val kt = held(keptTokens(s, dir))
     val kept = kt
       .select($"doc_id".as("vec_id"),
         size(array_distinct($"kept")).cast("long").as("n_kept_terms"))
-    val out = docEmbedStatsFrom(s, kt).join(kept, Seq("vec_id"))
+    docEmbedStatsFrom(s, kt).join(kept, Seq("vec_id"))
       .select($"vec_id", $"dim", $"n_kept_terms",
         (($"nnz" === 0 && $"l2_norm" === 0.0) ||
           abs($"l2_norm" - 1.0) <= 1e-5).as("norm_ok"),
         ($"nnz" <= least(lit(64), $"n_kept_terms")).as("nnz_ok"))
       .localCheckpoint(true) // |docs| narrow rows
-    kt.unpersist(false)
-    out
   }
 
   /** Exact sparse TF-IDF cosine top-k (no hashing): tf·ln((m+1)/(df+1))
@@ -238,7 +229,7 @@ object TextFeatures {
     * sums are not cross-engine bit-stable, so the flag — not the scores —
     * is what the oracle hashes). */
   private def tfidfExactKnnFrom(s: SparkSession, dir: String,
-      kept: DataFrame, k: Int, nQueries: Int): DataFrame = {
+      kept: DataFrame, k: Int, nQueries: Int): DataFrame = Materialize.scoped { held =>
     import org.apache.spark.sql.expressions.Window
     import s.implicits._
     val tf = kept
@@ -246,24 +237,20 @@ object TextFeatures {
       .groupBy($"doc_id", $"term").agg(count(lit(1)).as("tf"))
     val df = tf.groupBy($"term").agg(count(lit(1)).as("df"))
     val m = Tables.documents(s, dir).agg(count(lit(1)).as("m"))
-    val w = tf.join(df, "term").crossJoin(broadcast(m))
+    // filled: the two nrm joins, the qw broadcast build and the candidate
+    // join submit jobs concurrently (unfilled: 8 overlapping 32-task jobs,
+    // jobSum 2× wall)
+    val w = held.fill(tf.join(df, "term").crossJoin(broadcast(m))
       .select($"doc_id", $"term",
         ($"tf" * log(($"m" + 1).cast("double") / ($"df" + 1).cast("double")))
           .as("wt"))
-      .coalesce(8) // few-hundred-k tiny rows: 8 cached partitions keep the
-                   // ~6 downstream jobs at 8 tasks instead of 32
-      .persist()
-    // materialize the cache ONCE before the consumers launch: the two nrm
-    // joins, the qw broadcast build, and the candidate join submit jobs
-    // concurrently, and concurrent first-touch of an unmaterialized cache
-    // recomputes the whole tf→df→join pipeline per job (measured: 8
-    // overlapping 32-task jobs, jobSum 2× wall) — guide §5 caching
-    w.count()
+      .coalesce(8)) // few-hundred-k tiny rows: 8 cached partitions keep the
+                    // ~6 downstream jobs at 8 tasks instead of 32
     val nrm = w.groupBy($"doc_id").agg(sum($"wt" * $"wt").as("nrm"))
     val qw = w.filter($"doc_id" < nQueries)
       .select($"doc_id".as("query_id"), $"term", $"wt".as("qwt"))
     val win = Window.partitionBy($"query_id").orderBy($"cos_sim".desc, $"cand_id")
-    val out = w.join(broadcast(qw), Seq("term"))
+    w.join(broadcast(qw), Seq("term"))
       .filter($"doc_id" =!= $"query_id")
       .groupBy($"query_id", $"doc_id".as("cand_id"))
       .agg(sum($"qwt" * $"wt").as("dot"))
@@ -274,8 +261,6 @@ object TextFeatures {
       .withColumn("rank", row_number().over(win))
       .filter($"rank" <= k)
       .localCheckpoint(true)
-    w.unpersist(false)
-    out
   }
 
   /** Round-16 driver-gate graduation of q_doc_knn — the bound-invariant
@@ -287,22 +272,18 @@ object TextFeatures {
     * (broken hashing, wrong IDF, dropped normalization) collapses the
     * overlap and flips the flag. */
   def docKnnGate(s: SparkSession, dir: String, k: Int = 3, nQueries: Int = 5,
-      floor: Double = 0.2): DataFrame = {
+      floor: Double = 0.2): DataFrame = Materialize.scoped { held =>
     import s.implicits._
     // ONE tokenization pass feeds the hashed ANN pipeline, the exact
     // TF-IDF reference, AND the gate's anchor aggregate (guide §1.2 —
     // this gate previously re-derived keptTokens ~5× through its stages,
-    // each a single-task job over the one-split fixture). Persisted and
-    // dropped inside the query; the gate row is eagerly checkpointed
-    // before the unpersist so the sink never re-tokenizes.
-    val kept = keptTokens(s, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materialize the shared cache before anything races it, then run the
-    // hashed ANN ranking and the exact TF-IDF reference CONCURRENTLY: both
-    // pipelines are independent given `kept` and both end in an eager
-    // localCheckpoint, so the driver was simply calling two multi-second
-    // action chains back to back (guide §2.6 — overlap independent jobs)
-    kept.count()
+    // each a single-task job over the one-split fixture)
+    val kept = held.fill(keptTokens(s, dir))
+    // the hashed ANN ranking and the exact TF-IDF reference run
+    // CONCURRENTLY: both pipelines are independent given `kept` and both
+    // end in an eager localCheckpoint, so the driver was simply calling two
+    // multi-second action chains back to back (guide §2.6 — overlap
+    // independent jobs)
     val both = Relational.overlapped(Seq(true, false), 2) { hashed =>
       if (hashed) docKnnFrom(s, kept, k, nQueries).select($"query_id", $"cand_id")
       else tfidfExactKnnFrom(s, dir, kept, k, nQueries)
@@ -312,15 +293,13 @@ object TextFeatures {
     val hits = ann.join(exact, Seq("query_id", "cand_id"), "left_semi")
       .agg(count(lit(1)).as("n_hit"))
     val nex = exact.agg(count(lit(1)).as("n_exact"))
-    val out = kept.filter($"doc_id" < nQueries)
+    kept.filter($"doc_id" < nQueries)
       .agg(count(lit(1)).as("n_queries"),
         sum(size($"kept")).cast("long").as("q_kept_tokens"))
       .crossJoin(hits).crossJoin(nex)
       .select($"n_queries", $"q_kept_tokens",
         ($"n_hit".cast("double") / $"n_exact" >= floor).as("recall_ok"))
       .localCheckpoint(true) // one row
-    kept.unpersist(false)
-    out
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -142,12 +142,11 @@ object TokenizerOps {
     * by [[bpeTrain]] (rule table as a DataFrame) and [[bpeTrainEncode]]
     * (rules feed the encoder as literals). */
   private def trainMergesImpl(s: SparkSession, dir: String,
-      rounds: Int): Seq[(Int, String, String, Long)] = {
+      rounds: Int): Seq[(Int, String, String, Long)] = Materialize.scoped { held =>
     import s.implicits._
-    var seqs = wordFreq(s, dir)
+    var seqs = held(wordFreq(s, dir)
       .select(expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))")
-        .as("syms"), $"n")
-      .persist()
+        .as("syms"), $"n"))
     val rules = Seq.newBuilder[(Int, String, String, Long)]
     for (round <- 1 to rounds) {
       val top = seqs
@@ -164,7 +163,8 @@ object TokenizerOps {
         val (l, r, cnt) =
           (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         rules += ((round, l, r, cnt))
-        val merged = seqs.select(expr(
+        // filled before the parent's cache is dropped
+        val merged = held.fill(seqs.select(expr(
           s"""aggregate(syms, CAST(array() AS ARRAY<STRING>),
              |          (acc, x) -> CASE WHEN size(acc) > 0
              |                            AND element_at(acc, -1) = '${esc(l)}'
@@ -172,14 +172,11 @@ object TokenizerOps {
              |            THEN concat(slice(acc, 1, size(acc) - 1),
              |                        array(concat('${esc(l)}', '${esc(r)}')))
              |            ELSE concat(acc, array(x)) END)""".stripMargin)
-          .as("syms"), $"n")
-          .persist()
-        merged.count() // materialize before dropping the parent
-        seqs.unpersist(false)
+          .as("syms"), $"n"))
+        held.release(seqs)
         seqs = merged
       }
     }
-    seqs.unpersist(false)
     rules.result()
   }
 

@@ -2200,12 +2200,13 @@ object ManifestTable {
             }
           } else {
             import org.apache.spark.sql.functions.{col => fcol}
-            // keyed markers union their single key column
-            val union = s.read.parquet(keyFiles.map(dataPath(dir, _)): _*)
-              .select(fcol(c))
-              .distinct().coalesce(1)
-              .persist() // counted once for the budget, staged once — not
-            try {        // two full read+distinct passes
+            graft.Materialize.scoped { held =>
+              // keyed markers union their single key column, held: counted
+              // once for the budget, staged once — not two full
+              // read+distinct passes
+              val union = held(s.read.parquet(keyFiles.map(dataPath(dir, _)): _*)
+                .select(fcol(c))
+                .distinct().coalesce(1))
               // a merged key file past the reader's per-file budget would
               // make every subsequent scan of the targeted files REFUSE
               // (DvKeyCache.doomed's loud maxKeys bound) — decline merging
@@ -2220,7 +2221,7 @@ object ManifestTable {
                 Seq(DvEntry(staged.head, c, targets.toSet,
                   countsFor(c, keyFiles, targets)))
               }
-            } finally union.unpersist(false)
+            }
           }
         }
         Some(base.copy(dvs = newDvs))

@@ -7,16 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared session for all suites (one JVM-wide SparkSession, UTC, AQE on). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.windowExec.buffer.in.memory.threshold", "1048576")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = LocalSession("4")
     s.sparkContext.setLogLevel("WARN")
     s
   }
@@ -27,6 +18,7 @@ class QueriesSpec extends AnyFunSuite {
   import TestSpark._
 
   test("every registered query runs on sf0.001 without error, scalar columns only") {
+    spark.catalog.clearCache()
     SparkEntry.queries.foreach { case (name, fn) =>
       val df = fn(spark, sf)
       // the driver's comparator loads outputs into pandas and lexsorts every
@@ -41,6 +33,8 @@ class QueriesSpec extends AnyFunSuite {
         s"$name emits non-scalar columns: ${nonScalar.map(_.name).mkString(",")}")
       val n = df.count()
       assert(n >= 0, s"$name returned negative count")
+      // every cache a query takes is released by the time its result is read
+      assert(spark.sharedState.cacheManager.isEmpty, s"$name leaves cached data behind")
     }
   }
 
