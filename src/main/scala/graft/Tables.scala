@@ -40,7 +40,8 @@ object Tables {
 
   /** Fixture generations have shipped `events.ts` under two physical parquet
     * types: `timestamp[ns]` (which Spark's reader rejects unless
-    * `spark.sql.legacy.parquet.nanosAsLong=true`, surfacing nanosecond longs)
+    * `spark.sql.legacy.parquet.nanosAsLong=true`, surfacing nanosecond longs;
+    * `LocalSession` sets it when it builds the session)
     * and plain `timestamp[us]` (surfacing as `TIMESTAMP_NTZ`). Normalize
     * either to session-zoned `TimestampType`: nanos floor-divide to micros —
     * the same truncation DuckDB applies in `CAST(ts_ns AS TIMESTAMP)` — and
@@ -55,13 +56,9 @@ object Tables {
   /** Physical schema of events.parquet as THIS session reads it (footer-only
     * peek) — streaming readers must declare the file's real schema, which
     * differs across fixture generations (see [[normalizeTs]]). */
-  def eventsRawSchema(s: SparkSession, d: String): StructType = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def eventsRawSchema(s: SparkSession, d: String): StructType =
     load(s, d, "events").schema
-  }
 
-  def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def events(s: SparkSession, d: String): DataFrame =
     normalizeTs(load(s, d, "events"))
-  }
 }

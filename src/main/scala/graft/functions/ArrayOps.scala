@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -146,21 +146,11 @@ case class SortedDotProduct(left: Expression, right: Expression)
 }
 
 object ArrayOps {
-  /** Register `sorted_intersect_count` + `sorted_dot_product`. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect_count",
-      exprs => SortedIntersectCount(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_dot_product",
-      exprs => SortedDotProduct(exprs(0), exprs(1)), "built-in")
-  }
-
-  /** Column-API wrapper; requires `register(spark)` first. */
+  /** Column-API wrapper. */
   def sortedIntersectCount(a: Column, b: Column): Column =
     call_function("sorted_intersect_count", a, b)
 
-  /** Column-API wrapper; requires `register(spark)` first. */
+  /** Column-API wrapper. */
   def sortedDotProduct(a: Column, b: Column): Column =
     call_function("sorted_dot_product", a, b)
 }

@@ -2,10 +2,10 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions.call_function
@@ -183,27 +183,7 @@ case class BloomContains(left: Expression, right: Expression)
 }
 
 object BloomOps {
-  private[graft] def intLit(e: Expression, what: String): Int = e match {
-    case Literal(v, IntegerType) =>
-      val i = v.asInstanceOf[Int]
-      require(i > 0, s"bloom_build: $what must be positive, got $i")
-      i
-    case other => throw new IllegalArgumentException(
-      s"bloom_build: $what must be an integer literal, got $other")
-  }
-
-  /** Register `bloom_build` + `bloom_contains`. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_build",
-      exprs => BloomBuildAgg(exprs(0),
-        intLit(exprs(1), "numBits"), intLit(exprs(2), "k")), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_contains",
-      exprs => BloomContains(exprs(0), exprs(1)), "built-in")
-  }
-
-  /** Column-API wrappers; require `register(spark)` first. */
+  /** Column-API wrappers. */
   def bloomBuild(value: Column, numBits: Int, k: Int): Column =
     call_function("bloom_build", value,
       org.apache.spark.sql.functions.lit(numBits),

@@ -2,7 +2,7 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -189,20 +189,7 @@ case class CmsQuery(left: Expression, right: Expression)
 }
 
 object CmsOps {
-
-  /** Register `cms_build` + `cms_query`. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cms_build",
-      exprs => CmsBuildAgg(exprs(0),
-        BloomOps.intLit(exprs(1), "depth"), BloomOps.intLit(exprs(2), "width")),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cms_query",
-      exprs => CmsQuery(exprs(0), exprs(1)), "built-in")
-  }
-
-  /** Column-API wrappers; require `register(spark)` first. */
+  /** Column-API wrappers. */
   def cmsBuild(value: Column, depth: Int, width: Int): Column =
     call_function("cms_build", value,
       org.apache.spark.sql.functions.lit(depth),

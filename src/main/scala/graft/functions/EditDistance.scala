@@ -1,8 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
@@ -158,22 +158,7 @@ object LevenshteinWithin {
 }
 
 object EditDistance {
-  private[graft] def kOf(e: Expression): Int = e match {
-    case Literal(v, IntegerType) =>
-      val i = v.asInstanceOf[Int]
-      require(i >= 0 && i <= 16, s"levenshtein_within: k must be in [0,16], got $i")
-      i
-    case other => throw new IllegalArgumentException(
-      s"levenshtein_within: k must be an integer literal, got $other")
-  }
-
-  /** Register `levenshtein_within(a, b, k)`. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "levenshtein_within",
-      exprs => LevenshteinWithin(exprs(0), exprs(1), kOf(exprs(2))), "built-in")
-
-  /** Column-API wrapper; requires `register(spark)` first. */
+  /** Column-API wrapper. */
   def levenshteinWithin(a: Column, b: Column, k: Int): Column =
     call_function("levenshtein_within", a, b,
       org.apache.spark.sql.functions.lit(k))

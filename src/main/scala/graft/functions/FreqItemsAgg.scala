@@ -3,9 +3,9 @@ package graft.functions
 import java.nio.ByteBuffer
 import java.util.Arrays
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions.call_function
@@ -157,19 +157,7 @@ case class FreqItemsMG(
 }
 
 object FreqItemsAgg {
-  private def kOf(e: Expression): Int = e match {
-    case Literal(v, IntegerType) => v.asInstanceOf[Int]
-    case other => throw new IllegalArgumentException(
-      s"freq_items_mg: k must be an integer literal, got $other")
-  }
-
-  /** Register `freq_items_mg(key, k)`. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "freq_items_mg",
-      exprs => FreqItemsMG(exprs(0), kOf(exprs(1))), "built-in")
-
-  /** Column-API wrapper; requires `register(spark)` first. */
+  /** Column-API wrapper. */
   def freqItemsMg(key: Column, k: Int): Column =
     call_function("freq_items_mg", key,
       org.apache.spark.sql.functions.lit(k))

@@ -1,8 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.call_function
@@ -175,21 +175,7 @@ case class MultiPhraseMatches(child: Expression, aho: AhoCorasick)
 }
 
 object MultiMatch {
-  private[graft] def phrasesOf(e: Expression): AhoCorasick = e match {
-    case Literal(v, StringType) =>
-      new AhoCorasick(v.asInstanceOf[UTF8String].toString.split('|').map(_.trim)
-        .filter(_.nonEmpty))
-    case other => throw new IllegalArgumentException(
-      s"multi_phrase_matches: phrase list must be a string literal, got $other")
-  }
-
-  /** Register `multi_phrase_matches(text, phrasesPipeJoined)`. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "multi_phrase_matches",
-      exprs => MultiPhraseMatches(exprs(0), phrasesOf(exprs(1))), "built-in")
-
-  /** Column-API wrapper; requires `register(spark)` first. */
+  /** Column-API wrapper. */
   def multiPhraseMatches(text: Column, phrases: Seq[String]): Column =
     call_function("multi_phrase_matches", text,
       org.apache.spark.sql.functions.lit(phrases.mkString("|")))

@@ -2,10 +2,10 @@ package graft.functions
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, Literal, UnaryExpression, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, UnaryExpression, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
@@ -89,23 +89,7 @@ case class ExplodeShingles(child: Expression, n: Int)
 }
 
 object ShingleGen {
-  private[graft] def nOf(e: Expression): Int = e match {
-    case Literal(v, IntegerType) =>
-      val i = v.asInstanceOf[Int]
-      require(i > 0, s"explode_shingles: n must be positive, got $i")
-      i
-    case other => throw new IllegalArgumentException(
-      s"explode_shingles: n must be an integer literal, got $other")
-  }
-
-  /** Register `explode_shingles(text, n)`. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "explode_shingles",
-      exprs => ExplodeShingles(exprs(0), nOf(exprs(1))), "built-in")
-
-  /** Column-API wrapper; requires `register(spark)` first. Use in a
-    * `select` the way `explode(...)` is used. */
+  /** Column-API wrapper. Use in a `select` the way `explode(...)` is used. */
   def explodeShingles(text: Column, n: Int): Column =
     call_function("explode_shingles", text,
       org.apache.spark.sql.functions.lit(n))

@@ -2,7 +2,7 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -132,20 +132,7 @@ case class TopKByScore(
 }
 
 object TopKAgg {
-  private def kOf(e: Expression): Int = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v, IntegerType) =>
-      v.asInstanceOf[Int]
-    case other => throw new IllegalArgumentException(
-      s"top_k_by: k must be an integer literal, got $other")
-  }
-
-  /** Register `top_k_by(score, id, k)`. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "top_k_by",
-      exprs => TopKByScore(exprs(0), exprs(1), kOf(exprs(2))), "built-in")
-
-  /** Column-API wrapper; requires `register(spark)` first. */
+  /** Column-API wrapper. */
   def topKBy(score: Column, id: Column, k: Int): Column =
     call_function("top_k_by", score, id,
       org.apache.spark.sql.functions.lit(k))

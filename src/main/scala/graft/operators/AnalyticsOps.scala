@@ -41,7 +41,6 @@ object AnalyticsOps {
     import s.implicits._
     val p = Tables.part(s, dir).select($"p_partkey", $"p_brand", $"p_name")
     val d = p.select($"p_brand", $"p_name").distinct()
-    graft.functions.EditDistance.register(s)
     val namePairs = d.select($"p_brand", $"p_name".as("name_a"))
       .join(d.select($"p_brand", $"p_name".as("name_b")), Seq("p_brand"))
       .filter($"name_a" <= $"name_b")

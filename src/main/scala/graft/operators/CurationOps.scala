@@ -352,7 +352,6 @@ object CurationOps {
       .filter($"doc_id" % 97 === 0 && size(toks($"text")) >= 3)
       .select(explode(transform(shingles($"text", 3), x => xxhash64(x))).as("h"))
       .distinct())
-    graft.functions.ShingleGen.register(s)
     val stream = s.readStream.schema(docSchema)
       .parquet(s"$dir/[d]ocuments.parquet")
       .filter($"doc_id" % 97 =!= 0 && size(toks($"text")) >= 3)
@@ -963,7 +962,6 @@ object CurationOps {
     * there, so the oracle is the same SQL as `q_decontaminate`). */
   def bloomDecontaminate(s: SparkSession, dir: String): DataFrame = Materialize.scoped { held =>
     import s.implicits._
-    graft.functions.BloomOps.register(s)
     val (docs, bench) = shingleHashes(s, dir, held)
     val sketch = bench.agg(
       graft.functions.BloomOps.bloomBuild($"h", 1 << 18, 5).as("bloom"))
@@ -1454,7 +1452,6 @@ object CurationOps {
     * batch, reproducing the batch operator's shuffle shape. */
   def streamIngestReport(s: SparkSession, dir: String): DataFrame = Materialize.scoped { held =>
     import s.implicits._
-    graft.functions.ArrayOps.register(s)
     val G = 8
     val threshold = 0.3
     val docSchema = Tables.documents(s, dir).schema

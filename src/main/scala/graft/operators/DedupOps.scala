@@ -87,7 +87,6 @@ object DedupOps {
   def ngramJaccard(s: SparkSession, dir: String,
       threshold: Double = 0.3): DataFrame = Materialize.scoped { held =>
     import s.implicits._
-    graft.functions.ArrayOps.register(s)
     val G = 8
     // filled: both legs of the self-join below are separate shuffle map
     // stages, so uncached the tokenize→shingle→hash→sort pipeline ran TWICE
@@ -140,7 +139,6 @@ object DedupOps {
     * so no float boundary can flip membership across engines. */
   def containmentPairs(s: SparkSession, dir: String): DataFrame = Materialize.scoped { held =>
     import s.implicits._
-    graft.functions.ArrayOps.register(s)
     val G = 8
     // same recipe as ngramJaccard: the shingle table filled once (both
     // self-join legs are separate map stages), the small pair output
@@ -206,7 +204,6 @@ object DedupOps {
   def minhashLsh(s: SparkSession, dir: String,
       threshold: Double = 0.3): DataFrame = Materialize.scoped { held =>
     import s.implicits._
-    graft.functions.ArrayOps.register(s)
     val numPerm = 32
     val rowsPerBand = 2
     val numBands = numPerm / rowsPerBand
@@ -305,7 +302,6 @@ object DedupOps {
     * SimilarityOps for the scale path. */
   def embeddingNearDup(s: SparkSession, dir: String, threshold: Double = 0.4): DataFrame = {
     import s.implicits._
-    VectorOps.register(s)
     // same triangular blocked all-pairs shape as ngramJaccard: equi-join on
     // the block pair (ga ≤ gb) — shuffled and bounded per task, no unbounded
     // broadcast; cosine is symmetric so ids canonicalize on output
@@ -344,7 +340,6 @@ object DedupOps {
     * stays |batch|-sized. */
   def incrementalDedup(s: SparkSession, dir: String, threshold: Double = 0.3): DataFrame = {
     import s.implicits._
-    graft.functions.ArrayOps.register(s)
     val G = 8
     // batch boundary from the id space: an O(1)-row aggregate, broadcast
     val mx = Tables.documents(s, dir)

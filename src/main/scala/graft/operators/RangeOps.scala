@@ -88,14 +88,11 @@ object RangeOps {
     * the plan Spark turns into a BroadcastNestedLoopJoin — but executed with
     * `BandJoinRule` active, which rewrites it to the bucket-blocked
     * equi-join automatically. Same oracle as `q_range_join`: the rule must
-    * be semantics-preserving. The width conf and rule stay installed on the
-    * session afterwards (the rule is inert for every other registered query:
-    * all cross-side joins elsewhere carry an equality conjunct). */
+    * be semantics-preserving. The width conf stays set on the session
+    * afterwards (the rule is inert for every other registered query: all
+    * cross-side joins elsewhere carry an equality conjunct). */
   def bandJoinAuto(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    if (!s.experimental.extraOptimizations.contains(graft.plans.BandJoinRule))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ graft.plans.BandJoinRule
     s.conf.set(graft.plans.BandJoinRule.WidthConf, "5.0")
     val parts = Tables.part(s, dir).select($"p_partkey", $"p_retailprice")
     parts.join(bands(s),

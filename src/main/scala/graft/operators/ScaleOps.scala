@@ -285,7 +285,6 @@ object ScaleOps {
   def heavyHitters(s: SparkSession, dir: String, k: Int = 256,
       minShare: Double = 0.01): DataFrame = {
     import s.implicits._
-    graft.functions.FreqItemsAgg.register(s)
     val u = $"l_orderkey" * 10 + $"l_linenumber"
     val rows = Tables.lineitem(s, dir)
       .select(when(u % 100 < 70, u % 20).otherwise(u).as("skew_key"))
@@ -324,7 +323,6 @@ object ScaleOps {
     * SQL and takes the top k. */
   def weightedSample(s: SparkSession, dir: String, k: Int = 20): DataFrame = {
     import s.implicits._
-    graft.functions.TopKAgg.register(s)
     val docs = Tables.documents(s, dir).select($"doc_id",
       size(split(trim($"text"), "\\s+")).as("n_tokens"))
     val u = (conv(substring(md5($"doc_id".cast("string")), 1, 8), 16, 10)
@@ -366,7 +364,6 @@ object ScaleOps {
   def cmsFreq(s: SparkSession, dir: String, depth: Int = 4,
       width: Int = 2048): DataFrame = {
     import s.implicits._
-    graft.functions.CmsOps.register(s)
     val words = Tables.documentsSpread(s, dir)
       .select(explode(split(trim(lower($"text")), "\\s+")).as("word"))
     val keyed = words.select($"word", xxhash64($"word").as("k"))
@@ -585,9 +582,6 @@ object ScaleOps {
     * restated over the BASE table — the rewrite must be answer-invariant. */
   def mvRewrite(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    if (!s.experimental.extraOptimizations.contains(graft.plans.MvRewriteRule))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ graft.plans.MvRewriteRule
     val mvPath = s"${System.getProperty("java.io.tmpdir")}/graft_mv_" +
       java.lang.ProcessHandle.current().pid()
     // deregister BEFORE refreshing: with the view still registered, the
@@ -634,9 +628,6 @@ object ScaleOps {
     * base tables — rewrite must be answer-invariant. */
   def mvJoinRewrite(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    if (!s.experimental.extraOptimizations.contains(graft.plans.MvRewriteRule))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ graft.plans.MvRewriteRule
     val mvPath = s"${System.getProperty("java.io.tmpdir")}/graft_mvj_" +
       java.lang.ProcessHandle.current().pid()
     // deregister BEFORE refreshing (the refresh's own defining query must
@@ -689,9 +680,6 @@ object ScaleOps {
     import s.implicits._
     import graft.sources.ManifestTable
     import graft.plans.MvRewriteRule
-    if (!s.experimental.extraOptimizations.contains(MvRewriteRule))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ MvRewriteRule
     val root = s"${System.getProperty("java.io.tmpdir")}/graft_mvinc_" +
       java.lang.ProcessHandle.current().pid()
     val (tbl, mv0, mv1) = (s"$root/base", s"$root/mv/r0", s"$root/mv/r1")

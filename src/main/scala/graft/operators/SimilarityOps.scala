@@ -26,7 +26,6 @@ object SimilarityOps {
     * float boundaries. */
   def knnBruteForce(s: SparkSession, dir: String, k: Int = 5, nQueries: Int = 10): DataFrame = {
     import s.implicits._
-    VectorOps.register(s)
     val e = Tables.embeddings(s, dir)
     val q = e.filter($"vec_id" < nQueries)
       .select($"vec_id".as("query_id"), $"embedding".as("qv"))
@@ -54,7 +53,6 @@ object SimilarityOps {
   def matryoshkaRecall(s: SparkSession, dir: String, k: Int = 5,
       nQueries: Int = 10, subDims: Int = 16): DataFrame = {
     import s.implicits._
-    VectorOps.register(s)
     val e = Tables.embeddings(s, dir)
     val q = e.filter($"vec_id" < nQueries)
       .select($"vec_id".as("query_id"), $"embedding".as("qv"))
@@ -95,7 +93,6 @@ object SimilarityOps {
   def knnLsh(s: SparkSession, dir: String, k: Int = 5, nQueries: Int = 10,
       nPlanes: Int = 8, dims: Int = 64): DataFrame = {
     import s.implicits._
-    VectorOps.register(s)
 
     def signature(v: Column): Column =
       (0 until nPlanes).map { p =>
@@ -125,8 +122,6 @@ object SimilarityOps {
     * and fully sorts every scored row. Same answer as `knnBruteForce`. */
   def knnTopKAgg(s: SparkSession, dir: String, k: Int = 5, nQueries: Int = 10): DataFrame = {
     import s.implicits._
-    VectorOps.register(s)
-    graft.functions.TopKAgg.register(s)
     val e = Tables.embeddings(s, dir)
     val q = e.filter($"vec_id" < nQueries)
       .select($"vec_id".as("query_id"), $"embedding".as("qv"))
@@ -159,8 +154,6 @@ object SimilarityOps {
   def knnIvf(s: SparkSession, dir: String, k: Int = 5, nQueries: Int = 10,
       nCells: Int = 16, nProbe: Int = 10): DataFrame = Materialize.scoped { held =>
     import s.implicits._
-    VectorOps.register(s)
-    graft.functions.TopKAgg.register(s)
 
     // coarse quantizer trained driver-side on the knnIvfPq bounded sample
     // (≤4096 rows at any corpus size): the converged corpus-wide MLlib
@@ -229,8 +222,6 @@ object SimilarityOps {
       nQueries: Int = 10, nCells: Int = 16,
       nProbe: Int = 16): DataFrame = {
     import s.implicits._
-    VectorOps.register(s)
-    graft.functions.TopKAgg.register(s)
     val root = s"${System.getProperty("java.io.tmpdir")}/graft_vecidx_" +
       java.lang.ProcessHandle.current().pid()
     // BUILD: coarse quantizer trained driver-side on a DETERMINISTIC
@@ -324,8 +315,6 @@ object SimilarityOps {
       nProbe: Int = 16): DataFrame = {
     import s.implicits._
     import graft.sources.ManifestTable
-    VectorOps.register(s)
-    graft.functions.TopKAgg.register(s)
     val cells = s"${System.getProperty("java.io.tmpdir")}/graft_vecidxdml_" +
       java.lang.ProcessHandle.current().pid()
     ManifestTable.destroy(cells)
@@ -449,8 +438,6 @@ object SimilarityOps {
       m: Int = 8, subDim: Int = 8,
       codebookSize: Int = 16): DataFrame = Materialize.scoped { held =>
     import s.implicits._
-    VectorOps.register(s)
-    graft.functions.TopKAgg.register(s)
     val ev = held(Tables.embeddings(s, dir).select($"vec_id", $"embedding"))
 
     // one codebook per subspace, trained on a DETERMINISTIC BOUNDED SAMPLE
@@ -557,8 +544,6 @@ object SimilarityOps {
       nCells: Int = 16, nProbe: Int = 10, m: Int = 8, subDim: Int = 8,
       codebookSize: Int = 16): DataFrame = Materialize.scoped { held =>
     import s.implicits._
-    VectorOps.register(s)
-    graft.functions.TopKAgg.register(s)
     val ev = held(Tables.embeddings(s, dir).select($"vec_id", $"embedding"))
 
     // ONE bounded sample (the knnPq id-range recipe, ≤4096 rows at any
@@ -768,7 +753,6 @@ object SimilarityOps {
     // the verify step is then ONE row-local merge scan per candidate pair
     // (codegen'd `sorted_dot_product`) instead of fanning every pair out by
     // its term count through a shuffle join on the posting table
-    graft.functions.ArrayOps.register(s)
     val vecs = tf.groupBy($"doc_id")
       .agg(array_sort(collect_list(
         shiftleft(xxhash64($"term"), 16) + least($"tf", lit(65535L)))).as("vec"),
@@ -824,7 +808,6 @@ object SimilarityOps {
     * boundaries. */
   def hardNegatives(s: SparkSession, dir: String, k: Int = 5, nQueries: Int = 10): DataFrame = {
     import s.implicits._
-    VectorOps.register(s)
     val e = Tables.embeddings(s, dir)
     val q = e.filter($"vec_id" < nQueries)
       .select($"vec_id".as("query_id"), $"embedding".as("qv"), $"label".as("qlabel"))
@@ -848,7 +831,6 @@ object SimilarityOps {
     * needed. */
   def labelNoise(s: SparkSession, dir: String, k: Int = 10, nEval: Int = 50): DataFrame = {
     import s.implicits._
-    VectorOps.register(s)
     val e = Tables.embeddings(s, dir)
     val q = e.filter($"vec_id" < nEval)
       .select($"vec_id".as("query_id"), $"embedding".as("qv"), $"label".as("qlabel"))
@@ -875,7 +857,6 @@ object SimilarityOps {
     * label-equality predicate at the join, codegen cosine, map-side top-k. */
   def positivePairs(s: SparkSession, dir: String, k: Int = 5, nQueries: Int = 10): DataFrame = {
     import s.implicits._
-    VectorOps.register(s)
     val e = Tables.embeddings(s, dir)
     val q = e.filter($"vec_id" < nQueries)
       .select($"vec_id".as("query_id"), $"embedding".as("qv"), $"label".as("qlabel"))
@@ -908,7 +889,6 @@ object SimilarityOps {
       headN: Int = 100, topn: Int = 15): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import s.implicits._
-    VectorOps.register(s)
     val lexHead = CurationOps.bm25Search(s, dir)
       .orderBy($"bm25".desc, $"doc_id").limit(headN)
     val lex = lexHead.withColumn("lex_rank",
@@ -997,7 +977,6 @@ object SimilarityOps {
   def knnClassifierEval(s: SparkSession, dir: String, k: Int = 5,
       nEval: Int = 50): DataFrame = {
     import s.implicits._
-    VectorOps.register(s)
     val e = Tables.embeddings(s, dir)
     val q = e.filter($"vec_id" < nEval)
       .select($"vec_id".as("query_id"), $"embedding".as("qv"), $"label".as("qlabel"))

@@ -397,7 +397,6 @@ object TextAnalysis {
     * (`verdict = 'keep'` prunes before anything expensive runs). */
   def blocklistFilter(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.MultiMatch.register(s)
     Tables.documents(s, dir)
       .select($"doc_id",
         graft.functions.MultiMatch.multiPhraseMatches($"text", Blocklist).as("blocked"))
@@ -449,7 +448,6 @@ object TextAnalysis {
     * the smaller doc_id on both sides. */
   def topkQualityPerLang(s: SparkSession, dir: String, k: Int = 3): DataFrame = {
     import s.implicits._
-    graft.functions.TopKAgg.register(s)
     qualityScore(s, dir)
       .groupBy($"lang")
       .agg(graft.functions.TopKAgg.topKBy($"quality_score", $"doc_id", k).as("top"))

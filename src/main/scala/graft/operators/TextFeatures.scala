@@ -180,8 +180,6 @@ object TextFeatures {
   private def docKnnFrom(s: SparkSession, kept: DataFrame, k: Int,
       nQueries: Int): DataFrame = Materialize.scoped { held =>
     import s.implicits._
-    graft.functions.VectorOps.register(s)
-    graft.functions.TopKAgg.register(s)
     val e = held.fill(docEmbeddingsFrom(s, kept))
     val q = e.filter($"vec_id" < nQueries)
       .select($"vec_id".as("query_id"), $"embedding".as("qv"))

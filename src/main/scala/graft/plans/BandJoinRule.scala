@@ -24,9 +24,8 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   * Scope guards: inner joins only, no existing cross-side equality conjunct
   * (those already hash-partition fine), both bounds from one side and the
   * probe value from the other, everything implicitly castable to double.
-  * Activated via `graft.GraftExtensions` or
-  * `spark.experimental.extraOptimizations`; inert until the width conf is
-  * set positive.
+  * Injected by `graft.GraftExtensions`; inert until the width conf is set
+  * positive.
   */
 object BandJoinRule extends Rule[LogicalPlan] with PredicateHelper {
 

@@ -38,9 +38,8 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * correctness bug, so staleness falls back to the base plan (correct,
   * just slower). Registration REFUSES definitions that are not simple
   * aggregates (each output a grouping key or one aliased aggregate call):
-  * the simple shape is what makes rebinding sound. Activated via
-  * `graft.GraftExtensions` or `spark.experimental.extraOptimizations`;
-  * inert while the registry is empty.
+  * the simple shape is what makes rebinding sound. Injected by
+  * `graft.GraftExtensions`; inert while the registry is empty.
   */
 object MvRewriteRule extends Rule[LogicalPlan] {
 

@@ -1616,7 +1616,6 @@ object ManifestTable {
         case _ => false
       })
     if (bloomCols.isEmpty && ndvCols.isEmpty && summable.isEmpty) return lines
-    graft.functions.BloomOps.register(s)
     val names = lines.map(_.split('\t').head)
     def scaleOf(sc: String): Int = df.schema.fields.find(_.name == sc)
       .map(_.dataType).collect { case d: DecimalType => d.scale }.getOrElse(0)

@@ -76,4 +76,11 @@ class BandJoinRuleSpec extends AnyFunSuite {
         r.getAs[Double]("sum_price"))).toSet
     assert(auto == hand)
   }
+
+  test("q_band_join_auto is rewritten by the rule GraftExtensions injects") {
+    val fresh = spark.newSession() // no rule added to extraOptimizations
+    val plan = operators.RangeOps.bandJoinAuto(fresh, sf).queryExecution.executedPlan.toString
+    assert(plan.contains("__graft_bkt") && !plan.contains("BroadcastNestedLoopJoin"),
+      s"band join not rewritten:\n$plan")
+  }
 }

@@ -6,9 +6,25 @@ import org.scalatest.funsuite.AnyFunSuite
 class ExtensionsSpec extends AnyFunSuite {
   import TestSpark._
 
+  test("a new session has all 12 graft functions without any registration call") {
+    val fresh = spark.newSession()
+    val names = Seq("cosine_sim", "sorted_intersect_count", "sorted_dot_product",
+      "bloom_build", "bloom_contains", "cms_build", "cms_query", "explode_shingles",
+      "levenshtein_within", "freq_items_mg", "multi_phrase_matches", "top_k_by")
+    assert(GraftExtensions.sqlFunctions.map(_._1).sorted == names.sorted)
+    val missing = names.filterNot(n => fresh.sessionState.functionRegistry
+      .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(n)))
+    assert(missing.isEmpty, s"not in a new session: ${missing.mkString(", ")}")
+    val topK = fresh.sql(
+      "SELECT top_k_by(score, id, 2) FROM VALUES (0.5D, 7L) AS t(score, id)").collect()
+    assert(topK.head.getSeq[org.apache.spark.sql.Row](0).map(_.getLong(1)) == Seq(7L))
+    val cms = fresh.sql(
+      "SELECT cms_build(k, 4, 64) FROM VALUES (7L) AS t(k)").collect()
+    assert(cms.head.getAs[Array[Byte]](0).nonEmpty)
+  }
+
   test("cosine_sim expression: known values, zero-norm safety") {
     import spark.implicits._
-    functions.VectorOps.register(spark)
     val df = Seq(
       (Array(1.0f, 0f, 0f), Array(1.0f, 0f, 0f), 1.0),
       (Array(1.0f, 0f, 0f), Array(0f, 1.0f, 0f), 0.0),
@@ -26,7 +42,6 @@ class ExtensionsSpec extends AnyFunSuite {
 
   test("sorted_intersect_count: merge scan matches array_intersect") {
     import spark.implicits._
-    functions.ArrayOps.register(spark)
     val df = Seq(
       (Seq(1L, 3L, 5L, 7L), Seq(3L, 4L, 5L, 9L)),
       (Seq.empty[Long], Seq(1L, 2L)),
@@ -45,7 +60,6 @@ class ExtensionsSpec extends AnyFunSuite {
       .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // brute force without lang blocking = ground truth
     import spark.implicits._
-    functions.ArrayOps.register(spark)
     val bf = operators.DedupOps.ngramJaccard(spark, sf)
       .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // every lang-blocked true pair must be found by LSH (high-recall config)
@@ -160,7 +174,6 @@ class ExtensionsSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getDouble(1)))
       .sortBy { case (id, sc) => (-sc, id) }.take(100)
       .zipWithIndex.map { case ((id, _), i) => id -> (i + 1) }.toMap
-    functions.VectorOps.register(spark)
     val semRank = Tables.embeddings(spark, sf)
       .filter($"vec_id" =!= 0)
       .join(broadcast(Tables.embeddings(spark, sf).filter($"vec_id" === 0)
@@ -192,7 +205,6 @@ class ExtensionsSpec extends AnyFunSuite {
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("cand_id"))).toSet
     // truncated ranking recomputed explicitly: score rows via the same
     // codegen cosine (its own correctness is property-tested), rank LOCALLY
-    functions.VectorOps.register(spark)
     val e = Tables.embeddings(spark, sf)
     val scored = e.select($"vec_id".as("cand_id"), $"embedding".as("cv"))
       .join(broadcast(e.filter($"vec_id" < 10)

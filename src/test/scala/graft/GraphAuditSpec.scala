@@ -85,7 +85,6 @@ class GraphAuditSpec extends AnyFunSuite {
 
   test("bloom sketch: no false negatives, low fp rate, merge = union") {
     import spark.implicits._
-    functions.BloomOps.register(spark)
     val keys = (0L until 2000L).map(_ * 7919L)
     val sketch = keys.toDF("h").repartition(8) // force map-side partials + merge
       .agg(functions.BloomOps.bloomBuild($"h", 1 << 16, 5).as("b"))

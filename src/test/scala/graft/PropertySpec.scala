@@ -19,7 +19,6 @@ class PropertySpec extends AnyFunSuite {
   import TestSpark._
 
   test("sorted_intersect_count equals set intersection for arbitrary long sets") {
-    functions.ArrayOps.register(spark)
     import spark.implicits._
     val gen = for {
       a <- Gen.listOf(Gen.chooseNum(-1000L, 1000L))
@@ -69,7 +68,6 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("sorted_dot_product equals brute-force dot over packed term vectors") {
-    functions.ArrayOps.register(spark)
     import spark.implicits._
     // (hash, tf) maps with small hash space to force real overlaps
     val entryGen = Gen.mapOf(Gen.zip(
@@ -87,7 +85,6 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("levenshtein_within ≡ builtin thresholded levenshtein incl. non-ASCII") {
-    functions.EditDistance.register(spark)
     import spark.implicits._
     // mix single-byte, 2-byte (é), 3-byte (中) and 4-byte (𝕏, supplementary)
     // code points: the band must count code points like the builtin, not
@@ -108,7 +105,6 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("explode_shingles generator ≡ the declarative shingle+hash pipeline") {
-    functions.ShingleGen.register(spark)
     import spark.implicits._
     // include non-space whitespace INSIDE and AT THE EDGES of documents:
     // SQL trim strips only ' ', so a tab/newline-led doc keeps an empty edge
@@ -226,7 +222,6 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("cosine_sim matches a reference double implementation") {
-    functions.VectorOps.register(spark)
     import spark.implicits._
     val vecGen = Gen.listOfN(8, Gen.chooseNum(-100f, 100f))
     check(forAll(vecGen, vecGen) { (a, b) =>

@@ -36,6 +36,12 @@ class QueriesSpec extends AnyFunSuite {
       // every cache a query takes is released by the time its result is read
       assert(spark.sharedState.cacheManager.isEmpty, s"$name leaves cached data behind")
     }
+    // no query adds to the session's functions: graft's come from the
+    // extensions, so the shared session still lists what a new one does
+    def functionNames(s: SparkSession) = s.sessionState.functionRegistry.listFunction().toSet
+    val (shared, fresh) = (functionNames(spark), functionNames(spark.newSession()))
+    assert((shared -- fresh, fresh -- shared) == (Set.empty, Set.empty),
+      "(functions added, functions removed)")
   }
 
   test("every oracleSql key has a matching queries entry") {

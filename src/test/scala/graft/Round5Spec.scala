@@ -57,7 +57,6 @@ class Round5Spec extends AnyFunSuite {
 
   test("cms merge is exact for disjoint partitions: estimate of a unique key") {
     import spark.implicits._
-    functions.CmsOps.register(spark)
     // 1000 distinct keys spread over 8 partitions: every estimate must be
     // >= 1 (its own count) and the sketch must see all increments (sum of
     // any row of cells == n rows) — catches lost partials in merge

@@ -82,28 +82,14 @@ class ScaleSpec extends AnyFunSuite {
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    // note: getOrCreate may return the existing session where extensions
-    // were not applied; guard by registering the check on a new session only
+    // getOrCreate may return the shared test session instead; that one is
+    // built with the extensions too, and a new session of either keeps the
+    // injected functions without any registration call
     val fresh = s2.newSession()
-    functions.VectorOps // touch
-    val ok = try {
-      spark.sparkContext // keep main session alive
-      val r = fresh.sql(
-        "SELECT cosine_sim(array(CAST(1.0 AS FLOAT)), array(CAST(1.0 AS FLOAT)))")
-        .collect()(0).getDouble(0)
-      math.abs(r - 1.0) < 1e-12
-    } catch {
-      case _: org.apache.spark.sql.AnalysisException =>
-        // extensions only apply to sessions created with the conf at build
-        // time; if the shared test session won, register imperatively and
-        // verify the expression itself still resolves
-        functions.VectorOps.register(fresh)
-        val r = fresh.sql(
-          "SELECT cosine_sim(array(CAST(1.0 AS FLOAT)), array(CAST(1.0 AS FLOAT)))")
-          .collect()(0).getDouble(0)
-        math.abs(r - 1.0) < 1e-12
-    }
-    assert(ok)
+    val r = fresh.sql(
+      "SELECT cosine_sim(array(CAST(1.0 AS FLOAT)), array(CAST(1.0 AS FLOAT)))")
+      .collect()(0).getDouble(0)
+    assert(math.abs(r - 1.0) < 1e-12)
   }
 
   test("extensions expose BOTH sides of the Bloom pair + levenshtein_within") {
@@ -116,30 +102,19 @@ class ScaleSpec extends AnyFunSuite {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     val fresh = s2.newSession()
-    def run(): Boolean = {
-      fresh.range(100).createOrReplaceTempView("ids")
-      val hit = fresh.sql(
-        """WITH sk AS (SELECT bloom_build(id, 4096, 3) AS s FROM ids)
-          |SELECT bloom_contains(s, CAST(42 AS BIGINT)),
-          |       bloom_contains(s, CAST(987654321 AS BIGINT))
-          |FROM sk""".stripMargin).collect()(0)
-      val lev = fresh.sql(
-        "SELECT levenshtein_within('kitten', 'sitting', 3)").collect()(0).getInt(0)
-      hit.getBoolean(0) && lev == 3
-    }
-    val ok = try run() catch {
-      case _: org.apache.spark.sql.AnalysisException =>
-        // shared-session fallback, as above: verify the builders themselves
-        functions.BloomOps.register(fresh)
-        functions.EditDistance.register(fresh)
-        run()
-    }
-    assert(ok)
+    fresh.range(100).createOrReplaceTempView("ids")
+    val hit = fresh.sql(
+      """WITH sk AS (SELECT bloom_build(id, 4096, 3) AS s FROM ids)
+        |SELECT bloom_contains(s, CAST(42 AS BIGINT)),
+        |       bloom_contains(s, CAST(987654321 AS BIGINT))
+        |FROM sk""".stripMargin).collect()(0)
+    val lev = fresh.sql(
+      "SELECT levenshtein_within('kitten', 'sitting', 3)").collect()(0).getInt(0)
+    assert(hit.getBoolean(0) && lev == 3)
   }
 
   test("misra-gries: candidates cover every frequent key on zipf-ish streams") {
     import spark.implicits._
-    functions.FreqItemsAgg.register(spark)
     val rnd = new scala.util.Random(42)
     // zipf-ish: frequent heads + a long unique tail, shuffled
     val stream = rnd.shuffle(

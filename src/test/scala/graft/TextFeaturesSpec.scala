@@ -55,7 +55,6 @@ class TextFeaturesSpec extends AnyFunSuite {
 
   test("triangular blocked near-dup join equals the unblocked all-pairs truth") {
     import spark.implicits._
-    graft.functions.ArrayOps.register(spark)
     // unblocked reference: plain lang self-join, same shingle/jaccard pipeline
     val docs = Tables.documents(spark, sf)
       .filter(size(split(trim($"text"), "\\s+")) >= 3)
