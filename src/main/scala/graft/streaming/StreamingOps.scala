@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming surface (SURVEY.md §2.8 / §7 Phase 4).
@@ -36,18 +36,6 @@ object StreamingOps {
         .parquet(s"$dir/[e]vents.parquet"))
   }
 
-  /** Drain a streaming query through `foreachBatch` to parquet and return a
-    * reader over the result. Unlike a complete-mode memory sink (which pulls
-    * every window into driver memory — a driver bottleneck at scale), the
-    * micro-batch result is written as a distributed parquet job; state stays
-    * in executor state stores.
-    *
-    * `mode` = "complete" (stateful aggs: overwrite per trigger, last trigger
-    * wins) or "append" (joins: batches accumulate). Shuffle partitions are
-    * dropped to 8 for the stream's lifetime: each shuffle partition is a
-    * state-store instance to load+commit per micro-batch, and these results
-    * are ≤ a few thousand rows — 32 instances is pure overhead.
-    */
   /** Delete scratch dirs from finished runs (>1 h old) so repeated
     * Verify/Bench invocations don't slowly fill /dev/shm. */
   private[streaming] def sweepScratch(root: java.io.File): Unit = {
@@ -85,6 +73,31 @@ object StreamingOps {
     else f.length()
   }
 
+  /** Run one `Trigger.AvailableNow` catch-up to its end: await the query
+    * `start` returns, then release its state stores whether it ended or
+    * failed ([[org.apache.spark.sql.graft.StateRelease]]). The stores stay
+    * warm across the catch-up's batches and leave the heap when it ends;
+    * the checkpoint keeps every committed version, so a restart from it
+    * reloads the same state. Every streaming query in graft ends here. */
+  private[graft] def catchUp(start: => StreamingQuery): StreamingQuery = {
+    val q = start
+    try q.awaitTermination()
+    finally org.apache.spark.sql.graft.StateRelease(q)
+    q
+  }
+
+  /** Drain a streaming query through `foreachBatch` to parquet and return a
+    * reader over the result. Unlike a complete-mode memory sink (which pulls
+    * every window into driver memory — a driver bottleneck at scale), the
+    * micro-batch result is written as a distributed parquet job; state stays
+    * in executor state stores.
+    *
+    * `mode` = "complete" (stateful aggs: overwrite per trigger, last trigger
+    * wins) or "append" (joins: batches accumulate). Shuffle partitions are
+    * dropped to 8 for the stream's lifetime: each shuffle partition is a
+    * state-store instance to load+commit per micro-batch, and these results
+    * are ≤ a few thousand rows — 32 instances is pure overhead.
+    */
   private[graft] def runToParquet(s: SparkSession, df: DataFrame, prefix: String,
       mode: String = "complete", stateWidth: Int = 8): DataFrame = {
     sweepScratch(new java.io.File("/dev/shm/graft_stream"))
@@ -109,13 +122,11 @@ object StreamingOps {
     // width follows the input size up to the machine width.
     val oldSp = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", stateWidth.toString)
-    try {
-      val q = df.writeStream.outputMode(mode)
-        .foreachBatch(writeBatch)
-        .option("checkpointLocation", base + "/ckpt")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", oldSp)
+    try catchUp(df.writeStream.outputMode(mode)
+      .foreachBatch(writeBatch)
+      .option("checkpointLocation", base + "/ckpt")
+      .trigger(Trigger.AvailableNow()).start())
+    finally s.conf.set("spark.sql.shuffle.partitions", oldSp)
     s.read.parquet(out)
   }
 
@@ -316,11 +327,10 @@ object StreamingOps {
       fresh.write.mode("append").parquet(target)
     }
     def replay(tag: String): Unit = {
-      val q = eventsStream(s, dir).writeStream.outputMode("append")
+      catchUp(eventsStream(s, dir).writeStream.outputMode("append")
         .foreachBatch(mergeBatch)
         .option("checkpointLocation", s"$base/ckpt_$tag")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+        .trigger(Trigger.AvailableNow()).start())
     }
     replay("first")
     replay("second") // same data, new checkpoint: must merge to a no-op
@@ -352,11 +362,10 @@ object StreamingOps {
       graft.sources.ManifestTable.merge(
         batch.sparkSession, tbl, batch, Seq("event_id"))
     def replay(tag: String): Unit = {
-      val q = eventsStream(s, dir).writeStream.outputMode("append")
+      catchUp(eventsStream(s, dir).writeStream.outputMode("append")
         .foreachBatch(sink)
         .option("checkpointLocation", s"$tbl-ckpt-$tag")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+        .trigger(Trigger.AvailableNow()).start())
     }
     replay("first")
     replay("second") // re-delivery of everything: all commits must no-op
@@ -394,11 +403,10 @@ object StreamingOps {
       classOf[graft.sources.GraftCatalog].getName)
     s.conf.set("spark.sql.catalog.graft_st.root", root)
     def run(): Unit = {
-      val q = eventsStream(s, dir).writeStream.outputMode("append")
+      catchUp(eventsStream(s, dir).writeStream.outputMode("append")
         .option("checkpointLocation", s"$root-ckpt")
         .trigger(Trigger.AvailableNow())
-        .toTable("graft_st.default.sink")
-      q.awaitTermination()
+        .toTable("graft_st.default.sink"))
     }
     run()
     run() // same-checkpoint restart: offsets recorded, nothing re-appends
@@ -470,11 +478,10 @@ object StreamingOps {
         .option("path", bronze).option("versionsPerBatch", "1").load()
         .filter(col("event_type") =!= "error") // the cleaning contract
         .select($"event_id", $"event_type", $"value")
-      val q = cleaned.writeStream.outputMode("append")
+      catchUp(cleaned.writeStream.outputMode("append")
         .foreachBatch(toSilver)
         .option("checkpointLocation", s"$base/ckpt_$tag")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+        .trigger(Trigger.AvailableNow()).start())
     }
     replay("first")
     replay("second") // full re-read of the bronze log: silver must not change
@@ -639,11 +646,10 @@ object StreamingOps {
       ()
     }
     def run(tag: String): Unit = {
-      val q = corrections.writeStream.outputMode("append")
+      catchUp(corrections.writeStream.outputMode("append")
         .foreachBatch(sink)
         .option("checkpointLocation", s"$tbl-ckpt-$tag")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+        .trigger(Trigger.AvailableNow()).start())
     }
     run("first")
     run("second") // full redelivery under a fresh checkpoint: epochs no-op
@@ -693,11 +699,10 @@ object StreamingOps {
       .filter($"event_type" === "click")
       .withColumn("value", $"value" + 1000.0)
     def run(tag: String): Unit = {
-      val q = corrections.writeStream.outputMode("append")
+      catchUp(corrections.writeStream.outputMode("append")
         .option("checkpointLocation", s"$root-ckpt-$tag")
         .trigger(Trigger.AvailableNow())
-        .toTable("graft_stu.default.sink")
-      q.awaitTermination()
+        .toTable("graft_stu.default.sink"))
     }
     run("first")
     val vFirst = ManifestTable.currentVersion(tbl)

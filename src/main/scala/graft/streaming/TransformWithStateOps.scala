@@ -66,36 +66,9 @@ object TransformWithStateOps {
         TimeMode.None(), OutputMode.Update(), Encoders.product[UserTotal])
       .toDF()
 
-    StreamingOps.sweepScratch(new java.io.File("/dev/shm/graft_stream"))
-    val base = "/dev/shm/graft_stream/graft_tws_" +
-      java.util.UUID.randomUUID().toString.substring(0, 8)
-    val out = base + "/out"
-    val oldSp = s.conf.get("spark.sql.shuffle.partitions")
-    // transformWithState needs per-family state layout → RocksDB provider
-    // (the HDFS-backed default rejects multiple column families); this is
-    // also the provider a production deployment runs for state > heap
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val oldProvider = s.conf.getOption(providerKey)
-    s.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = updates.writeStream.outputMode("update")
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          // no coalesce(1): it would run every RocksDB state partition
-          // serially inside one write task (see StreamingOps.runToParquet)
-          batch.withColumn("batch_id", lit(id))
-            .write.mode("append").parquet(out)
-        }
-        .option("checkpointLocation", base + "/ckpt")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", oldSp)
-      oldProvider match {
-        case Some(p) => s.conf.set(providerKey, p)
-        case None => s.conf.unset(providerKey)
-      }
+    val out = catchUpOnRocksDb(updates, "graft_tws", "update") { out =>
+      (batch, id) => batch.withColumn("batch_id", lit(id))
+        .write.mode("append").parquet(out)
     }
 
     // last emission per user wins — batch-chunking-independent
@@ -191,8 +164,23 @@ object TransformWithStateOps {
         TimeMode.None(), OutputMode.Append(), Encoders.product[PitOut])
       .toDF()
 
+    s.read.parquet(catchUpOnRocksDb(enriched, "graft_pit", "append") { out =>
+      (batch, _) => batch.write.mode("append").parquet(out)
+    })
+  }
+
+  /** Catch `df` up into a fresh scratch directory through `writeBatch(out)`
+    * and return `out`. transformWithState needs per-family state layout, so
+    * the stream starts on the RocksDB provider (the HDFS-backed default
+    * rejects multiple column families; it is also the provider a production
+    * deployment runs for state > heap) at 8 state partitions. No
+    * coalesce(1) in a writer: it would run every state partition serially
+    * inside one write task (see StreamingOps.runToParquet). */
+  private def catchUpOnRocksDb(df: DataFrame, prefix: String, mode: String)(
+      writeBatch: String => (DataFrame, Long) => Unit): String = {
+    val s = df.sparkSession
     StreamingOps.sweepScratch(new java.io.File("/dev/shm/graft_stream"))
-    val base = "/dev/shm/graft_stream/graft_pit_" +
+    val base = s"/dev/shm/graft_stream/${prefix}_" +
       java.util.UUID.randomUUID().toString.substring(0, 8)
     val out = base + "/out"
     val oldSp = s.conf.get("spark.sql.shuffle.partitions")
@@ -201,24 +189,18 @@ object TransformWithStateOps {
     s.conf.set(providerKey,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = enriched.writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // no coalesce(1): it would serialize the stateful partitions
-          // into one task (see StreamingOps.runToParquet)
-          batch.write.mode("append").parquet(out)
-        }
-        .option("checkpointLocation", base + "/ckpt")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    } finally {
+    try StreamingOps.catchUp(df.writeStream.outputMode(mode)
+      .foreachBatch(writeBatch(out))
+      .option("checkpointLocation", base + "/ckpt")
+      .trigger(Trigger.AvailableNow()).start())
+    finally {
       s.conf.set("spark.sql.shuffle.partitions", oldSp)
       oldProvider match {
         case Some(p) => s.conf.set(providerKey, p)
         case None => s.conf.unset(providerKey)
       }
     }
-    s.read.parquet(out)
+    out
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -22,9 +22,6 @@ class BandJoinRuleSpec extends AnyFunSuite {
   }
 
   private def withRule[A](f: => A): A = {
-    if (!spark.experimental.extraOptimizations.contains(plans.BandJoinRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ plans.BandJoinRule
     spark.conf.set(plans.BandJoinRule.WidthConf, "5.0")
     try f finally spark.conf.set(plans.BandJoinRule.WidthConf, "0")
   }

@@ -278,9 +278,6 @@ class PropertySpec extends AnyFunSuite {
 
   test("band-join rewrite equals the nested-loop join for random values and bands") {
     import spark.implicits._
-    if (!spark.experimental.extraOptimizations.contains(plans.BandJoinRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ plans.BandJoinRule
     val gen = for {
       xs <- Gen.nonEmptyListOf(Gen.chooseNum(-500.0, 500.0))
       nBands <- Gen.chooseNum(1, 8)

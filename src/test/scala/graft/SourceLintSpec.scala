@@ -5,9 +5,11 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source lint over `src/main/scala`: caches are taken and released only
-  * through `Materialize`, sessions are built only by `LocalSession`, and
+  * through `Materialize`, sessions are built only by `LocalSession`,
   * graft's functions and rules reach a session only through
-  * `GraftExtensions`. */
+  * `GraftExtensions`, and every streaming query ends in
+  * `StreamingOps.catchUp`, which alone touches Spark's state stores through
+  * the access-package bridge. */
 class SourceLintSpec extends AnyFunSuite {
 
   /** `file:line: text` of every line matching `pattern` outside `owner`
@@ -38,6 +40,23 @@ class SourceLintSpec extends AnyFunSuite {
 
   test("no temp functions and no extra optimizer rules: GraftExtensions injects them") {
     val bad = offenders("""createOrReplaceTempFunction|experimental\.extraOptimizations""")
+    assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
+  test("awaitTermination( appears only inside StreamingOps.catchUp") {
+    val ops = Paths.get("src/main/scala/graft/streaming/StreamingOps.scala")
+    val lines = Files.readAllLines(ops).asScala
+    val from = lines.indexWhere(_.contains("def catchUp(")) + 1
+    val until = lines.indexWhere(_.trim.matches("""(private\S* )?def .*"""), from) + 1
+    assert(from > 0 && until > from, s"no catchUp in $ops")
+    val bad = offenders("""awaitTermination\(""").filterNot { hit =>
+      hit.startsWith(s"$ops:") && (from until until).contains(hit.split(":")(1).toInt)
+    }
+    assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
+  test("StateStore. appears only in the access-package bridge") {
+    val bad = offenders("""StateStore\.""", "SparkBridge.scala")
     assert(bad.isEmpty, bad.mkString("\n"))
   }
 }
